@@ -549,17 +549,17 @@ object BucketedSnapshots {
     // ONE staged partitioned write of (key, b) into a PER-WRITER staging
     // dir — the touched-bucket set falls out of the staging listing, so
     // the keys DAG runs exactly once (it used to run once for a
-    // bucket-discovery collect and again for this write); buckets with no
-    // manifest entry (keys that can't exist) stage inertly and are swept
-    // with the staging dir
+    // bucket-discovery collect and again for this write); keys of buckets
+    // with no manifest entry can't exist and are filtered before the write
     val staging = new Path(
       path + "__vstaging_dv_" + java.util.UUID.randomUUID().toString.take(12))
     kdf.withColumn("b", bucketOf)
+      .filter(col("b").isin(curManifest.keys.toSeq.map(Int.box): _*))
       .repartition(col("b"))
       .write.partitionBy("b").mode(SaveMode.Overwrite).parquet(staging.toString)
     val stagedDirs = stagedBucketDirs(fs, staging)
     // buckets that exist AND are named by a key (driver-small)
-    val touched = stagedDirs.keys.toIndexedSeq.sorted.filter(curManifest.contains)
+    val touched = stagedDirs.keys.toIndexedSeq.sorted
     if (touched.isEmpty) { fs.delete(staging, true); return cur }
     val foldSet = touched.filter(b =>
       curDvs.getOrElse(b, Nil).size + 1 > maxDvsPerBucket).toSet

@@ -253,7 +253,7 @@ object SuffixDedup {
     rounds += 0L -> rank // h=1 ranks under key "first 1 token" (power index by shift h)
     var h = 1L
     // initial distinct-rank count is KNOWN (token ranks are dense
-    // 0..nTokRanks-1, sentinel ranks nTokRanks+doc_id all unique) — no
+    // 0..nTokRanks-1, sentinel ranks nTokRanks+di all unique) — no
     // distinct pass; per round it falls out of the edge summaries
     var distinctRanks = nTokRanks + nDocs
     val parts = math.max(1, spark.sparkContext.defaultParallelism)

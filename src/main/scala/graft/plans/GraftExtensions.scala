@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.functions.expressions.{BlockHash64, DecodeStats, DotProduct, HyperplaneBuckets, ImageDims, NfcNormalize, NormalizeVec, QuantizeInt8, SimHashWords, WavMeta}
+import org.apache.spark.{SparkConf, SparkEnv}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -11,7 +12,8 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType}
   * `graft_quantize_int8`, `graft_simhash`, `graft_hyperplane_buckets`) so
   * they work from `spark.sql(...)` anywhere the Column API does, and
   * injects [[RewriteDeclarativeDot]] so plain-Spark HOF dot folds get the
-  * native loop automatically.
+  * native loop automatically. It also sizes Spark's generated-code cache
+  * to graft's plan working set ([[GraftExtensions.codegenDefaults]]).
   *
   * Activate with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
@@ -35,6 +37,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // extensions are applied after the SparkContext exists and before the
+    // session state copies its conf, so defaults set here reach the session
+    GraftExtensions.codegenDefaults(SparkEnv.get.conf)
     // plain-Spark HOF dot folds rewrite to the codegen'd native loop
     ext.injectOptimizerRule(_ => RewriteDeclarativeDot)
     // whole-operator as-of join: AsOfMergeJoinNode -> AsOfMergeJoinExec
@@ -88,4 +93,31 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         intLit(args(1), "bands"), intLit(args(2), "planesPerBand"))
     })
   }
+}
+
+object GraftExtensions {
+
+  /** Capacity of Spark's JVM-global generated-code cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark default 100, LRU).
+    * One daily run (page serving, stage, analytics, the 10 views and
+    * assembly, DQ gate, publish, sink) generates ≈ 440-470 distinct
+    * classes: that many compiles in a cold run with no eviction. At 100
+    * entries every warm rerun evicted and recompiled ≈ 480 of them.
+    * 1000 holds that working set about twice over, so the LLM-data
+    * operators run in the same JVM do not push it out.
+    */
+  val CodegenCacheEntries = 1000
+
+  /** Sets graft's codegen defaults on `conf` where the user left them
+    * unset, and returns it:
+    *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]];
+    *  - `spark.sql.codegen.useIdInClassName` = false, so identical
+    *    pipelines share one class across codegen stage ids and AQE
+    *    re-plans instead of caching one copy per id.
+    * The cache is sized when the JVM first generates code; a session built
+    * after that keeps the size already in place.
+    */
+  def codegenDefaults(conf: SparkConf): SparkConf =
+    conf.setIfMissing("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .setIfMissing("spark.sql.codegen.useIdInClassName", "false")
 }

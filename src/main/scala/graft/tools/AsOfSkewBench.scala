@@ -48,6 +48,10 @@ object AsOfSkewBench {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.catalog.graft", "graft.sources.SnapCatalog")
+      .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+      .config("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
       .config("spark.sql.warehouse.dir", "target/warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
