@@ -3,7 +3,7 @@ package graft
 import graft.functions.Text
 import graft.operators.{Dedup, Similarity}
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SCALE-EXPONENT probe: measures how the riskiest operators actually
@@ -86,20 +86,7 @@ object ScaleBench {
       .split(",").map(_.trim.toInt).toSeq.distinct.sorted
     require(ks.size >= 2, s"SPARK_GRAFT_SCALE_KS needs >= 2 distinct points to fit an exponent, got $ks")
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.catalog.graft", "graft.sources.SnapCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-      .config("spark.sql.warehouse.dir", "target/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val docs0 = Tables.documents(spark, sfDir).select("doc_id", "text")

@@ -130,8 +130,8 @@ object BucketedSnapshots {
 
   /** The manifest text: metadata headers (`#nBuckets=` arity,
     * `#bucketKey=` hash column, `#schema=` recorded table schema as a
-    * single-line StructType JSON) + one `b,bv[,dv1;dv2]` line per bucket
-    * (shared by main and branch commits).
+    * single-line StructType JSON) + one `b,bv[,dv1;dv2]` line per bucket,
+    * written for main and branch commits alike by [[commitManifest]].
     */
   private def manifestBody(
       arity: Option[Int], bucketKey: Option[String],
@@ -675,13 +675,14 @@ object BucketedSnapshots {
       case None => throw new java.io.FileNotFoundException(s"no branch '$name' at $path")
     }
 
-  /** Last-writer-wins keyed upsert COMMITTED TO A BRANCH: stages new
-    * bucket dirs and a manifest exactly like [[upsertByKey]], but the
-    * commit point moves the branch file, NOT `_CURRENT` — main readers
-    * never see it. Manifest version numbers share the table's namespace
-    * (claimed create-exclusively), so branch and main commits never
-    * collide on a version id. One writer per branch (a moved head aborts
-    * with [[CommitConflictException]]); main may advance freely — that
+  /** Last-writer-wins keyed upsert COMMITTED TO A BRANCH: [[upsertByKey]]'s
+    * commit with the branch head as its base — same staged bucket dirs,
+    * manifest, stats and bloom sidecars — but the commit point moves the
+    * branch file, NOT `_CURRENT`, so main readers never see it. Manifest
+    * version numbers share the table's namespace (claimed
+    * create-exclusively), so branch and main commits never collide on a
+    * version id. One writer per branch (a moved head aborts with
+    * [[CommitConflictException]]); main may advance freely — that
     * conflict surfaces at [[publishBranch]], not here.
     */
   def commitToBranch(
@@ -692,9 +693,9 @@ object BucketedSnapshots {
       key: String,
       nBuckets: Int,
       statsColumns: Seq[String] = Nil): Long =
-    commitToBranchWith(spark, path, name, updates, key, nBuckets,
+    mergeCommit(spark, updates, path, key, nBuckets, 1,
       (existing, batch) => Incremental.mergeByKey(existing, batch, key),
-      statsColumns)
+      statsColumns, branch = Some(name))
 
   /** Delete-aware CDC apply COMMITTED TO A BRANCH — the WAP shape most
     * production loads need (daily change feeds, not LWW upserts): stage
@@ -712,10 +713,10 @@ object BucketedSnapshots {
       seqCol: String = "seq",
       opCol: String = "op",
       statsColumns: Seq[String] = Nil): Long =
-    commitToBranchWith(spark, path, name,
-      Cdc.reduceBatch(changes, key, seqCol, opCol), key, nBuckets,
+    mergeCommit(spark, Cdc.reduceBatch(changes, key, seqCol, opCol),
+      path, key, nBuckets, 1,
       (existing, batch) => Cdc.mergeSnapshots(existing, batch, key),
-      statsColumns)
+      statsColumns, branch = Some(name))
 
   /** Tombstone-filtered live view of a branch head on an
     * [[applyChanges]]-maintained table — the frame the quality gate
@@ -724,108 +725,6 @@ object BucketedSnapshots {
   def readTableBranch(spark: SparkSession, path: String, name: String): DataFrame =
     readBranch(spark, path, name).filter(!col(Cdc.DeletedMeta))
       .drop(Cdc.SeqMeta, Cdc.DeletedMeta, Cdc.RankMeta)
-
-  private def commitToBranchWith(
-      spark: SparkSession,
-      path: String,
-      name: String,
-      updates: DataFrame,
-      key: String,
-      nBuckets: Int,
-      merge: (DataFrame, DataFrame) => DataFrame,
-      statsColumns: Seq[String]): Long = {
-    import org.apache.hadoop.fs.Path
-    require(!updates.columns.contains("b"),
-      "column name 'b' is reserved for the bucket layout — rename the payload column")
-    val fs = fsOf(spark, path)
-    val (head, base) = branchState(spark, path, name).getOrElse(
-      throw new java.io.FileNotFoundException(s"no branch '$name' at $path"))
-    readNBuckets(spark, path, head).foreach { n =>
-      require(n == nBuckets,
-        s"table at $path was committed with nBuckets=$n; committing with " +
-          s"nBuckets=$nBuckets would scatter keys across mismatched buckets")
-    }
-    val bucketOf = pmod(xxhash64(col(key)), lit(nBuckets.toLong)).cast("int")
-    val headManifest = readManifest(spark, path, head)
-    val headDvs = readDvs(spark, path, head)
-    val touched = updates.select(bucketOf.as("b")).distinct()
-      .collect().map(_.getInt(0)).sorted.toIndexedSeq
-    if (touched.isEmpty) return head
-    val existingDirs = touched.flatMap(b =>
-      headManifest.get(b).map(bv => b -> s"$path/b=$b/v=$bv"))
-    val merged =
-      if (existingDirs.isEmpty) updates
-      else merge(
-        mergeExistingSide(spark, path, head, key, nBuckets, touched,
-          existingDirs, headDvs),
-        updates)
-    val staging = new Path(
-      path + "__vstaging_branch_" + java.util.UUID.randomUUID().toString.take(12))
-    merged.withColumn("b", bucketOf)
-      .write.partitionBy("b").mode(SaveMode.Overwrite).parquet(staging.toString)
-    val statCols = effectiveStatCols(
-      readStats(spark, path, head)._1, statsColumns, merged.schema)
-    val newStats = computeBucketStats(spark, staging.toString, statCols, touched)
-    val newBucketVersions = touched.map { b =>
-      val src = new Path(staging, s"b=$b")
-      if (!fs.exists(src))
-        merged.limit(0).write.mode(SaveMode.Overwrite).parquet(src.toString)
-      b -> claimBucketDir(spark, path, b, src, "v")
-    }.toMap
-    fs.delete(staging, true)
-    // manifest for the branch head: same claimed-version namespace as main
-    val nextManifest = headManifest ++ newBucketVersions
-    val nextDvs = headDvs.filter { case (b, _) => !newBucketVersions.contains(b) }
-    val arity = if (nBuckets > 0) Some(nBuckets) else readNBuckets(spark, path, head)
-    // same header maintenance as main commits, against the BRANCH head
-    val prevKey = readBucketKey(spark, path, head)
-    prevKey.foreach { pk =>
-      require(key == pk,
-        s"table at $path is bucketed on '$pk'; committing keyed on '$key' " +
-          "would scatter keys across mismatched buckets")
-    }
-    val schemaHdr = readTableSchema(spark, path, head) match {
-      case Some(p) => Some(org.apache.spark.sql.graftnative.SchemaOps.merge(p, merged.schema))
-      case None if headManifest.isEmpty => Some(merged.schema)
-      case None => None // legacy head: stay legacy
-    }
-    var next = 0L
-    var claimed = false
-    var attempt = 0
-    while (!claimed) {
-      next = allManifestVersions(spark, path).foldLeft(head)(math.max) + 1
-      val mfTmp = new Path(s"$path/manifest/v=$next.txt.tmp")
-      fs.mkdirs(new Path(s"$path/manifest"))
-      val out = fs.create(mfTmp, true)
-      try out.write(manifestBody(arity, prevKey.orElse(Some(key)), schemaHdr,
-        nextManifest, nextDvs).getBytes("UTF-8"))
-      finally out.close()
-      claimed = claimExclusive(spark.sparkContext.hadoopConfiguration, fs,
-        mfTmp, new Path(manifestPath(path, next)))
-      attempt += 1
-      if (!claimed && attempt > 5)
-        throw new CommitConflictException(
-          s"branch commit at $path: lost the manifest claim $attempt times; retry")
-    }
-    if (statCols.nonEmpty) {
-      val prevStats = readStats(spark, path, head)._2
-      val entries = nextManifest.keySet.toSeq.sorted.flatMap { b =>
-        if (newBucketVersions.contains(b)) newStats.getOrElse(b, Nil).map(b -> _)
-        else prevStats.getOrElse(b, Nil).map(b -> _)
-      }
-      writeStats(spark, path, next, statCols, entries)
-    }
-    // commit point: the branch file moves (single writer per branch)
-    branchState(spark, path, name) match {
-      case Some((h, _)) if h == head =>
-        Snapshots.writeBranchFile(spark, path, name, next, base, overwrite = true)
-        next
-      case other =>
-        throw new CommitConflictException(
-          s"branch '$name' at $path moved during the commit (head was $head, " +
-            s"now ${other.map(_._1)}) — one writer per branch; retry from the new head")
-    }
-  }
 
   /** FAST-FORWARD PUBLISH: flip `_CURRENT` to the branch head, provided
     * main still sits at the branch's base — the write-audit-publish
@@ -890,15 +789,25 @@ object BucketedSnapshots {
     readSnapshotSPJ(spark, path, version).filter(!col(Cdc.DeletedMeta))
       .drop(Cdc.SeqMeta, Cdc.DeletedMeta, Cdc.RankMeta)
 
-  /** The shared commit: merge the batch into the TOUCHED buckets' current
-    * rows, write new per-bucket dirs + the next manifest, flip the
-    * pointer, GC. Commit sequence (a crash anywhere leaves a consistent
-    * table):
-    *   1. resolve pointer + manifest      — crash: nothing happened
-    *   2. write b=K/v=M+1 for touched K   — crash: inert orphans
-    *   3. write manifest v=N+1            — crash: inert orphan manifest
-    *   4. atomically replace _CURRENT     — the commit point
-    *   5. GC unreferenced dirs/manifests  — crash: extra dirs, next run GCs
+  /** THE merge commit — every keyed write ([[upsertByKey]],
+    * [[applyChanges]], [[commitToBranch]], [[applyChangesToBranch]]) runs
+    * this one path. The base is main's live version, or the branch head
+    * when `branch` is set (`keepVersions` retention applies to main
+    * commits only). Commit sequence (a crash anywhere leaves a
+    * consistent table; the per-writer staging root is swept by
+    * [[vacuum]] if the writer dies):
+    *   1. resolve the base + its manifest   — crash: nothing happened
+    *   2. stage the batch ONCE,             — crash: inert staging root
+    *      partitioned by bucket (`batch/`); the touched set is its listing
+    *   3. touched buckets already in the base: merge them against the
+    *      staged batch read back into `merged/` (else claim `batch/` as is)
+    *   4. claim b=K/v=M+1 for touched K     — crash: inert orphans
+    *   5. write manifest v=N+1 + its stats and bloom sidecars
+    *                                        — crash: inert orphan manifest
+    *   6. the commit point: main CAS-flips `_CURRENT` (disjoint-bucket
+    *      rebase, see [[commitManifest]]) then GCs; a branch moves its
+    *      branch file if its head has not moved, and does no GC
+    * The batch's upstream DAG runs exactly once (the staged write).
     */
   private[graft] def mergeCommit(
       spark: SparkSession,
@@ -909,15 +818,24 @@ object BucketedSnapshots {
       keepVersions: Int,
       merge: (DataFrame, DataFrame) => DataFrame,
       statsColumns: Seq[String] = Nil,
-      bloomColumns: Seq[String] = Nil): Long = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
+      bloomColumns: Seq[String] = Nil,
+      branch: Option[String] = None): Long = {
+    import org.apache.hadoop.fs.Path
     require(nBuckets >= 1, "nBuckets must be >= 1")
     require(keepVersions >= 1, "keepVersions must be >= 1")
     require(!updates.columns.contains("b"),
       "column name 'b' is reserved for the bucket layout — rename the payload column")
     val fs = fsOf(spark, path)
     val bucketOf = pmod(xxhash64(col(key)), lit(nBuckets.toLong)).cast("int")
-    val state = pointerState(spark, path)
+    // the merge base: main's live version (+ the raw CAS base for the
+    // pointer flip, see Snapshots.commitWith) or the branch head
+    val (state, casBase) = branch match {
+      case None => (pointerState(spark, path), Snapshots.pointerStateRaw(spark, path).map(_._1))
+      case Some(name) =>
+        val head = branchState(spark, path, name).getOrElse(
+          throw new java.io.FileNotFoundException(s"no branch '$name' at $path"))._1
+        (Some(head -> Nil), None)
+    }
     val cur = state.map(_._1)
     // arity guard: committing with a DIFFERENT nBuckets than the table
     // was built with would scatter existing keys' updates into the wrong
@@ -927,127 +845,100 @@ object BucketedSnapshots {
         s"table at $path was committed with nBuckets=$n; committing with " +
           s"nBuckets=$nBuckets would scatter keys across mismatched buckets")
     }
-    // CAS base for the pointer flip (raw, see Snapshots.commitWith)
-    val casBase = Snapshots.pointerStateRaw(spark, path).map(_._1)
     val curManifest = cur.map(v => readManifest(spark, path, v)).getOrElse(Map.empty)
-    // ONE staging write partitioned by bucket into a PER-WRITER sibling
-    // dir, then per-bucket CREATE-EXCLUSIVE claims of immutable v-dirs
-    // (renames of INVISIBLE dirs — the commit point is still only the
-    // pointer flip; racing writers can never clobber each other's dirs)
+    // ONE per-writer staging root, then per-bucket CREATE-EXCLUSIVE claims
+    // of immutable v-dirs (renames of INVISIBLE dirs — the commit point is
+    // still only the pointer/branch move; racing writers can never clobber
+    // each other's dirs)
     val staging = new Path(
       path + "__vstaging_" + java.util.UUID.randomUUID().toString.take(12))
-    val (merged, collectedTouched): (DataFrame, Option[IndexedSeq[Int]]) =
-      if (curManifest.isEmpty) {
-        // FIRST commit (or an empty table): nothing to merge, so the batch
-        // stages DIRECTLY and the touched-bucket set falls out of the
-        // staging listing — the upstream batch DAG runs exactly once (the
-        // staged write), never a second time for bucket discovery
-        label(spark, "snap-commit: stage batch") {
-          updates.withColumn("b", bucketOf)
-            .write.partitionBy("b").mode(SaveMode.Overwrite).parquet(staging.toString)
-        }
-        (updates, None)
-      } else {
-        // touched buckets: driver-small by construction (<= nBuckets ints)
-        // (bucket id hashes the KEY only, so schema evolution never moves
-        // rows); column-pruned — the collect computes only the key hash
-        val touched = label(spark, "snap-commit: bucket discovery") {
-          updates.select(bucketOf.as("b")).distinct()
-            .collect().map(_.getInt(0)).sorted.toIndexedSeq
-        }
-        // an EMPTY batch touches nothing: committing would write an empty
-        // (or verbatim-copied) manifest for no data change — no-op
-        if (touched.isEmpty) return cur.getOrElse(0L)
-        val existingDirs = touched.flatMap(b =>
-          curManifest.get(b).map(bv => b -> s"$path/b=$b/v=$bv"))
-        // merge against the DELETE-FOLDED view of the touched buckets: a
-        // rewritten bucket's new dir absorbs its delete vectors (its
-        // manifest entry comes out sidecar-free), so a deleted key
-        // re-upserted in this batch comes back exactly once
-        val curDvs = cur.map(v => readDvs(spark, path, v)).getOrElse(Map.empty)
-        val m =
-          if (existingDirs.isEmpty) updates
-          else merge(
+    try {
+      // the batch stages ONCE, partitioned by bucket; the touched-bucket
+      // set falls out of the staging listing (a staged dir exists exactly
+      // for each bucket with >= 1 batch row), so nothing runs the batch's
+      // upstream DAG a second time (bucket id hashes the KEY only, so
+      // schema evolution never moves rows)
+      val batchDir = new Path(staging, "batch")
+      label(spark, "snap-commit: stage batch") {
+        updates.withColumn("b", bucketOf)
+          .write.partitionBy("b").mode(SaveMode.Overwrite).parquet(batchDir.toString)
+      }
+      val stagedBatch = stagedBucketDirs(fs, batchDir)
+      val touched = stagedBatch.keys.toIndexedSeq.sorted
+      // an EMPTY batch touches nothing: committing would write an empty
+      // (or verbatim-copied) manifest for no data change — no-op
+      if (touched.isEmpty) return cur.getOrElse(0L)
+      val existingDirs = touched.flatMap(b =>
+        curManifest.get(b).map(bv => b -> s"$path/b=$b/v=$bv"))
+      // no touched bucket has rows yet (a first commit, or only new
+      // buckets): the staged batch dirs ARE the new bucket versions.
+      // Otherwise merge against the DELETE-FOLDED view of the touched
+      // buckets (a rewritten bucket's new dir absorbs its delete vectors,
+      // so a deleted key re-upserted here comes back exactly once) and
+      // the staged batch read back with the batch's own schema
+      val (claimDir, merged, claimable) =
+        if (existingDirs.isEmpty) (batchDir, updates, stagedBatch)
+        else {
+          val mergedDir = new Path(staging, "merged")
+          val curDvs = readDvs(spark, path, cur.get)
+          val m = merge(
             mergeExistingSide(spark, path, cur.get, key, nBuckets, touched,
               existingDirs, curDvs),
-            updates)
-        label(spark, "snap-commit: merge + stage") {
-          m.withColumn("b", bucketOf)
-            .write.partitionBy("b").mode(SaveMode.Overwrite).parquet(staging.toString)
-        }
-        (m, Some(touched))
-      }
-    // staged bucket dirs in ONE listing (replaces the per-bucket fs.exists
-    // probes below); on the first-commit path this IS the touched set —
-    // a staged dir exists exactly for each bucket with >= 1 batch row
-    val stagedBuckets = stagedBucketDirs(fs, staging)
-    val touched: IndexedSeq[Int] =
-      collectedTouched.getOrElse(stagedBuckets.keys.toIndexedSeq.sorted)
-    if (touched.isEmpty) { fs.delete(staging, true); return cur.getOrElse(0L) }
-    // zonemap stats for the TOUCHED buckets, off the staged write (one
-    // column-pruned aggregation over the touched data only — the 1%-churn
-    // batch, never the table); declared columns are sticky across commits
-    // via the stats-file header, so one declaration covers the table's life
-    val statCols = effectiveStatCols(
-      cur.map(v => readStats(spark, path, v)._1).getOrElse(Nil),
-      statsColumns, merged.schema)
-    val newStats = computeBucketStats(spark, staging.toString, statCols, touched)
-    // bloom sidecars: declared columns are sticky via the sidecar header
-    val prevBloomHdr = cur.map(v => readBlooms(spark, path, v))
-    val bloomCols = (prevBloomHdr.map(_._1).getOrElse(Nil) ++
-      bloomColumns).distinct
-    // commit-time type guard (the statsColumns isStatType rule): a bloom
-    // column present in this commit's schema must be a type the probe
-    // can re-hash (string/long/int); its type is recorded in the sidecar
-    // header so probes hash exactly as the build's xxhash64(col) did
-    val bloomTypes: Map[String, org.apache.spark.sql.types.DataType] =
-      prevBloomHdr.map(_._2).getOrElse(Map.empty) ++
-        bloomCols.flatMap { c =>
-          merged.schema.find(_.name == c).map { f =>
-            require(isBloomType(f.dataType),
-              s"bloom column '$c' must be string, bigint, or int " +
-                s"(probes hash by the recorded type), got ${f.dataType.catalogString}")
-            c -> f.dataType
+            spark.read.schema(updates.schema).parquet(batchDir.toString).drop("b"))
+          label(spark, "snap-commit: merge + stage") {
+            m.withColumn("b", bucketOf)
+              .write.partitionBy("b").mode(SaveMode.Overwrite).parquet(mergedDir.toString)
           }
-        }.toMap
-    val newBlooms = computeBucketBlooms(
-      spark, staging.toString, bloomCols, touched, 100000L, 0.03)
-    val newBucketVersions = touched.map { b =>
-      val src = new Path(staging, s"b=$b")
-      if (!stagedBuckets.contains(b)) {
-        // every key of this bucket deduped away in the merge: an EMPTY
-        // bucket version — stage a marker-less parquet write of the
-        // merged schema, claimed like any other dir
-        merged.limit(0).write.mode(SaveMode.Overwrite).parquet(src.toString)
-      }
-      b -> claimBucketDir(spark, path, b, src, "v")
-    }.toMap
-    fs.delete(staging, true)
-    commitManifest(spark, path, state, casBase, curManifest, newBucketVersions,
-      keepVersions, statCols, newStats, nBuckets,
-      bucketKey = key, schemaUpdate = Some(merged.schema),
-      addBloomCols = bloomCols, newBlooms = newBlooms, bloomTypes = bloomTypes)
+          (mergedDir, m, stagedBucketDirs(fs, mergedDir))
+        }
+      // zonemap stats for the TOUCHED buckets, off the staged write (one
+      // column-pruned aggregation over the touched data only — the
+      // 1%-churn batch, never the table); declared columns are sticky
+      // across commits via the stats-file header, so one declaration
+      // covers the table's life
+      val statCols = effectiveStatCols(
+        cur.map(v => readStats(spark, path, v)._1).getOrElse(Nil),
+        statsColumns, merged.schema)
+      val newStats = computeBucketStats(spark, claimDir.toString, statCols, touched)
+      // bloom sidecars: declared columns are sticky via the sidecar header
+      val prevBloomHdr = cur.map(v => readBlooms(spark, path, v))
+      val bloomCols = (prevBloomHdr.map(_._1).getOrElse(Nil) ++
+        bloomColumns).distinct
+      // commit-time type guard (the statsColumns isStatType rule): a bloom
+      // column present in this commit's schema must be a type the probe
+      // can re-hash (string/long/int); its type is recorded in the sidecar
+      // header so probes hash exactly as the build's xxhash64(col) did
+      val bloomTypes: Map[String, org.apache.spark.sql.types.DataType] =
+        prevBloomHdr.map(_._2).getOrElse(Map.empty) ++
+          bloomCols.flatMap { c =>
+            merged.schema.find(_.name == c).map { f =>
+              require(isBloomType(f.dataType),
+                s"bloom column '$c' must be string, bigint, or int " +
+                  s"(probes hash by the recorded type), got ${f.dataType.catalogString}")
+              c -> f.dataType
+            }
+          }.toMap
+      val newBlooms = computeBucketBlooms(
+        spark, claimDir.toString, bloomCols, touched, 100000L, 0.03)
+      val newBucketVersions = touched.map { b =>
+        val src = claimable.getOrElse(b, {
+          // every key of this bucket deduped away in the merge: an EMPTY
+          // bucket version — stage a marker-less parquet write of the
+          // merged schema, claimed like any other dir
+          val empty = new Path(claimDir, s"b=$b")
+          merged.limit(0).write.mode(SaveMode.Overwrite).parquet(empty.toString)
+          empty
+        })
+        b -> claimBucketDir(spark, path, b, src, "v")
+      }.toMap
+      commitManifest(spark, path, state, casBase, curManifest, newBucketVersions,
+        keepVersions, statCols, newStats, nBuckets,
+        bucketKey = key, schemaUpdate = Some(merged.schema),
+        addBloomCols = bloomCols, newBlooms = newBlooms, bloomTypes = bloomTypes,
+        branch = branch)
+    } finally fs.delete(staging, true)
   }
 
-  /** The shared commit tail: write manifest v=next (current entries
-    * overlaid with `newBucketVersions`) plus its zonemap-stats sidecar,
-    * CAS-check the pointer, flip it atomically, GC. Returns the committed
-    * table version.
-    *
-    * DISJOINT-BUCKET REBASE (what lets independent writers share a table):
-    * when the CAS detects a concurrent commit, the loser re-reads the NEW
-    * live manifest and, if the winner touched a DISJOINT set of buckets,
-    * re-commits by overlaying its already-staged bucket versions onto the
-    * winner's manifest — no data rewrite, no re-merge (its merge inputs
-    * for its own buckets are provably still the live ones). Only when the
-    * bucket sets OVERLAP does [[graft.operators.CommitConflictException]]
-    * surface, and [[Snapshots.retryOnConflict]] re-merges from the new
-    * base. This is the Iceberg-style optimistic-concurrency resolution at
-    * bucket granularity: at 100 TB, two daily feeds each touching 1% of
-    * buckets almost never collide, and neither pays the other's latency.
-    * The staged dirs stay valid across rebase attempts because GC never
-    * deletes bucket versions ABOVE the live one (see [[gc]]'s floor rule).
-    */
   /** Atomically claim `dst` by renaming `tmp` onto it WITHOUT overwrite
     * (`FileContext` `Rename.NONE` fails on an existing destination —
     * unlike `FileSystem.rename`, which RawLocalFileSystem implements as a
@@ -1073,6 +964,29 @@ object BucketedSnapshots {
         false
     }
 
+  /** The shared commit tail: write manifest v=next (base entries
+    * overlaid with `newBucketVersions`) plus its zonemap-stats and bloom
+    * sidecars, then the commit point. On main (`branch` None): CAS-check
+    * the pointer, flip it atomically, GC. On a branch: check the branch
+    * head is still `state`'s version, move the branch file, no GC (the
+    * head is pinned; orphans age out under main's GC). Returns the
+    * committed table version.
+    *
+    * DISJOINT-BUCKET REBASE (what lets independent writers share a table):
+    * when the CAS detects a concurrent commit, the loser re-reads the NEW
+    * live manifest and, if the winner touched a DISJOINT set of buckets,
+    * re-commits by overlaying its already-staged bucket versions onto the
+    * winner's manifest — no data rewrite, no re-merge (its merge inputs
+    * for its own buckets are provably still the live ones). Only when the
+    * bucket sets OVERLAP does [[graft.operators.CommitConflictException]]
+    * surface, and [[Snapshots.retryOnConflict]] re-merges from the new
+    * base. This is the Iceberg-style optimistic-concurrency resolution at
+    * bucket granularity: at 100 TB, two daily feeds each touching 1% of
+    * buckets almost never collide, and neither pays the other's latency.
+    * The staged dirs stay valid across rebase attempts because GC never
+    * deletes bucket versions ABOVE the live one (see [[gc]]'s floor rule).
+    * A branch has one writer: a moved head is a conflict, never a rebase.
+    */
   private def commitManifest(
       spark: SparkSession,
       path: String,
@@ -1091,7 +1005,8 @@ object BucketedSnapshots {
       schemaReplace: Boolean = false, // full rewrite: no merge
       addBloomCols: Seq[String] = Nil,
       newBlooms: Map[Int, Seq[(String, Array[Byte])]] = Map.empty,
-      bloomTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty): Long = {
+      bloomTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty,
+      branch: Option[String] = None): Long = {
     import org.apache.hadoop.fs.{FileContext, Options, Path}
     val fs = fsOf(spark, path)
     var st = state
@@ -1104,6 +1019,44 @@ object BucketedSnapshots {
     // concurrent rewrite of a bucket we append a delete to (or vice
     // versa) must conflict, not silently rebase
     val ourTouched = newBucketVersions.keySet ++ dvAppend.keySet
+    // a branch commit's base must still be the branch head; returns the
+    // branch's fork point for the branch file
+    def branchBase(name: String): Long = branchState(spark, path, name) match {
+      case Some((h, base)) if st.exists(_._1 == h) => base
+      case other =>
+        throw new CommitConflictException(
+          s"branch '$name' at $path moved during the commit (head was " +
+            s"${st.map(_._1)}, now ${other.map(_._1)}) — one writer per branch; " +
+            "retry from the new head")
+    }
+    // after a lost race: give up after maxRebase attempts; a branch keeps
+    // its base while its head is unmoved; main re-reads the live version
+    // and rebases unless the winner touched one of our buckets
+    def rebase(lost: => CommitConflictException): Unit = {
+      attempt += 1
+      if (attempt > maxRebase) throw lost
+      branch match {
+        case Some(name) => branchBase(name)
+        case None =>
+          val st2 = pointerState(spark, path)
+          val cm2 = st2.map(s => readManifest(spark, path, s._1))
+            .getOrElse(Map.empty[Int, Long])
+          val cd2 = st2.map(s => readDvs(spark, path, s._1))
+            .getOrElse(Map.empty[Int, Seq[Long]])
+          // full-entry comparison: a delete-vector-only change to a bucket
+          // is a data change to that bucket
+          val overlap = (cm.keySet ++ cm2.keySet).filter(b =>
+            cm.get(b) != cm2.get(b) || cd.getOrElse(b, Nil) != cd2.getOrElse(b, Nil)) intersect ourTouched
+          if (overlap.nonEmpty)
+            throw new CommitConflictException(
+              s"bucketed commit at $path: concurrent commit touched overlapping " +
+                s"buckets ${overlap.toSeq.sorted.mkString(",")} " +
+                "— merge inputs are stale; re-read and retry")
+          // our v=next manifest/sidecars are inert orphans (never pointed
+          // to); later GCs age them out below the retention floor
+          st = st2; cb = Snapshots.pointerStateRaw(spark, path).map(_._1); cm = cm2; cd = cd2
+      }
+    }
     while (true) {
       val cur = st.map(_._1)
       val next = (cur.toSeq ++ allManifestVersions(spark, path)).foldLeft(0L)(math.max) + 1
@@ -1163,29 +1116,11 @@ object BucketedSnapshots {
       // past it.
       val claimed = claimExclusive(
         spark.sparkContext.hadoopConfiguration, fs, mfTmp, mf)
-      if (!claimed) {
-        attempt += 1
-        if (attempt > maxRebase)
-          throw new CommitConflictException(
-            s"bucketed commit at $path: lost the manifest claim for v=$next " +
-              s"$maxRebase times — a concurrent writer is racing this commit; retry")
-        val st2 = pointerState(spark, path)
-        val cb2 = Snapshots.pointerStateRaw(spark, path).map(_._1)
-        val cm2 = st2.map(s => readManifest(spark, path, s._1))
-          .getOrElse(Map.empty[Int, Long])
-        val cd2 = st2.map(s => readDvs(spark, path, s._1))
-          .getOrElse(Map.empty[Int, Seq[Long]])
-        // full-entry comparison: a delete-vector-only change to a bucket
-        // is a data change to that bucket
-        val changed = (cm.keySet ++ cm2.keySet).filter(b =>
-          cm.get(b) != cm2.get(b) || cd.getOrElse(b, Nil) != cd2.getOrElse(b, Nil))
-        if ((changed intersect ourTouched).nonEmpty)
-          throw new CommitConflictException(
-            s"bucketed commit at $path: concurrent commit touched overlapping " +
-              s"buckets ${(changed intersect ourTouched).toSeq.sorted.mkString(",")} " +
-              "— merge inputs are stale; re-read and retry")
-        st = st2; cb = cb2; cm = cm2; cd = cd2
-      } else {
+      if (!claimed)
+        rebase(new CommitConflictException(
+          s"bucketed commit at $path: lost the manifest claim for v=$next " +
+            s"$maxRebase times — a concurrent writer is racing this commit; retry"))
+      else {
       // stats sidecar: untouched buckets carry the LIVE version's entries
       // (re-read per attempt — a rebase must keep the winner's stats for
       // the winner's buckets), touched buckets get this commit's
@@ -1216,43 +1151,33 @@ object BucketedSnapshots {
         }
         writeBlooms(spark, path, next, bcols, prevBloomTypes ++ bloomTypes, bentries)
       }
-      // THE commit point: atomic pointer replace with the retained history.
-      // Retention is COUNT-based (newest keepVersions committed versions) —
-      // a value window on `next` would let a crash-orphan manifest inflate
-      // `next` and evict the still-pinned previous table version.
-      val retained = (next +: st.map(_._2).getOrElse(Seq.empty)).distinct
-        .sorted.reverse.take(keepVersions)
-      val unmoved =
-        try { Snapshots.checkPointerUnmoved(spark, path, cb); true }
-        catch {
-          case e: CommitConflictException =>
-            attempt += 1
-            val st2 = pointerState(spark, path)
-            val cb2 = Snapshots.pointerStateRaw(spark, path).map(_._1)
-            val cm2 = st2.map(s => readManifest(spark, path, s._1))
-              .getOrElse(Map.empty[Int, Long])
-            val cd2 = st2.map(s => readDvs(spark, path, s._1))
-              .getOrElse(Map.empty[Int, Seq[Long]])
-            val changed = (cm.keySet ++ cm2.keySet).filter(b =>
-              cm.get(b) != cm2.get(b) || cd.getOrElse(b, Nil) != cd2.getOrElse(b, Nil))
-            if (attempt > maxRebase || (changed intersect ourTouched).nonEmpty)
-              throw e // overlapping buckets: this commit's merge inputs are stale
-            // our v=next manifest/stats are inert orphans (never pointed
-            // to); later GCs age them out below the retention floor
-            st = st2; cb = cb2; cm = cm2; cd = cd2
-            false // retry: overlay our bucket versions onto the new base
-        }
-      if (unmoved) {
-        val root = new Path(path)
-        val tmp = new Path(root, "_CURRENT.tmp")
-        val marker = new Path(root, "_CURRENT")
-        val pout = fs.create(tmp, true)
-        try pout.write(retained.mkString("\n").getBytes("UTF-8"))
-        finally pout.close()
-        FileContext.getFileContext(root.toUri, spark.sparkContext.hadoopConfiguration)
-          .rename(tmp, marker, Options.Rename.OVERWRITE)
-        gc(spark, path, retained)
-        return next
+      branch match {
+        case Some(name) =>
+          // THE commit point of a branch commit: the branch file moves
+          Snapshots.writeBranchFile(spark, path, name, next, branchBase(name), overwrite = true)
+          return next
+        case None =>
+          // THE commit point: atomic pointer replace with the retained
+          // history. Retention is COUNT-based (newest keepVersions
+          // committed versions) — a value window on `next` would let a
+          // crash-orphan manifest inflate `next` and evict the still-pinned
+          // previous table version.
+          val retained = (next +: st.map(_._2).getOrElse(Seq.empty)).distinct
+            .sorted.reverse.take(keepVersions)
+          val unmoved =
+            try { Snapshots.checkPointerUnmoved(spark, path, cb); true }
+            catch { case e: CommitConflictException => rebase(e); false }
+          if (unmoved) {
+            val root = new Path(path)
+            val tmp = new Path(root, "_CURRENT.tmp")
+            val pout = fs.create(tmp, true)
+            try pout.write(retained.mkString("\n").getBytes("UTF-8"))
+            finally pout.close()
+            FileContext.getFileContext(root.toUri, spark.sparkContext.hadoopConfiguration)
+              .rename(tmp, new Path(root, "_CURRENT"), Options.Rename.OVERWRITE)
+            gc(spark, path, retained)
+            return next
+          }
       }
       }
     }

@@ -1,8 +1,9 @@
 package graft.tools
 
+import graft.Session
 import graft.operators.AsOfJoin
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical demonstration of the as-of skew pick rule
@@ -41,20 +42,7 @@ object AsOfSkewBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val m = sys.env.getOrElse("SPARK_GRAFT_SKEW_M", "8").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.catalog.graft", "graft.sources.SnapCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-      .config("spark.sql.warehouse.dir", "target/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // epoch-seconds shaping as in the registry's evDf
     val ev = Tables.events(spark, sfDir).select(

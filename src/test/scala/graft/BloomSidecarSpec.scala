@@ -171,4 +171,28 @@ class BloomSidecarSpec extends SparkSpec {
     }
     assert(BucketedSnapshots.readCurrentEquals(spark, path, "url", Seq("u5")).count() == 0)
   }
+
+  test("bloom columns survive write-audit-publish: branch commits carry the sidecar") {
+    val path = fresh("wap")
+    mkTable(path)
+    BucketedSnapshots.branch(spark, path, "load")
+    BucketedSnapshots.commitToBranch(spark, path, "load",
+      Seq((4000L, "ubranch", 1.0)).toDF("k", "url", "v"), "k", 16)
+    BucketedSnapshots.publishBranch(spark, path, "load")
+    val v = BucketedSnapshots.currentVersion(spark, path).get
+    val all = BucketedSnapshots.readManifest(spark, path, v).keySet
+    val kept = BucketedSnapshots.bloomPrunedBuckets(spark, path, v, "url", Seq("u77"))
+    assert(kept.nonEmpty && kept.size < all.size,
+      s"the published branch head must still prune, kept ${kept.size}/${all.size}")
+    assert(BucketedSnapshots.readCurrentEquals(spark, path, "url", Seq("ubranch"))
+      .as[(Long, String, Double)].collect().map(_._1).toSeq == Seq(4000L))
+    // a later main commit that declares nothing still maintains the sidecar
+    BucketedSnapshots.upsertByKey(spark,
+      Seq((5000L, "ulater", 2.0)).toDF("k", "url", "v"), path, "k", 16)
+    val v2 = BucketedSnapshots.currentVersion(spark, path).get
+    assert(BucketedSnapshots.readBlooms(spark, path, v2)._1 == Seq("url"))
+    assert(BucketedSnapshots.bloomPrunedBuckets(spark, path, v2, "url", Seq("u77")).size < all.size)
+    assert(BucketedSnapshots.readCurrentEquals(spark, path, "url", Seq("ulater"))
+      .as[(Long, String, Double)].collect().map(_._1).toSeq == Seq(5000L))
+  }
 }

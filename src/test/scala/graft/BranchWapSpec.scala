@@ -180,4 +180,30 @@ class BranchWapSpec extends SparkSpec {
     val live = rows(BucketedSnapshots.readCurrent(spark, path))
     assert(!live.contains(5L) && live(6L) == 66.0)
   }
+
+  test("a branch commit evaluates its batch once: commitToBranch and applyChangesToBranch") {
+    val evals = spark.sparkContext.longAccumulator("wap_batch_evals")
+    val counted = udf { (k: Long) => evals.add(1L); k }
+    def batch = spark.range(1, 21).select(counted(col("id")).as("k"), (col("id") * 10.0).as("v"))
+    val up = fresh("evalonce_upsert")
+    BucketedSnapshots.upsertByKey(spark,
+      (1L to 50L).map(i => (i, i * 1.0)).toDF("k", "v"), up, "k", 4)
+    BucketedSnapshots.branch(spark, up, "load")
+    evals.reset()
+    BucketedSnapshots.commitToBranch(spark, up, "load", batch, "k", 4)
+    val firstEvals = evals.value
+    val staged = rows(BucketedSnapshots.readBranch(spark, up, "load"))
+    assert(staged.size == 50 && staged(7L) == 70.0 && staged(21L) == 21.0)
+    val cdc = fresh("evalonce_cdc")
+    BucketedSnapshots.applyChanges(spark,
+      (1L to 50L).map(i => (i, 1L, "I", i * 1.0)).toDF("k", "seq", "op", "v"), cdc, "k", 4)
+    BucketedSnapshots.branch(spark, cdc, "load")
+    evals.reset()
+    BucketedSnapshots.applyChangesToBranch(spark, cdc, "load",
+      batch.withColumn("seq", lit(2L)).withColumn("op", lit("U")), "k", 4)
+    assert((firstEvals, evals.value) == (20L, 20L),
+      s"(commitToBranch, applyChangesToBranch) evaluated the 20-row batch ($firstEvals, ${evals.value}) times over")
+    val audit = rows(BucketedSnapshots.readTableBranch(spark, cdc, "load"))
+    assert(audit.size == 50 && audit(7L) == 70.0 && audit(21L) == 21.0)
+  }
 }

@@ -341,4 +341,30 @@ class BucketedSnapshotsSpec extends SparkSpec {
       chg((1L, 7L, "D", "x"), (2L, 2L, "I", "stale")), path, "k", 4)
     assert(live(BucketedSnapshots.readTable(spark, path)) == Set((2L, "b8"), (3L, "c9")))
   }
+
+  test("a merge commit evaluates its batch once: upsertByKey and applyChanges onto an existing table") {
+    // the batch's key comes through a counting UDF: every evaluation of
+    // the batch's DAG adds its row count
+    val evals = spark.sparkContext.longAccumulator("bsnap_batch_evals")
+    val counted = udf { (k: Long) => evals.add(1L); k }
+    def batch = spark.range(1, 21).select(counted(col("id")).as("k"), (col("id") * 10.0).as("v"))
+    val up = fresh("evalonce_upsert")
+    BucketedSnapshots.upsertByKey(spark,
+      (1L to 50L).map(i => (i, i * 1.0)).toDF("k", "v"), up, "k", 4)
+    evals.reset()
+    BucketedSnapshots.upsertByKey(spark, batch, up, "k", 4)
+    val firstEvals = evals.value
+    val live = rows(BucketedSnapshots.readCurrent(spark, up))
+    assert(live.size == 50 && live(7L) == 70.0 && live(21L) == 21.0)
+    val cdc = fresh("evalonce_cdc")
+    BucketedSnapshots.applyChanges(spark,
+      (1L to 50L).map(i => (i, 1L, "I", i * 1.0)).toDF("k", "seq", "op", "v"), cdc, "k", 4)
+    evals.reset()
+    BucketedSnapshots.applyChanges(spark,
+      batch.withColumn("seq", lit(2L)).withColumn("op", lit("U")), cdc, "k", 4)
+    assert((firstEvals, evals.value) == (20L, 20L),
+      s"(upsertByKey, applyChanges) evaluated the 20-row batch ($firstEvals, ${evals.value}) times over")
+    val table = rows(BucketedSnapshots.readTable(spark, cdc))
+    assert(table.size == 50 && table(7L) == 70.0 && table(21L) == 21.0)
+  }
 }
