@@ -1,7 +1,9 @@
 package graft.plans
 
 import graft.functions.expressions.{BlockHash64, DecodeStats, DotProduct, HyperplaneBuckets, ImageDims, NfcNormalize, NormalizeVec, QuantizeInt8, SimHashWords, WavMeta}
-import org.apache.spark.{SparkConf, SparkEnv}
+import graft.sources.{NioLocalFileSystem, NioLocalFs}
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.{SparkConf, SparkContext, SparkEnv}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -13,7 +15,9 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType}
   * they work from `spark.sql(...)` anywhere the Column API does, and
   * injects [[RewriteDeclarativeDot]] so plain-Spark HOF dot folds get the
   * native loop automatically. It also sizes Spark's generated-code cache
-  * to graft's plan working set ([[GraftExtensions.codegenDefaults]]).
+  * to graft's plan working set ([[GraftExtensions.codegenDefaults]]) and
+  * installs a local file system for `file:` paths that starts no `chmod`
+  * or `readlink` process ([[GraftExtensions.localFsDefaults]]).
   *
   * Activate with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
@@ -40,6 +44,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // extensions are applied after the SparkContext exists and before the
     // session state copies its conf, so defaults set here reach the session
     GraftExtensions.codegenDefaults(SparkEnv.get.conf)
+    // before the shared state opens the warehouse dir: the first `file:`
+    // FileSystem the JVM caches is built from this conf
+    GraftExtensions.localFsDefaults(SparkContext.getOrCreate().hadoopConfiguration)
     // plain-Spark HOF dot folds rewrite to the codegen'd native loop
     ext.injectOptimizerRule(_ => RewriteDeclarativeDot)
     // whole-operator as-of join: AsOfMergeJoinNode -> AsOfMergeJoinExec
@@ -120,4 +127,27 @@ object GraftExtensions {
   def codegenDefaults(conf: SparkConf): SparkConf =
     conf.setIfMissing("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .setIfMissing("spark.sql.codegen.useIdInClassName", "false")
+
+  /** Hadoop's own `file:` classes and graft's replacements
+    * ([[graft.sources.NioRawLocalFileSystem]]), by configuration key:
+    * the checksummed `FileSystem` and the `FileContext` file system.
+    */
+  private val LocalFsImpls = Seq(
+    "fs.file.impl" -> ("org.apache.hadoop.fs.LocalFileSystem", classOf[NioLocalFileSystem].getName),
+    "fs.AbstractFileSystem.file.impl" -> ("org.apache.hadoop.fs.local.LocalFs", classOf[NioLocalFs].getName))
+
+  /** Points `file:` paths at graft's fork-free local file system on
+    * `conf`, and returns it. Each key is set only where it is unset or
+    * still holds Hadoop's default class from `core-default.xml` (which
+    * sets `fs.AbstractFileSystem.file.impl`); a value the user set, the
+    * stock class included, is kept. Other schemes are not touched.
+    */
+  def localFsDefaults(conf: Configuration): Configuration = {
+    LocalFsImpls.foreach { case (key, (hadoopDefault, graft)) =>
+      val v = conf.get(key)
+      def fromDefaults = Option(conf.getPropertySources(key)).exists(_.forall(_ == "core-default.xml"))
+      if (v == null || (v == hadoopDefault && fromDefaults)) conf.set(key, graft)
+    }
+    conf
+  }
 }

@@ -13,7 +13,9 @@ import org.apache.spark.sql.SparkSession
   * runs once (after one untimed warmup run that populates whatever the
   * query would see warm), and `compiles`, the classes Spark's codegen
   * compiled during that run (a warm run that still compiles has outgrown
-  * the generated-code cache). Wall-clock on this VM swings 2-3x minute to
+  * the generated-code cache), and `procs`, the child processes the JVM
+  * started during it ([[ProcessStarts]]; a local file system that forks
+  * `chmod` or `readlink` per file shows here). Wall-clock on this VM swings 2-3x minute to
   * minute, so the optimization loop compares THESE numbers — scheduling
   * sync-points and bytes moved — which do not drift. Run with
   * SPARK_GRAFT_BENCH_ONLY to scope.
@@ -61,7 +63,7 @@ object JobStats {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val names = Registry.all.filter(_.bench).map(_.name)
       .filter(n => only.forall(_.contains(n)))
-    println(f"${"query"}%-42s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s ${"shufR MB"}%9s ${"shufW MB"}%9s ${"spill MB"}%9s ${"compiles"}%8s ${"warm s"}%7s")
+    println(f"${"query"}%-42s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s ${"shufR MB"}%9s ${"shufW MB"}%9s ${"spill MB"}%9s ${"compiles"}%8s ${"procs"}%6s ${"warm s"}%7s")
     names.foreach { name =>
       val run = qs(name)
       run(spark, sfDir).count() // warmup (cold path, codegen, caches dropped below)
@@ -74,15 +76,17 @@ object JobStats {
       jobs.set(0); stages.set(0); tasks.set(0); shufR.set(0); shufW.set(0); spill.set(0)
       spark.sparkContext.addSparkListener(listener)
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val t0 = System.nanoTime()
-      run(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (dt, procs) = ProcessStarts.during {
+        val t0 = System.nanoTime()
+        run(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       // drain the async bus so late events land in THIS query's counters
       // (PlanProbe drains the same way; the bus API is private[spark])
       org.apache.spark.sql.graftnative.PlanProbe.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
-      println(f"$name%-42s ${jobs.get}%5d ${stages.get}%7d ${tasks.get}%6d ${shufR.get / 1e6}%9.1f ${shufW.get / 1e6}%9.1f ${spill.get / 1e6}%9.1f $compiles%8d $dt%7.2f")
+      println(f"$name%-42s ${jobs.get}%5d ${stages.get}%7d ${tasks.get}%6d ${shufR.get / 1e6}%9.1f ${shufW.get / 1e6}%9.1f ${spill.get / 1e6}%9.1f $compiles%8d ${procs.size}%6d $dt%7.2f")
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       System.gc()

@@ -4,20 +4,33 @@ dumps against the DuckDB oracle SQL on the same testdata tables.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 """
+import atexit
 import glob
 import json
 import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
+
+# DuckDB spills large oracle queries to temp files, by default under
+# ./.tmp (inside the checkout when run from the repo root); keep them in
+# one temp dir that is removed at exit
+SPILL = tempfile.mkdtemp(prefix="check-duckdb-")
+atexit.register(shutil.rmtree, SPILL, ignore_errors=True)
+
+
+def connect():
+    return duckdb.connect(config={"temp_directory": tempfile.mkdtemp(dir=SPILL)})
 
 
 def load_spark(outdir, name):
     files = glob.glob(f"{outdir}/{name}/*.parquet")
     if not files:
         return None
-    con = duckdb.connect()
+    con = connect()
     return con.sql(
         "SELECT * FROM read_parquet([" + ",".join(f"'{f}'" for f in files) + "])"
     ).df()
@@ -34,7 +47,7 @@ def main():
     only = set(sys.argv[3:])
     with open(f"{outdir}/oracle_sql.json") as f:
         oracles = json.load(f)
-    con = duckdb.connect()
+    con = connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
