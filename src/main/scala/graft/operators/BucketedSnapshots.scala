@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Pointer-committed BUCKETED tables: [[Snapshots]]' atomic-pointer commit
-  * composed with [[Incremental.upsertByKeyBucketed]]'s touched-buckets-only
-  * layout — the shape a BIG keyed table needs on an object store at 100 TB:
+  * composed with a touched-buckets-only hash-bucket layout (`b=K`,
+  * `K = pmod(xxhash64(key), nBuckets)`) — graft's one bucketed keyed-merge
+  * protocol, the shape a BIG keyed table needs on an object store at 100 TB:
   *
   *   path/_CURRENT                     first line = live table version,
   *                                     rest = retained committed versions
@@ -22,9 +23,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   *  - write amplification = touched buckets only (the bucketed layout's
   *    point), yet the commit is ONE atomic small-object flip (the
-  *    versioned protocol's point) — no per-bucket rename windows at all,
-  *    unlike the rename-swap bucketed table whose crash story needs the
-  *    write-ahead manifest + roll-forward;
+  *    versioned protocol's point) — no per-bucket rename windows, so no
+  *    write-ahead log or roll-forward recovery;
   *  - a reader pinned at table version N resolves its manifest once and
   *    reads immutable directories — snapshot isolation across ANY number
   *    of concurrent commits within retention;
@@ -529,15 +529,43 @@ object BucketedSnapshots {
       key: String,
       keepVersions: Int = 2,
       maxDvsPerBucket: Int = 4): Long = {
-    import org.apache.hadoop.fs.Path
     require(maxDvsPerBucket >= 1, "maxDvsPerBucket must be >= 1")
     require(keys.columns.contains(key),
       s"key '$key' is not a column of the delete-key frame (have: ${keys.columns.mkString(", ")})")
+    deleteKeysAt(spark, path, pinnedPointer(spark, path), keys, key,
+      keepVersions, maxDvsPerBucket)
+  }
+
+  /** The live pointer from ONE read: `(state, casBase)` for
+    * [[commitManifest]], so the version a commit's inputs come from is
+    * exactly the one its pointer flip CAS-checks.
+    */
+  private def pinnedPointer(
+      spark: SparkSession, path: String): (Option[(Long, Seq[Long])], Option[Long]) = {
+    import org.apache.hadoop.fs.Path
     val fs = fsOf(spark, path)
-    val state = pointerState(spark, path)
+    val raw = Snapshots.pointerStateRaw(spark, path)
+    (raw.filter { case (v, _) => fs.exists(new Path(manifestPath(path, v))) }, raw.map(_._1))
+  }
+
+  /** [[deleteKeys]]' commit against a pinned pointer (see
+    * [[pinnedPointer]]): `keys` may be derived from that pinned version
+    * ([[pruneTombstones]]), and a concurrent commit to one of the touched
+    * buckets then aborts this one instead of being overlaid.
+    */
+  private def deleteKeysAt(
+      spark: SparkSession,
+      path: String,
+      pinned: (Option[(Long, Seq[Long])], Option[Long]),
+      keys: DataFrame,
+      key: String,
+      keepVersions: Int,
+      maxDvsPerBucket: Int): Long = {
+    import org.apache.hadoop.fs.Path
+    val fs = fsOf(spark, path)
+    val (state, casBase) = pinned
     val cur = state.map(_._1).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed snapshot under $path"))
-    val casBase = Snapshots.pointerStateRaw(spark, path).map(_._1)
     val curManifest = readManifest(spark, path, cur)
     val curDvs = readDvs(spark, path, cur)
     val nBuckets = readNBuckets(spark, path, cur).getOrElse(
@@ -605,6 +633,32 @@ object BucketedSnapshots {
     commitManifest(spark, path, state, casBase, curManifest, newBucketVersions,
       keepVersions, Nil, carried.toMap,
       dvAppend = newDvIds.toMap.map { case (b, j) => b -> Seq(j) })
+  }
+
+  /** TOMBSTONE GC for an [[applyChanges]] table ([[Cdc.pruneTombstones]]'
+    * rule): once the CDC source's low-watermark guarantees every in-flight
+    * change has `seq >= lowWatermark`, a tombstone with `_seq < lowWatermark`
+    * can never again out-rank an arriving change, so it is dead weight.
+    * The prunable keys become [[deleteKeys]] sidecars — bytes written ≈
+    * pruned keys; a bucket is rewritten only where the sidecar budget folds
+    * it. The key scan reads the version the commit CAS-checks, so a key a
+    * concurrent commit re-inserted surfaces as a
+    * [[CommitConflictException]], never as a hidden row. Live rows are never
+    * pruned, and a version pinned before the prune still reads its
+    * tombstones. Returns the committed table version (the live one when
+    * nothing is prunable).
+    */
+  def pruneTombstones(spark: SparkSession, path: String, lowWatermark: Long): Long = {
+    val pinned = pinnedPointer(spark, path)
+    val cur = pinned._1.map(_._1).getOrElse(
+      throw new java.io.FileNotFoundException(s"no committed snapshot under $path"))
+    val key = readBucketKey(spark, path, cur).getOrElse(
+      throw new IllegalStateException(
+        s"table at $path has no #bucketKey header — cannot name the tombstone keys"))
+    val dead = readSnapshot(spark, path, cur)
+      .filter(col(Cdc.DeletedMeta) && col(Cdc.SeqMeta) < lowWatermark)
+      .select(key)
+    deleteKeysAt(spark, path, pinned, dead, key, keepVersions = 2, maxDvsPerBucket = 4)
   }
 
   /** PREDICATE DELETE — the erasure-sweep shape callers actually write

@@ -29,17 +29,18 @@ import org.apache.spark.sql.functions._
   * Deletes persist as TOMBSTONES (`_deleted = true` rows keeping their
   * `_seq`): that is what makes out-of-order safe — a stale update arriving
   * after the delete loses to the tombstone's higher seq. Tombstones are
-  * dropped by [[pruneTombstones]] once the CDC source's low-watermark
-  * guarantees nothing older can still arrive.
+  * dropped by [[pruneTombstones]] (bucketed tables:
+  * [[BucketedSnapshots.pruneTombstones]]) once the CDC source's
+  * low-watermark guarantees nothing older can still arrive.
   *
   * 100 TB shape: the per-batch reduction is a `groupBy(key).agg(max(struct
   * …)))` — struct field order IS the precedence order — so it partial-
   * aggregates map-side (one candidate per key per input partition crosses
   * the shuffle; a window `row_number` form would sort whole partitions).
   * The merge is one full-outer join per batch on the key, the same shape
-  * as the upsert family; at datalake scale the table should live bucketed
-  * (the [[Incremental.upsertByKeyBucketed]] layout applies verbatim — the
-  * merge rule here is the only difference).
+  * as the upsert family; at datalake scale the table should live bucketed:
+  * [[BucketedSnapshots.applyChanges]] applies this merge rule to the
+  * touched buckets only and commits with one pointer flip.
   */
 object Cdc {
   /** Persisted per-row metadata: the winning change's sequence number. */
@@ -129,50 +130,18 @@ object Cdc {
     spark.read.parquet(path).filter(!col(DeletedMeta))
       .drop(SeqMeta, DeletedMeta, RankMeta)
 
-  /** BUCKET-PRUNED [[applyChanges]] — the 100 TB form. [[applyChanges]]'s
-    * swap commit full-outer-joins the ENTIRE snapshot with each (typically
-    * tiny) change batch and rewrites every byte of the table: daily CDC at
-    * datalake scale pays a 100% read+write for a 0.1% churn. Here the
-    * snapshot lives in the [[Incremental.upsertByKeyBucketed]] layout
-    * (`path/b=K`, `K = pmod(xxhash64(key), nBuckets)`) and a batch merges
-    * and rewrites ONLY the buckets containing batch keys — untouched
-    * buckets are neither read nor written (LayoutSpec asserts they survive
-    * byte-identical). The merge RULE is exactly [[applyChanges]]'s
-    * seq-aware `(seq, op-rank)` argmax, so every out-of-order / replay /
-    * tie invariant holds per bucket (a key's entire history lives in one
-    * bucket — the bucket id is a pure function of the key), and the
-    * write-ahead-manifest per-bucket swap gives the same roll-forward
-    * crash story as the bucketed upsert. Read back with
-    * [[readTableBucketed]].
-    */
-  def applyChangesBucketed(
-      spark: SparkSession,
-      changes: DataFrame,
-      path: String,
-      key: String,
-      nBuckets: Int,
-      seqCol: String = "seq",
-      opCol: String = "op"): Unit =
-    Incremental.mergeBucketed(
-      spark, reduceBatch(changes, key, seqCol, opCol), path, key, nBuckets,
-      (existing, batch) => mergeSnapshots(existing, batch, key))
-
-  /** The live view of an [[applyChangesBucketed]] table: tombstones
-    * filtered, metadata and the physical bucket column dropped.
-    */
-  def readTableBucketed(spark: SparkSession, path: String): DataFrame =
-    Incremental.readBucketed(spark, path).filter(!col(DeletedMeta))
-      .drop(SeqMeta, DeletedMeta, RankMeta)
-
   /** RIGHT-TO-BE-FORGOTTEN sweep (GDPR art. 17 / CCPA deletion): tombstone
     * every given subject key in ONE delete batch at `seq` — callers pass a
     * seq ABOVE every applied change so the erasure out-ranks any stale
     * in-flight update (the sticky-tombstone property then keeps the
     * subject dead until [[pruneTombstones]] reclaims the bytes once the
     * source watermark passes the erasure). Works on the plain and the
-    * bucketed layout — on the bucketed one the sweep rewrites ONLY the
-    * buckets holding subject keys, the compliance-grade property at
-    * 100 TB (erasing 1k subjects must not cost a full-table rewrite).
+    * bucketed layout, read from the table itself: a [[BucketedSnapshots]]
+    * table (it has a committed version) is swept through
+    * [[BucketedSnapshots.applyChanges]] at the bucket count its manifest
+    * records, which rewrites ONLY the buckets holding subject keys — the
+    * compliance-grade property at 100 TB (erasing 1k subjects must not
+    * cost a full-table rewrite).
     *
     * Returns the ERASURE AUDIT, computed from the table and never
     * assumed: `(key, existed_before, exists_after)` — existed_before from
@@ -186,24 +155,28 @@ object Cdc {
       path: String,
       keys: DataFrame,
       keyCol: String,
-      seq: Long,
-      bucketed: Boolean = false,
-      nBuckets: Int = 16): DataFrame = {
+      seq: Long): DataFrame = {
+    val nBuckets = BucketedSnapshots.currentVersion(spark, path).map(v =>
+      BucketedSnapshots.readNBuckets(spark, path, v).getOrElse(
+        throw new IllegalStateException(
+          s"bucketed table at $path has no #nBuckets header — cannot bucket the erasure")))
     def liveView: DataFrame =
-      if (bucketed) readTableBucketed(spark, path) else readTable(spark, path)
+      if (nBuckets.isDefined) BucketedSnapshots.readTable(spark, path) else readTable(spark, path)
     val subjects = keys.select(col(keyCol)).distinct().localCheckpoint()
     val existedBefore = liveView.select(col(keyCol))
       .join(subjects, Seq(keyCol), "left_semi").distinct().localCheckpoint()
-    val table = if (bucketed) Incremental.readBucketed(spark, path)
+    val table = if (nBuckets.isDefined) BucketedSnapshots.readCurrent(spark, path)
       else spark.read.parquet(path)
     val payload = table.columns.toSeq
       .filterNot(c => c == keyCol || c == SeqMeta || c == DeletedMeta || c == RankMeta)
     val changes = subjects
       .select(Seq(col(keyCol), lit(seq).as("__seq"), lit("D").as("__op")) ++
         payload.map(c => lit(null).cast(table.schema(c).dataType).as(c)): _*)
-    if (bucketed) applyChangesBucketed(spark, changes, path, keyCol, nBuckets,
-      seqCol = "__seq", opCol = "__op")
-    else applyChanges(spark, changes, path, keyCol, seqCol = "__seq", opCol = "__op")
+    nBuckets match {
+      case Some(n) => BucketedSnapshots.applyChanges(spark, changes, path, keyCol, n,
+        seqCol = "__seq", opCol = "__op")
+      case None => applyChanges(spark, changes, path, keyCol, seqCol = "__seq", opCol = "__op")
+    }
     val after = liveView.select(col(keyCol))
       .join(subjects, Seq(keyCol), "left_semi").distinct()
     subjects
@@ -281,31 +254,6 @@ object Cdc {
       case None => scd2Intervals(batch, keyCol, tsCol, idCol, trackedCols)
       case Some(cur) => scd2Apply(cur, batch, keyCol, tsCol, idCol, trackedCols)
     }, keepVersions)
-
-  /** [[pruneTombstones]] for the bucketed layout: one pushed-down scan
-    * finds the buckets that actually HOLD a sub-watermark tombstone
-    * (parquet min/max stats on `_deleted`/`_seq` let row groups skip;
-    * the result is ≤ nBuckets ints on the driver), then only those
-    * buckets are filtered and rewritten — a GC pass whose write cost
-    * scales with the garbage, not the table. A bucket left holding ONLY
-    * prunable tombstones stages empty and is dropped outright
-    * (`dropMissing`); a crash mid-commit leaves un-pruned buckets with
-    * their semantically-invisible tombstones for the next pass.
-    */
-  def pruneTombstonesBucketed(spark: SparkSession, path: String, lowWatermark: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Incremental.recoverBucketed(fs, path)
-    val prunable = col(DeletedMeta) && col(SeqMeta) < lowWatermark
-    val touched = spark.read.parquet(path).filter(prunable)
-      .select(col("b").cast("int")).distinct()
-      .collect().map(_.getInt(0)).sorted.toIndexedSeq
-    if (touched.isEmpty) return
-    val kept = spark.read.parquet(path)
-      .filter(col("b").isin(touched.map(Int.box): _*)) // partition-pruned read
-      .filter(!prunable)
-    Incremental.stageAndCommitBuckets(spark, kept, path, touched, dropMissing = true)
-  }
 
   /** Drop tombstones the CDC source can no longer contradict: once the
     * source's low-watermark guarantees every in-flight change has

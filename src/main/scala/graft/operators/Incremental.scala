@@ -75,31 +75,10 @@ object Incremental {
   def overwriteTable(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
 
-  /** Keyed upsert: merge `updates` into the keyed table at `path` —
-    * last-writer-wins per key, preferring the update row. This is the
-    * Mongo-upsert equivalent (save_defi_features_features_db.py:28-34)
-    * realized as a keyed-overwrite: full-outer on the key, update wins.
-    * For a remote KV store, swap the write for `df.foreachPartition` with a
-    * bulk-upsert client; the dataflow upstream is identical.
-    *
-    * Durability contract (single-writer, rename-capable FS): the swap below
-    * is two renames, NOT atomic as a pair. A crash between rename(dst, old)
-    * and rename(tmp, dst) leaves no live directory at `path`; RECOVERY is
-    * manual but mechanical — whichever of `path__staging` (the fully
-    * written merge) or `path__old` (the pre-merge table) exists, rename it
-    * back to `path`; prefer `__staging` (it already contains the merge).
-    * Readers concurrent with the swap window can fail and should retry.
-    * On object stores (S3A) rename is a non-atomic O(data) copy, so that
-    * window is long — for such targets use a versioned-directory pointer
-    * (write `path/v=N+1`, then flip a small `_CURRENT` marker file whose
-    * single-object PUT IS atomic) or a table format with a commit protocol
-    * (Delta/Iceberg). Local/HDFS bench and test paths use this rename swap.
-    */
   /** SCHEMA EVOLUTION for the maintained-table sinks: align two frames to
     * their UNION-BY-NAME schema before a keyed merge — the missing side of
     * an added column is null-backfilled, so adding a column to a 100 TB
-    * maintained table is one ordinary commit (old rows read as NULL; the
-    * bucketed layouts read mixed-schema dirs back with `mergeSchema`).
+    * maintained table is one ordinary commit (old rows read as NULL).
     * Shared columns must keep their type (`sameType`, nullability-blind):
     * a retyped column is REJECTED up front — silently coercing it would
     * corrupt every historical row at merge time. Column order: the
@@ -149,6 +128,29 @@ object Incremental {
       .select(updCols.map(c => when(incomingWins, col(s"u_$c")).otherwise(col(c)).as(c)): _*)
   }
 
+  /** Keyed upsert: merge `updates` into the keyed table at `path` —
+    * last-writer-wins per key, preferring the update row. This is the
+    * Mongo-upsert equivalent (save_defi_features_features_db.py:28-34)
+    * realized as a keyed-overwrite: full-outer on the key, update wins.
+    * For a remote KV store, swap the write for `df.foreachPartition` with a
+    * bulk-upsert client; the dataflow upstream is identical.
+    *
+    * Durability contract (single-writer, rename-capable FS): the swap below
+    * is two renames, NOT atomic as a pair. A crash between rename(dst, old)
+    * and rename(tmp, dst) leaves no live directory at `path`; RECOVERY is
+    * manual but mechanical — whichever of `path__staging` (the fully
+    * written merge) or `path__old` (the pre-merge table) exists, rename it
+    * back to `path`; prefer `__staging` (it already contains the merge).
+    * Readers concurrent with the swap window can fail and should retry.
+    * On object stores (S3A) rename is a non-atomic O(data) copy, so that
+    * window is long — for such targets use a versioned-directory pointer
+    * (write `path/v=N+1`, then flip a small `_CURRENT` marker file whose
+    * single-object PUT IS atomic) or a table format with a commit protocol
+    * (Delta/Iceberg). Local/HDFS bench and test paths use this rename swap.
+    * A big keyed table whose batches touch few keys belongs in
+    * [[BucketedSnapshots.upsertByKey]], which rewrites only the touched
+    * buckets and commits with one pointer flip.
+    */
   def upsertByKey(spark: SparkSession, updates: DataFrame, path: String, key: String): Unit = {
     import org.apache.hadoop.fs.Path
     val dst = new Path(path)
@@ -200,248 +202,6 @@ object Incremental {
     }
     if (hadPrev) fs.delete(old, true)
   }
-
-  /** BUCKET-PRUNED keyed upsert — the 100 TB form of [[upsertByKey]]: the
-    * table lives as `nBuckets` hash-bucket subdirectories (`path/b=K`,
-    * `K = pmod(xxhash64(key), nBuckets)`) and an upsert merges and
-    * REWRITES ONLY the buckets that contain batch keys. [[upsertByKey]]'s
-    * parquet swap inherently rewrites the whole table per run; here a
-    * daily serve batch touching a few buckets rewrites a few buckets'
-    * bytes — the reference's daily Mongo upsert
-    * (save_defi_features_features_db.py:28-34) at datalake scale. The
-    * bucket id is a pure function of the key, so a merged row always lands
-    * back in the bucket it came from, and the untouched buckets are not
-    * even READ: one merge job over the touched subdirectories only.
-    *
-    * Commit: ONE staging write (partitioned by bucket), then the same
-    * two-rename swap as [[upsertByKey]] applied per touched bucket. A
-    * crash mid-sequence leaves every untouched bucket live and at most one
-    * bucket in the recoverable `__old` state (same manual recovery note as
-    * upsertByKey, scoped to that bucket). Same single-writer /
-    * rename-capable-FS contract as the rest of this family; object-store
-    * targets should use [[upsertByKeyVersioned]] semantics per bucket.
-    *
-    * Read the logical table back with [[readBucketed]].
-    */
-  def upsertByKeyBucketed(
-      spark: SparkSession,
-      updates: DataFrame,
-      path: String,
-      key: String,
-      nBuckets: Int): Unit =
-    mergeBucketed(spark, updates, path, key, nBuckets,
-      (existing, batch) => mergeByKey(existing, batch, key))
-
-  /** The shared touched-buckets-only machinery behind [[upsertByKeyBucketed]]
-    * and the CDC snapshot family ([[graft.operators.Cdc.applyChangesBucketed]]):
-    * identical layout, manifest, and per-bucket swap — only the keyed merge
-    * rule differs (last-writer-wins here, seq-aware there). `merge` sees
-    * (existing touched-bucket rows, batch rows) and must return rows whose
-    * key's bucket is unchanged (any pure function of the key qualifies).
-    */
-  private[graft] def mergeBucketed(
-      spark: SparkSession,
-      updates: DataFrame,
-      path: String,
-      key: String,
-      nBuckets: Int,
-      merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    require(nBuckets >= 1, "nBuckets must be >= 1")
-    require(!updates.columns.contains("b"),
-      "column name 'b' is reserved for the bucket layout — rename the payload column")
-    val bucketOf = pmod(xxhash64(col(key)), lit(nBuckets.toLong)).cast("int")
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a previous run may have died mid-commit: roll its manifest forward
-    // BEFORE reading current bucket state, or the merge below would read
-    // a half-swapped table (worst case: a bucket sitting in `__old` with
-    // no live dir — its unmatched keys would silently vanish)
-    recoverBucketed(fs, path)
-    // live bucket dirs in ONE listing (replaces per-bucket fs.exists
-    // probes — one RPC per bucket on a remote store); `b=K__old` leftovers
-    // fail the int parse and are excluded, same as the exact-name probes
-    val liveBuckets: Set[Int] =
-      if (!fs.exists(root)) Set.empty
-      else fs.listStatus(root).iterator.filter(_.isDirectory).flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("b=")) n.stripPrefix("b=").toIntOption else None
-      }.toSet
-    val staging = new Path(path + "__staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    if (liveBuckets.isEmpty) {
-      // FIRST commit (or an empty table): nothing to merge, so the batch
-      // stages DIRECTLY and the touched-bucket set falls out of the
-      // staging listing — the upstream batch DAG runs exactly once (the
-      // staged write), never a second time for bucket discovery
-      updates.withColumn("b", bucketOf)
-        .write.partitionBy("b").mode(SaveMode.Overwrite).parquet(staging.toString)
-      val touched = stagedBucketInts(fs, staging)
-      commitStagedBuckets(spark, fs, staging, path, touched)
-    } else {
-      // touched buckets: driver-small by construction (<= nBuckets ints)
-      val touched = updates.select(bucketOf.as("b")).distinct()
-        .collect().map(_.getInt(0)).sorted.toIndexedSeq
-      val existing = touched.filter(liveBuckets)
-      // one merge job: read ONLY the touched buckets' current rows.
-      // mergeSchema: after an evolving commit, buckets carry mixed schemas —
-      // union-by-name with null backfill is exactly the evolution contract
-      val merged =
-        if (existing.isEmpty) updates
-        else merge(
-          spark.read.option("mergeSchema", "true")
-            .parquet(existing.map(k => s"$path/b=$k"): _*),
-          updates)
-      merged.withColumn("b", bucketOf)
-        .write.partitionBy("b").mode(SaveMode.Overwrite).parquet(staging.toString)
-      commitStagedBuckets(spark, fs, staging, path, touched)
-    }
-  }
-
-  /** The staged `partitionBy("b")` dirs as sorted bucket ints — one
-    * listing, used where the staged write itself defines the touched set.
-    */
-  private def stagedBucketInts(
-      fs: org.apache.hadoop.fs.FileSystem,
-      staging: org.apache.hadoop.fs.Path): IndexedSeq[Int] =
-    if (!fs.exists(staging)) IndexedSeq.empty
-    else fs.listStatus(staging).iterator.filter(_.isDirectory).flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("b=")) n.stripPrefix("b=").toIntOption else None
-    }.toIndexedSeq.sorted
-
-  /** Stage `withB` (rows already carrying their `b` bucket column) and
-    * commit the listed buckets through the write-ahead-manifest two-rename
-    * protocol. `dropMissing = true` additionally DELETES a listed bucket
-    * whose staging dir is empty (every row of the bucket was filtered
-    * away — the tombstone-prune case); the default keeps it, matching the
-    * upsert path where an absent staging bucket means the batch's keys
-    * deduped away.
-    */
-  private[graft] def stageAndCommitBuckets(
-      spark: SparkSession,
-      withB: DataFrame,
-      path: String,
-      touched: Seq[Int],
-      dropMissing: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(path + "__staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    withB.write.partitionBy("b").mode(SaveMode.Overwrite).parquet(staging.toString)
-    commitStagedBuckets(spark, fs, staging, path, touched, dropMissing)
-  }
-
-  /** The commit tail of [[stageAndCommitBuckets]] for callers that staged
-    * the data themselves (the first-commit fast path in [[mergeBucketed]]).
-    */
-  private def commitStagedBuckets(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      staging: org.apache.hadoop.fs.Path,
-      path: String,
-      touched: Seq[Int],
-      dropMissing: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    // WRITE-AHEAD MANIFEST: batch intent (the touched bucket list) recorded
-    // AFTER staging is fully written and BEFORE the first rename — so a
-    // crash anywhere in the rename loop leaves both the intent and the
-    // complete merged data on disk, and recovery can always roll FORWARD
-    // to the state this batch was committing (never a partial mix).
-    // Atomic via write-temp-then-rename; cleared only after every bucket
-    // landed and staging is gone. Recovery replays commitBucket WITHOUT
-    // dropMissing: for a prune that crashed mid-commit the not-yet-dropped
-    // buckets keep their (semantically invisible) tombstones — a correct
-    // table either way, re-prunable by the next run.
-    fs.mkdirs(root)
-    val mf = new Path(path, "_MANIFEST")
-    val mtmp = new Path(path, "_MANIFEST.tmp")
-    val out = fs.create(mtmp, true)
-    out.write(touched.mkString("\n").getBytes("UTF-8"))
-    out.close()
-    if (fs.exists(mf)) fs.delete(mf, false)
-    if (!fs.rename(mtmp, mf))
-      throw new java.io.IOException(s"stageAndCommitBuckets: failed to write manifest $mf")
-    touched.foreach { k =>
-      if (dropMissing && !fs.exists(new Path(staging, s"b=$k")))
-        fs.delete(new Path(s"$path/b=$k"), true)
-      else commitBucket(fs, path, staging, k)
-    }
-    fs.delete(staging, true)
-    fs.delete(mf, false)
-  }
-
-  /** The per-bucket two-rename swap: stage `staging/b=k` into `path/b=k`
-    * with the previous dir held in `b=k__old` until the new one is in
-    * place. No-op if the staging dir for the bucket is absent (all the
-    * bucket's update keys deduped away, or — during recovery — the bucket
-    * already committed).
-    */
-  private def commitBucket(
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String,
-      staging: org.apache.hadoop.fs.Path,
-      k: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(s"$path/b=$k")
-    val tmp = new Path(staging, s"b=$k")
-    val old = new Path(s"$path/b=${k}__old")
-    if (fs.exists(tmp)) {
-      // a half-swap leaves dst ABSENT with the previous data in __old;
-      // tmp (the merged output) supersedes both, so the stale __old is
-      // safe to drop whether dst exists or not
-      if (fs.exists(old)) fs.delete(old, true)
-      val hadPrev = fs.exists(dst)
-      if (hadPrev && !fs.rename(dst, old))
-        throw new java.io.IOException(s"upsertByKeyBucketed: failed to move $dst aside")
-      if (!fs.rename(tmp, dst)) {
-        if (hadPrev) fs.rename(old, dst) // roll back this bucket
-        throw new java.io.IOException(s"upsertByKeyBucketed: failed to commit $tmp -> $dst")
-      }
-      if (hadPrev) fs.delete(old, true)
-    } else if (fs.exists(old) && !fs.exists(dst)) {
-      // committed-then-crashed window can't produce this (tmp is renamed,
-      // not copied), but a manual intervention might: restore the backup
-      // rather than leave the bucket invisible
-      if (!fs.rename(old, dst))
-        throw new java.io.IOException(s"upsertByKeyBucketed: failed to restore $old")
-    } else if (fs.exists(old)) {
-      fs.delete(old, true) // committed, cleanup interrupted: clear the backup
-    }
-  }
-
-  /** Roll forward an interrupted [[upsertByKeyBucketed]] commit: if a
-    * `_MANIFEST` exists, the previous run died between writing its staging
-    * data and clearing the manifest. Every listed bucket is re-driven
-    * through the same idempotent per-bucket swap (already-committed
-    * buckets no-op; half-swapped buckets complete from staging), then
-    * staging and the manifest are cleared — the table converges to the
-    * exact post-batch state the dead run was committing. Runs
-    * automatically at the start of every upsert; callers can also invoke
-    * it directly (e.g. a read path that wants strict freshness).
-    */
-  def recoverBucketed(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val mf = new Path(path, "_MANIFEST")
-    if (!fs.exists(mf)) return
-    val staging = new Path(path + "__staging")
-    val in = fs.open(mf)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    txt.split("\n").iterator.map(_.trim).filter(_.nonEmpty).map(_.toInt)
-      .foreach(k => commitBucket(fs, path, staging, k))
-    fs.delete(staging, true)
-    fs.delete(mf, false)
-  }
-
-  /** The logical view of an [[upsertByKeyBucketed]] table: all buckets,
-    * bucket column dropped. The physical `b=K` partitioning stays available
-    * to readers that filter on a key's bucket (partition pruning turns a
-    * point lookup into a one-bucket scan).
-    */
-  def readBucketed(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path).drop("b")
 
   /** Object-store-safe keyed upsert: versioned snapshot directories plus an
     * atomically-committed pointer file. This is the production path for

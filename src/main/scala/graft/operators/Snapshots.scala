@@ -52,9 +52,8 @@ class CommitConflictException(msg: String)
   * 100 TB note: this protocol rewrites the full snapshot per commit — use
   * it directly for state that is SMALL relative to its churn (sketch
   * state, dimension history, serve slices, index manifests). For a big
-  * keyed table, combine with the bucketed layout (the
-  * [[Incremental.upsertByKeyBucketed]] discipline) or commit per-bucket
-  * versioned dirs; the protocol is identical per directory.
+  * keyed table use [[BucketedSnapshots]], which commits per-bucket
+  * versioned dirs under one manifest and the same pointer protocol.
   */
 object Snapshots {
 

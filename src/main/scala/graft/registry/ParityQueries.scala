@@ -1459,10 +1459,10 @@ object ParityQueries {
       FROM base b FULL OUTER JOIN upd u ON b.user_id = u.user_id"""))
 
   /** The bucket-pruned twin of `snk_upsert_keyed`: same two upserts through
-    * [[Incremental.upsertByKeyBucketed]] (16 hash buckets, only touched
-    * buckets rewritten — LayoutSpec counts the untouched ones surviving
-    * byte-identical), same oracle — the layout must be invisible to the
-    * logical result.
+    * [[graft.operators.BucketedSnapshots.upsertByKey]] (16 hash buckets,
+    * only touched buckets rewritten — BucketedSnapshotsSpec counts the
+    * untouched dirs being reused), same oracle — the layout must be
+    * invisible to the logical result.
     */
   private val upsertBucketed = Q(
     "snk_upsert_bucketed",
@@ -1476,9 +1476,9 @@ object ParityQueries {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(p, true)
-      Incremental.upsertByKeyBucketed(s, base, path, "user_id", nBuckets = 16)
-      Incremental.upsertByKeyBucketed(s, upd, path, "user_id", nBuckets = 16)
-      Incremental.readBucketed(s, path)
+      graft.operators.BucketedSnapshots.upsertByKey(s, base, path, "user_id", nBuckets = 16)
+      graft.operators.BucketedSnapshots.upsertByKey(s, upd, path, "user_id", nBuckets = 16)
+      graft.operators.BucketedSnapshots.readCurrent(s, path)
     },
     Some(s"""WITH $EV,
       base AS (SELECT user_id, ${DS("value")} AS total, COUNT(*) AS n FROM ev WHERE epoch < $MidEpoch GROUP BY 1),
@@ -2192,13 +2192,13 @@ object ParityQueries {
 
   /** The bucket-pruned twin of `snk_cdc_apply` — same two out-of-order
     * batches, same direct-argmax oracle, but through
-    * [[graft.operators.Cdc.applyChangesBucketed]] (16 hash buckets, only
-    * touched buckets merged+rewritten; LayoutSpec counts untouched buckets
-    * surviving byte-identical) plus a [[graft.operators.Cdc
-    * .pruneTombstonesBucketed]] GC pass, which must leave the live view
-    * unchanged (it only drops sub-watermark tombstones — rows the oracle
-    * never sees). The layout and the GC must both be invisible to the
-    * logical result.
+    * [[graft.operators.BucketedSnapshots.applyChanges]] (16 hash buckets,
+    * only touched buckets merged+rewritten; CdcSpec counts untouched
+    * buckets being reused) plus a [[graft.operators.BucketedSnapshots
+    * .pruneTombstones]] GC pass, which must leave the live view unchanged
+    * (it only drops sub-watermark tombstones — rows the oracle never
+    * sees). The layout and the GC must both be invisible to the logical
+    * result.
     */
   private val cdcApplyBucketed = Q(
     "snk_cdc_apply_bucketed",
@@ -2214,12 +2214,12 @@ object ParityQueries {
       val path = "/root/repo/target/tmp/cdcb_" + d.replaceAll("[^A-Za-z0-9]", "_")
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      graft.operators.Cdc.applyChangesBucketed(
+      graft.operators.BucketedSnapshots.applyChanges(
         s, ch.filter(col("seq") % 2 === 1), path, "user_id", nBuckets = 16)
-      graft.operators.Cdc.applyChangesBucketed(
+      graft.operators.BucketedSnapshots.applyChanges(
         s, ch.filter(col("seq") % 2 === 0), path, "user_id", nBuckets = 16)
-      graft.operators.Cdc.pruneTombstonesBucketed(s, path, lowWatermark = Long.MaxValue)
-      graft.operators.Cdc.readTableBucketed(s, path)
+      graft.operators.BucketedSnapshots.pruneTombstones(s, path, lowWatermark = Long.MaxValue)
+      graft.operators.BucketedSnapshots.readTable(s, path)
     },
     Some(s"""WITH $EV,
       ch AS (SELECT user_id, event_id AS seq,
@@ -2234,7 +2234,8 @@ object ParityQueries {
 
   /** RIGHT-TO-BE-FORGOTTEN sweep over the bucketed CDC snapshot
     * ([[graft.operators.Cdc.eraseKeys]]): the `snk_cdc_apply_bucketed`
-    * table is built, then every `user_id % 23 = 5` subject is tombstoned
+    * table is built through [[graft.operators.BucketedSnapshots
+    * .applyChanges]], then every `user_id % 23 = 5` subject is tombstoned
     * in one delete batch ABOVE the applied seq range, rewriting only the
     * buckets holding subject keys. Output = the erasure AUDIT — computed
     * from the table (existed_before from a pre-apply probe, exists_after
@@ -2255,12 +2256,11 @@ object ParityQueries {
       val path = "/root/repo/target/tmp/cdce_" + d.replaceAll("[^A-Za-z0-9]", "_")
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      graft.operators.Cdc.applyChangesBucketed(s, ch, path, "user_id", nBuckets = 16)
+      graft.operators.BucketedSnapshots.applyChanges(s, ch, path, "user_id", nBuckets = 16)
       val maxSeq = ch.agg(max("seq")).head.getLong(0)
       val subjects = evDf(s, d).select("user_id")
         .where(pmod(col("user_id"), lit(23L)) === 5L).distinct()
-      graft.operators.Cdc.eraseKeys(s, path, subjects, "user_id",
-        seq = maxSeq + 1L, bucketed = true, nBuckets = 16)
+      graft.operators.Cdc.eraseKeys(s, path, subjects, "user_id", seq = maxSeq + 1L)
     },
     Some(s"""WITH $EV,
       ch AS (SELECT user_id, event_id AS seq,

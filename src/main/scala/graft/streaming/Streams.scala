@@ -130,6 +130,11 @@ object Streams {
     * .upsertByKey]]'s full-outer merge, so argmaxing them again would be a
     * redundant O(table) shuffle per micro-batch on top of the inherent
     * table rewrite.
+    *
+    * With `nBuckets` the serve table is a
+    * [[graft.operators.BucketedSnapshots]] table: each micro-batch rewrites
+    * only its buckets and commits with one pointer flip; read it with
+    * [[graft.operators.BucketedSnapshots.readCurrent]].
     */
   def upsertAvailableNow(
       stream: DataFrame,
@@ -145,14 +150,15 @@ object Streams {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         val cols = batch.columns
-        val dst = new org.apache.hadoop.fs.Path(outPath)
-        val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val existing =
-          if (!fs.exists(dst)) None
-          else Some(nBuckets match {
-            case Some(_) => graft.operators.Incremental.readBucketed(spark, outPath)
-            case None => spark.read.parquet(outPath)
-          })
+        val existing = nBuckets match {
+          case Some(_) =>
+            graft.operators.BucketedSnapshots.currentVersion(spark, outPath)
+              .map(v => graft.operators.BucketedSnapshots.readSnapshot(spark, outPath, v))
+          case None =>
+            val dst = new org.apache.hadoop.fs.Path(outPath)
+            val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            if (fs.exists(dst)) Some(spark.read.parquet(outPath)) else None
+        }
         val all = existing match {
           case None => batch
           case Some(e) => batch.unionByName(e.select(cols.map(col): _*)
@@ -167,10 +173,11 @@ object Streams {
           // at a corpus-sized serve table the full-rewrite form is the
           // classic per-micro-batch amplification (see corpusServe)
           case Some(n) =>
-            graft.operators.Incremental.upsertByKeyBucketed(spark, one, outPath, key, n)
+            graft.operators.BucketedSnapshots.upsertByKey(spark, one, outPath, key, n)
           case None =>
             graft.operators.Incremental.upsertByKey(spark, one, outPath, key)
         }
+        ()
       }
       .start()
 
@@ -185,7 +192,10 @@ object Streams {
     * apply of the whole stream regardless of slicing, ordering, or replay
     * (StreamsSpec proves multi-batch == batch; the registry row drains
     * hash-scattered files against the direct-argmax oracle). Read the live
-    * view with [[graft.operators.Cdc.readTable]].
+    * view with [[graft.operators.Cdc.readTable]]; with `nBuckets` the table
+    * is committed through [[graft.operators.BucketedSnapshots.applyChanges]]
+    * (touched buckets only) and read with
+    * [[graft.operators.BucketedSnapshots.readTable]].
     */
   def cdcApplyAvailableNow(
       stream: DataFrame,
@@ -201,11 +211,12 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) nBuckets match {
-          case Some(n) => graft.operators.Cdc.applyChangesBucketed(
+          case Some(n) => graft.operators.BucketedSnapshots.applyChanges(
             batch.sparkSession, batch, outPath, key, n, seqCol, opCol)
           case None => graft.operators.Cdc.applyChanges(
             batch.sparkSession, batch, outPath, key, seqCol, opCol)
         }
+        ()
       }
       .start()
 

@@ -15,8 +15,10 @@ import org.apache.spark.sql.SparkSession
   * compiled during that run (a warm run that still compiles has outgrown
   * the generated-code cache), and `procs`, the child processes the JVM
   * started during it ([[ProcessStarts]]; a local file system that forks
-  * `chmod` or `readlink` per file shows here). Wall-clock on this VM swings 2-3x minute to
-  * minute, so the optimization loop compares THESE numbers — scheduling
+  * `chmod` or `readlink` per file shows here; Spark's session-artifact
+  * cleanup, which runs when the GC gets to it, is not counted).
+  * Wall-clock on a shared host swings 2-3x minute to minute, so the
+  * optimization loop compares THESE numbers — scheduling
   * sync-points and bytes moved — which do not drift. Run with
   * SPARK_GRAFT_BENCH_ONLY to scope.
   */
@@ -82,11 +84,12 @@ object JobStats {
         (System.nanoTime() - t0) / 1e9
       }
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val nProcs = procs.count(e => ProcessStarts.attributable(ProcessStarts.frameClasses(e)))
       // drain the async bus so late events land in THIS query's counters
       // (PlanProbe drains the same way; the bus API is private[spark])
       org.apache.spark.sql.graftnative.PlanProbe.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
-      println(f"$name%-42s ${jobs.get}%5d ${stages.get}%7d ${tasks.get}%6d ${shufR.get / 1e6}%9.1f ${shufW.get / 1e6}%9.1f ${spill.get / 1e6}%9.1f $compiles%8d ${procs.size}%6d $dt%7.2f")
+      println(f"$name%-42s ${jobs.get}%5d ${stages.get}%7d ${tasks.get}%6d ${shufR.get / 1e6}%9.1f ${shufW.get / 1e6}%9.1f ${spill.get / 1e6}%9.1f $compiles%8d $nProcs%6d $dt%7.2f")
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       System.gc()

@@ -29,4 +29,16 @@ object ProcessStarts {
       } finally Files.deleteIfExists(f)
     } finally rec.close()
   }
+
+  /** The class names of a recorded event's stack frames, innermost first. */
+  def frameClasses(e: RecordedEvent): Seq[String] =
+    Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala.map(_.getMethod.getType.getName))
+
+  /** Whether a process start belongs to the measured work: Spark's
+    * `ArtifactManager` removes a garbage-collected session's artifact dir
+    * with a forked `rm -rf` on its cleaner thread, whenever the JVM's GC
+    * gets to it, so such a start says nothing about the code measured.
+    */
+  def attributable(frames: Seq[String]): Boolean =
+    !frames.exists(_.startsWith("org.apache.spark.sql.artifact.ArtifactManager"))
 }

@@ -288,7 +288,8 @@ class BucketedSnapshotsSpec extends SparkSpec {
     assert(ex1.getMessage.contains("reserved"))
     val pathR = fresh("reservedb_r")
     val ex2 = intercept[IllegalArgumentException] {
-      graft.operators.Incremental.upsertByKeyBucketed(spark, bad, pathR, "k", 4)
+      BucketedSnapshots.applyChanges(spark,
+        Seq((1L, 1L, "I", 1.0)).toDF("k", "seq", "op", "b"), pathR, "k", 4)
     }
     assert(ex2.getMessage.contains("reserved"))
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Cdc
+import graft.operators.{BucketedSnapshots, Cdc}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -114,7 +114,7 @@ class CdcSpec extends SparkSpec {
   }
 
   private def stateB(path: String): Set[(Long, String)] =
-    Cdc.readTableBucketed(spark, path).select("k", "v").as[(Long, String)].collect().toSet
+    BucketedSnapshots.readTable(spark, path).select("k", "v").as[(Long, String)].collect().toSet
 
   test("bucketed apply: slicing/order convergence, sticky tombstones, replay no-op") {
     val stream = Seq(
@@ -124,94 +124,102 @@ class CdcSpec extends SparkSpec {
       (4L, 5L, "I", "d"))
     val expected = Set((2L, "b8"), (3L, "c9"), (4L, "d"))
     val one = fresh("b_conv_one")
-    Cdc.applyChangesBucketed(spark, ch(stream: _*), one, "k", nBuckets = 4)
+    BucketedSnapshots.applyChanges(spark, ch(stream: _*), one, "k", nBuckets = 4)
     assert(stateB(one) == expected)
     // three interleaved batches applied newest-first
     val ooo = fresh("b_conv_ooo")
     Seq(2L, 0L, 1L).foreach { r =>
-      Cdc.applyChangesBucketed(spark, ch(stream.filter(_._2 % 3 == r): _*), ooo, "k", nBuckets = 4)
+      BucketedSnapshots.applyChanges(spark, ch(stream.filter(_._2 % 3 == r): _*), ooo, "k", nBuckets = 4)
     }
     assert(stateB(ooo) == expected)
     // replaying the middle batch changes nothing
-    Cdc.applyChangesBucketed(spark, ch(stream.filter(_._2 % 3 == 1): _*), ooo, "k", nBuckets = 4)
+    BucketedSnapshots.applyChanges(spark, ch(stream.filter(_._2 % 3 == 1): _*), ooo, "k", nBuckets = 4)
     assert(stateB(ooo) == expected)
     // stale update after the delete stays dead; a newer change resurrects
-    Cdc.applyChangesBucketed(spark, ch((1L, 5L, "U", "stale")), ooo, "k", nBuckets = 4)
+    BucketedSnapshots.applyChanges(spark, ch((1L, 5L, "U", "stale")), ooo, "k", nBuckets = 4)
     assert(stateB(ooo) == expected)
-    Cdc.applyChangesBucketed(spark, ch((1L, 11L, "I", "reborn")), ooo, "k", nBuckets = 4)
+    BucketedSnapshots.applyChanges(spark, ch((1L, 11L, "I", "reborn")), ooo, "k", nBuckets = 4)
     assert(stateB(ooo) == expected + ((1L, "reborn")))
   }
 
   test("bucketed apply: equal-seq D>U>I ties are slicing-invariant, as unbucketed") {
     val a = fresh("b_tie_a"); val b = fresh("b_tie_b")
-    Cdc.applyChangesBucketed(spark, ch((1L, 5L, "I", "i")), a, "k", nBuckets = 4)
-    Cdc.applyChangesBucketed(spark, ch((1L, 5L, "U", "u")), a, "k", nBuckets = 4)
-    Cdc.applyChangesBucketed(spark, ch((1L, 5L, "U", "u")), b, "k", nBuckets = 4)
-    Cdc.applyChangesBucketed(spark, ch((1L, 5L, "I", "i")), b, "k", nBuckets = 4)
+    BucketedSnapshots.applyChanges(spark, ch((1L, 5L, "I", "i")), a, "k", nBuckets = 4)
+    BucketedSnapshots.applyChanges(spark, ch((1L, 5L, "U", "u")), a, "k", nBuckets = 4)
+    BucketedSnapshots.applyChanges(spark, ch((1L, 5L, "U", "u")), b, "k", nBuckets = 4)
+    BucketedSnapshots.applyChanges(spark, ch((1L, 5L, "I", "i")), b, "k", nBuckets = 4)
     assert(stateB(a) == Set((1L, "u")) && stateB(b) == Set((1L, "u")))
     val c = fresh("b_tie_c"); val e = fresh("b_tie_d")
-    Cdc.applyChangesBucketed(spark, ch((1L, 5L, "D", "x")), c, "k", nBuckets = 4)
-    Cdc.applyChangesBucketed(spark, ch((1L, 5L, "U", "u")), c, "k", nBuckets = 4)
-    Cdc.applyChangesBucketed(spark, ch((1L, 5L, "U", "u")), e, "k", nBuckets = 4)
-    Cdc.applyChangesBucketed(spark, ch((1L, 5L, "D", "x")), e, "k", nBuckets = 4)
+    BucketedSnapshots.applyChanges(spark, ch((1L, 5L, "D", "x")), c, "k", nBuckets = 4)
+    BucketedSnapshots.applyChanges(spark, ch((1L, 5L, "U", "u")), c, "k", nBuckets = 4)
+    BucketedSnapshots.applyChanges(spark, ch((1L, 5L, "U", "u")), e, "k", nBuckets = 4)
+    BucketedSnapshots.applyChanges(spark, ch((1L, 5L, "D", "x")), e, "k", nBuckets = 4)
     assert(stateB(c).isEmpty && stateB(e).isEmpty)
   }
 
   test("bucketed apply: a small batch rewrites only its buckets; untouched survive byte-identical") {
     val base = fresh("b_touch")
-    val root = new org.apache.hadoop.fs.Path(base)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nBuckets = 16
     val all = (1L to 2000L).map(i => (i, i, "I", s"v$i"))
-    Cdc.applyChangesBucketed(spark, ch(all: _*), base, "k", nBuckets)
-    def snapshot(): Map[String, Seq[(String, Long, Long)]] =
-      fs.listStatus(root).filter(_.isDirectory).map { d =>
-        d.getPath.getName -> fs.listStatus(d.getPath).toSeq
-          .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sortBy(_._1)
-      }.toMap
-    val before = snapshot()
+    val v1 = BucketedSnapshots.applyChanges(spark, ch(all: _*), base, "k", nBuckets)
+    val m1 = BucketedSnapshots.readManifest(spark, base, v1)
+    def files(b: Int, bv: Long): Seq[(String, Long, Long)] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/b=$b/v=$bv")).toSeq
+        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sortBy(_._1)
+    val before = m1.map { case (b, bv) => b -> files(b, bv) }
     assert(before.size == nBuckets)
     val batch = ch((5L, 3000L, "U", "new5"), (6L, 3001L, "D", "x"), (2001L, 3002L, "I", "n"))
-    Cdc.applyChangesBucketed(spark, batch, base, "k", nBuckets)
-    val after = snapshot()
-    val changed = after.keySet.filter(b => before.get(b) != after.get(b))
+    val m2 = BucketedSnapshots.readManifest(spark, base,
+      BucketedSnapshots.applyChanges(spark, batch, base, "k", nBuckets))
+    val changed = m2.keySet.filter(b => m2(b) != m1(b))
     assert(changed.size <= 3 && changed.nonEmpty,
       s"a 3-key batch must rewrite <= 3 of $nBuckets buckets, rewrote: $changed")
-    assert((before.keySet -- changed).forall(b => before(b) == after(b)),
-      "untouched buckets must keep identical files (names, sizes, mtimes)")
+    assert((m1.keySet -- changed).forall(b => m2(b) == m1(b) && files(b, m1(b)) == before(b)),
+      "untouched buckets must keep their manifest entry and identical files (names, sizes, mtimes)")
     val got = stateB(base)
     assert(got.size == 2000) // 2000 - deleted key 6 + new key 2001
     assert(got((5L, "new5")) && got((2001L, "n")) && !got.exists(_._1 == 6L))
   }
 
-  test("pruneTombstonesBucketed: watermark-scoped GC; all-tombstone buckets dropped; live view unchanged") {
+  test("bucketed pruneTombstones: sub-watermark tombstones become key-delete sidecars") {
     val base = fresh("b_prune")
-    val root = new org.apache.hadoop.fs.Path(base)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nBuckets = 4
     val bucketOf = pmod(xxhash64(col("k")), lit(nBuckets.toLong)).cast("int")
     val k2b = (1L to 40L).map(i => (i, i)).toDF("k", "x")
       .select(col("k"), bucketOf.as("b")).as[(Long, Int)].collect().toMap
     val deadBucket = k2b(1L)
-    // keys in deadBucket: ALL deleted below the watermark (bucket should
-    // vanish); one live key + one above-watermark tombstone elsewhere
+    // keys in deadBucket: ALL deleted below the watermark (the bucket
+    // should read empty); one live key, one tombstone AT and one above
+    // the watermark elsewhere
     val deadKeys = (1L to 40L).filter(k2b(_) == deadBucket)
-    val liveKey = (1L to 40L).find(k2b(_) != deadBucket).get
-    val highTombKey = (1L to 40L).find(k => k2b(k) != deadBucket && k != liveKey).get
-    val rows = deadKeys.map(k => (k, k, "D", "x")) ++
-      Seq((liveKey, 100L, "I", "alive"), (highTombKey, 200L, "D", "x"))
-    Cdc.applyChangesBucketed(spark, ch(rows: _*), base, "k", nBuckets)
+    val others = (1L to 40L).filter(k2b(_) != deadBucket)
+    val Seq(liveKey, highTombKey, atTombKey) = others.take(3)
+    val rows = deadKeys.map(k => (k, k, "D", "x")) ++ Seq(
+      (liveKey, 100L, "I", "alive"), (highTombKey, 200L, "D", "x"), (atTombKey, 150L, "D", "x"))
+    val v1 = BucketedSnapshots.applyChanges(spark, ch(rows: _*), base, "k", nBuckets)
+    def tombstones(df: DataFrame): Set[Long] =
+      df.filter(col(Cdc.DeletedMeta)).select("k").as[Long].collect().toSet
     val before = stateB(base)
-    Cdc.pruneTombstonesBucketed(spark, base, lowWatermark = 150L)
+    val v2 = BucketedSnapshots.pruneTombstones(spark, base, lowWatermark = 150L)
+    assert(v2 > v1)
     assert(stateB(base) == before)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/b=$deadBucket")),
-      "a bucket holding only prunable tombstones must be dropped")
-    val raw = graft.operators.Incremental.readBucketed(spark, base)
-    assert(raw.filter(col(Cdc.DeletedMeta)).select("k").as[Long].collect().toSet
-      == Set(highTombKey), "the above-watermark tombstone must survive")
+    val raw = BucketedSnapshots.readCurrent(spark, base)
+    assert(raw.select("k").as[Long].collect().forall(k2b(_) != deadBucket),
+      "a bucket holding only prunable tombstones must read no rows")
+    assert(tombstones(raw) == Set(highTombKey, atTombKey),
+      "tombstones at or above the watermark must survive")
+    // sidecars only: no bucket data dir was rewritten
+    assert(BucketedSnapshots.readManifest(spark, base, v2) == BucketedSnapshots.readManifest(spark, base, v1))
+    // a version pinned before the prune still reads every tombstone
+    assert(tombstones(BucketedSnapshots.readSnapshot(spark, base, v1)) ==
+      deadKeys.toSet ++ Set(highTombKey, atTombKey))
     // idempotent second pass with nothing to prune
-    Cdc.pruneTombstonesBucketed(spark, base, lowWatermark = 150L)
+    assert(BucketedSnapshots.pruneTombstones(spark, base, lowWatermark = 150L) == v2)
     assert(stateB(base) == before)
+    // a post-watermark insert of a pruned key comes back exactly once
+    BucketedSnapshots.applyChanges(spark, ch((deadKeys.head, 160L, "I", "back")), base, "k", nBuckets)
+    assert(stateB(base) == before + ((deadKeys.head, "back")))
   }
 
   test("eraseKeys: subjects tombstoned above the seq range; audit computed from the table; stale updates stay dead") {
@@ -233,23 +241,15 @@ class CdcSpec extends SparkSpec {
 
   test("eraseKeys on the bucketed layout rewrites only subject buckets") {
     val base = fresh("erase_b")
-    val root = new org.apache.hadoop.fs.Path(base)
-    val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nBuckets = 16
-    Cdc.applyChangesBucketed(spark,
+    val v1 = BucketedSnapshots.applyChanges(spark,
       ch((1L to 2000L).map(i => (i, i, "I", s"v$i")): _*), base, "k", nBuckets)
-    def snapshot(): Map[String, Seq[(String, Long, Long)]] =
-      fsys.listStatus(root).filter(_.isDirectory).map { d0 =>
-        d0.getPath.getName -> fsys.listStatus(d0.getPath).toSeq
-          .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sortBy(_._1)
-      }.toMap
-    val before = snapshot()
-    val audit = Cdc.eraseKeys(spark, base, Seq(5L, 6L).toDF("k"), "k",
-      seq = 3000L, bucketed = true, nBuckets = nBuckets)
+    val audit = Cdc.eraseKeys(spark, base, Seq(5L, 6L).toDF("k"), "k", seq = 3000L)
       .as[(Long, Boolean, Boolean)].collect()
     assert(audit.forall(r => r._2 && !r._3))
-    val after = snapshot()
-    val changed = after.keySet.filter(b => before.get(b) != after.get(b))
+    val m1 = BucketedSnapshots.readManifest(spark, base, v1)
+    val m2 = BucketedSnapshots.readManifest(spark, base, BucketedSnapshots.currentVersion(spark, base).get)
+    val changed = m2.keySet.filter(b => m2(b) != m1(b))
     assert(changed.size <= 2 && changed.nonEmpty,
       s"erasing 2 subjects must rewrite <= 2 of $nBuckets buckets, rewrote $changed")
     assert(stateB(base).size == 1998)

@@ -176,13 +176,14 @@ class EmptyInputSpec extends SparkSpec {
     // bucketed CDC: empty change batch no-ops; eraseKeys with no subjects
     // audits empty
     val ch0 = Seq.empty[(Long, Long, String, String)].toDF("k", "seq", "op", "v")
-    graft.operators.Cdc.applyChangesBucketed(spark,
+    val c1 = graft.operators.BucketedSnapshots.applyChanges(spark,
       Seq((1L, 1L, "I", "a")).toDF("k", "seq", "op", "v"), s"$base/cdc", "k", 4)
-    graft.operators.Cdc.applyChangesBucketed(spark, ch0, s"$base/cdc", "k", 4)
-    assert(graft.operators.Cdc.readTableBucketed(spark, s"$base/cdc").count() == 1)
+    assert(graft.operators.BucketedSnapshots.applyChanges(spark, ch0, s"$base/cdc", "k", 4) == c1)
+    assert(graft.operators.BucketedSnapshots.readTable(spark, s"$base/cdc").count() == 1)
     assert(graft.operators.Cdc.eraseKeys(spark, s"$base/cdc",
-      Seq.empty[Long].toDF("k"), "k", seq = 99L, bucketed = true, nBuckets = 4)
-      .count() == 0)
+      Seq.empty[Long].toDF("k"), "k", seq = 99L).count() == 0)
+    assert(graft.operators.BucketedSnapshots.currentVersion(spark, s"$base/cdc").contains(c1),
+      "an erasure with no subjects must not advance the version")
     // media / tokenizer / assembly families
     assert(graft.operators.Multimodal.pixelPngCorpus(docs0, "doc_id").count() == 0)
     assert(graft.operators.Multimodal.pixelPairs(

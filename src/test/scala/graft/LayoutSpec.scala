@@ -73,97 +73,6 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
-  test("upsertByKeyBucketed: a small batch rewrites only its buckets; untouched buckets survive byte-identical") {
-    import graft.operators.Incremental
-    val base = "target/tmp/layout_bucket_upsert"
-    val root = new org.apache.hadoop.fs.Path(base)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
-    val nBuckets = 16
-    // base load: 2000 keys cover all 16 buckets
-    val all = (1L to 2000L).map(i => (i, i * 1.0)).toDF("k", "v")
-    Incremental.upsertByKeyBucketed(spark, all, base, "k", nBuckets)
-    def snapshot(): Map[String, Seq[(String, Long, Long)]] =
-      fs.listStatus(root).filter(_.isDirectory).map { d =>
-        d.getPath.getName -> fs.listStatus(d.getPath).toSeq
-          .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sortBy(_._1)
-      }.toMap
-    val before = snapshot()
-    assert(before.size == nBuckets, s"base load should populate all buckets, got ${before.size}")
-    // tiny batch: 3 keys -> at most 3 touched buckets
-    val batch = Seq((5L, 500.0), (6L, 600.0), (2001L, 1.5)).toDF("k", "v")
-    Incremental.upsertByKeyBucketed(spark, batch, base, "k", nBuckets)
-    val after = snapshot()
-    val changed = after.keySet.filter(b => before.get(b) != after.get(b))
-    assert(changed.size <= 3 && changed.nonEmpty,
-      s"a 3-key batch must rewrite <= 3 of $nBuckets buckets, rewrote: $changed")
-    assert((before.keySet -- changed).forall(b => before(b) == after(b)),
-      "untouched buckets must keep identical files (names, sizes, mtimes)")
-    // logical content: last-writer-wins merge
-    val got = Incremental.readBucketed(spark, base).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got.size == 2001)
-    assert(got(5L) == 500.0 && got(6L) == 600.0 && got(2001L) == 1.5 && got(7L) == 7.0)
-  }
-
-  test("upsertByKeyBucketed: a crash mid-rename-loop rolls forward via the manifest; no key lost") {
-    import graft.operators.Incremental
-    val base = "target/tmp/layout_bucket_crash"
-    val root = new org.apache.hadoop.fs.Path(base)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
-    fs.delete(new org.apache.hadoop.fs.Path(base + "__staging"), true)
-    val nBuckets = 16
-    val bucketOf = pmod(xxhash64(col("k")), lit(nBuckets.toLong)).cast("int")
-    val all = (1L to 2000L).map(i => (i, i * 1.0)).toDF("k", "v")
-    Incremental.upsertByKeyBucketed(spark, all, base, "k", nBuckets)
-    // pick three update keys landing in three DISTINCT buckets
-    val k2b = (1L to 50L).map(i => (i, i)).toDF("k", "x")
-      .select(col("k"), bucketOf.as("b")).as[(Long, Int)].collect().toMap
-    val keys = k2b.toSeq.sortBy(_._1).distinctBy(_._2).take(3).map(_._1)
-    assert(keys.size == 3)
-    val batch = keys.map(k => (k, k * 100.0)).toDF("k", "v")
-    val touched = keys.map(k2b).sorted
-    // manufacture the EXACT on-disk state of a run that died mid-loop:
-    // staging fully written (merged rows of the touched buckets),
-    // manifest recorded, bucket A committed, bucket B caught in the
-    // half-swap window (dst renamed to __old, tmp still in staging —
-    // the data-loss window: B's 100+ unmatched keys live ONLY in __old),
-    // bucket C untouched
-    val existingRows = spark.read.parquet(touched.map(b => s"$base/b=$b"): _*)
-    val merged = existingRows.join(batch.select(col("k")), Seq("k"), "left_anti")
-      .unionByName(batch)
-    merged.withColumn("b", bucketOf)
-      .write.partitionBy("b").mode("overwrite").parquet(base + "__staging")
-    val out = fs.create(new org.apache.hadoop.fs.Path(base, "_MANIFEST"), true)
-    out.write(touched.mkString("\n").getBytes("UTF-8")); out.close()
-    val Seq(bA, bB, _) = touched.toSeq
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    // A: fully committed
-    assert(fs.rename(p(s"$base/b=$bA"), p(s"$base/b=${bA}__old")))
-    assert(fs.rename(p(s"${base}__staging/b=$bA"), p(s"$base/b=$bA")))
-    fs.delete(p(s"$base/b=${bA}__old"), true)
-    // B: half-swapped (the crash point)
-    assert(fs.rename(p(s"$base/b=$bB"), p(s"$base/b=${bB}__old")))
-    // next batch triggers recovery on entry, then applies itself
-    val next = Seq((1000L, -1.0)).toDF("k", "v")
-    Incremental.upsertByKeyBucketed(spark, next, base, "k", nBuckets)
-    val got = Incremental.readBucketed(spark, base).as[(Long, Double)].collect().toMap
-    assert(got.size == 2000, s"no key may be lost, got ${got.size}")
-    keys.foreach(k => assert(got(k) == k * 100.0, s"update to $k must survive recovery"))
-    assert(got(1000L) == -1.0, "the post-recovery batch must apply")
-    // keys sharing bucket B but NOT updated must retain their base values
-    // (these are exactly the rows the half-swap window endangers)
-    val bBKeys = (1L to 2000L).map(i => (i, i)).toDF("k", "x")
-      .select(col("k"), bucketOf.as("b")).as[(Long, Int)].collect()
-      .filter(_._2 == bB).map(_._1).filterNot(k => keys.contains(k) || k == 1000L)
-    assert(bBKeys.nonEmpty)
-    bBKeys.foreach(k => assert(got(k) == k * 1.0, s"bucket-$bB key $k lost by recovery"))
-    // manifest and staging fully cleared; no __old residue
-    assert(!fs.exists(p(s"$base/_MANIFEST")) && !fs.exists(p(base + "__staging")))
-    assert(!fs.listStatus(root).exists(_.getPath.getName.endsWith("__old")))
-  }
-
   test("writeShuffledShards: identical shards and order across input partitionings; read-back matches the declared order") {
     import graft.sources.Layout
     val base = "target/tmp/layout_shard_shuffle"

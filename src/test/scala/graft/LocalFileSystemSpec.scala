@@ -82,6 +82,16 @@ class LocalFileSystemSpec extends SparkSpec {
     assert(spark.read.parquet(dir.resolve("plain").toString).count() == 100)
   }
 
+  test("JobStats' process count leaves out only Spark's session-artifact cleanup") {
+    val artifactCleanup = Seq("java.lang.ProcessBuilder", "org.apache.spark.network.util.JavaUtils",
+      "org.apache.spark.sql.artifact.ArtifactManager$StateCleanupRunner", "java.lang.Thread")
+    val chmod = Seq("java.lang.ProcessBuilder", "org.apache.hadoop.util.Shell",
+      "org.apache.hadoop.fs.RawLocalFileSystem", "org.apache.parquet.hadoop.ParquetFileWriter")
+    assert(!ProcessStarts.attributable(artifactCleanup))
+    assert(ProcessStarts.attributable(chmod))
+    assert(ProcessStarts.attributable(Nil), "a start without a recorded stack counts")
+  }
+
   test("files and dirs get the stock RawLocalFileSystem's permissions and checksums") {
     val dir = fresh("perms")
     val modes = Seq("777", "755", "750", "700", "644", "640", "604", "600", "444", "400", "000")

@@ -105,7 +105,7 @@ class StreamsSpec extends SparkSpec {
     Streams.cdcApplyAvailableNow(
       Streams.incrementalParquet(spark, s"$base/cin", s"$base/cin"),
       s"$base/cout", s"$base/cckpt", "k", nBuckets = Some(4)).awaitTermination()
-    assert(graft.operators.Cdc.readTableBucketed(spark, s"$base/cout")
+    assert(graft.operators.BucketedSnapshots.readTable(spark, s"$base/cout")
       .select("k", "v").as[(Long, String)].collect().toSet == Set((1L, "a5")))
     Seq((1L, 5L, 10.0), (1L, 7L, 11.0), (2L, 5L, 20.0)).toDF("k", "ver", "v")
       .write.parquet(s"$base/uin")
@@ -118,7 +118,7 @@ class StreamsSpec extends SparkSpec {
     Streams.upsertAvailableNow(
       Streams.incrementalParquet(spark, s"$base/uin", s"$base/uin"),
       s"$base/uout", s"$base/uckpt", "k", "ver", nBuckets = Some(4)).awaitTermination()
-    assert(graft.operators.Incremental.readBucketed(spark, s"$base/uout")
+    assert(graft.operators.BucketedSnapshots.readCurrent(spark, s"$base/uout")
       .as[(Long, Long, Double)].collect().toSet ==
       Set((1L, 7L, 11.0), (2L, 9L, 21.0)))
   }
