@@ -207,12 +207,8 @@ object BucketedSnapshots {
     * has no `v=N` data dirs for [[Snapshots.pointerState]] to check).
     */
   private def pointerState(
-      spark: SparkSession, path: String): Option[(Long, Seq[Long])] = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, path)
-    Snapshots.pointerStateRaw(spark, path)
-      .filter { case (v, _) => fs.exists(new Path(manifestPath(path, v))) }
-  }
+      spark: SparkSession, path: String): Option[(Long, Seq[Long])] =
+    pinnedPointer(spark, path)._1
 
   /** The live table version, if any (same pointer format as [[Snapshots]]). */
   def currentVersion(spark: SparkSession, path: String): Option[Long] =
@@ -536,17 +532,15 @@ object BucketedSnapshots {
       keepVersions, maxDvsPerBucket)
   }
 
-  /** The live pointer from ONE read: `(state, casBase)` for
-    * [[commitManifest]], so the version a commit's inputs come from is
-    * exactly the one its pointer flip CAS-checks.
+  /** [[Snapshots.pinnedPointer]] validated against this layout's
+    * manifests: `(state, casBase)` from ONE read of `_CURRENT`, so the
+    * version a commit's inputs come from is exactly the one its pointer
+    * flip CAS-checks.
     */
   private def pinnedPointer(
-      spark: SparkSession, path: String): (Option[(Long, Seq[Long])], Option[Long]) = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, path)
-    val raw = Snapshots.pointerStateRaw(spark, path)
-    (raw.filter { case (v, _) => fs.exists(new Path(manifestPath(path, v))) }, raw.map(_._1))
-  }
+      spark: SparkSession, path: String): (Option[(Long, Seq[Long])], Option[Long]) =
+    Snapshots.pinnedPointer(spark, path)(v =>
+      fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(manifestPath(path, v))))
 
   /** [[deleteKeys]]' commit against a pinned pointer (see
     * [[pinnedPointer]]): `keys` may be derived from that pinned version
@@ -795,13 +789,12 @@ object BucketedSnapshots {
     val fs = fsOf(spark, path)
     val (head, base) = branchState(spark, path, name).getOrElse(
       throw new java.io.FileNotFoundException(s"no branch '$name' at $path"))
-    val state = pointerState(spark, path)
+    val (state, casBase) = pinnedPointer(spark, path)
     val live = state.map(_._1).getOrElse(0L)
     if (live != base)
       throw new CommitConflictException(
         s"publish of branch '$name' at $path is not a fast-forward: main is at " +
           s"v=$live but the branch forked from v=$base — re-branch and replay; retry")
-    val casBase = Snapshots.pointerStateRaw(spark, path).map(_._1)
     Snapshots.checkPointerUnmoved(spark, path, casBase)
     val retained = (head +: state.map(_._2).getOrElse(Seq.empty)).distinct
       .sorted.reverse.take(keepVersions)
@@ -882,9 +875,9 @@ object BucketedSnapshots {
     val fs = fsOf(spark, path)
     val bucketOf = pmod(xxhash64(col(key)), lit(nBuckets.toLong)).cast("int")
     // the merge base: main's live version (+ the raw CAS base for the
-    // pointer flip, see Snapshots.commitWith) or the branch head
+    // pointer flip, from the same read) or the branch head
     val (state, casBase) = branch match {
-      case None => (pointerState(spark, path), Snapshots.pointerStateRaw(spark, path).map(_._1))
+      case None => pinnedPointer(spark, path)
       case Some(name) =>
         val head = branchState(spark, path, name).getOrElse(
           throw new java.io.FileNotFoundException(s"no branch '$name' at $path"))._1
@@ -1092,7 +1085,7 @@ object BucketedSnapshots {
       branch match {
         case Some(name) => branchBase(name)
         case None =>
-          val st2 = pointerState(spark, path)
+          val (st2, cb2) = pinnedPointer(spark, path)
           val cm2 = st2.map(s => readManifest(spark, path, s._1))
             .getOrElse(Map.empty[Int, Long])
           val cd2 = st2.map(s => readDvs(spark, path, s._1))
@@ -1108,7 +1101,7 @@ object BucketedSnapshots {
                 "— merge inputs are stale; re-read and retry")
           // our v=next manifest/sidecars are inert orphans (never pointed
           // to); later GCs age them out below the retention floor
-          st = st2; cb = Snapshots.pointerStateRaw(spark, path).map(_._1); cm = cm2; cd = cd2
+          st = st2; cb = cb2; cm = cm2; cd = cd2
       }
     }
     while (true) {
@@ -1990,10 +1983,9 @@ object BucketedSnapshots {
     require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
     require(keepVersions >= 1, "keepVersions must be >= 1")
     val fs = fsOf(spark, path)
-    val state = pointerState(spark, path)
+    val (state, casBase) = pinnedPointer(spark, path)
     val cur = state.map(_._1).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed snapshot under $path"))
-    val casBase = Snapshots.pointerStateRaw(spark, path).map(_._1)
     val curManifest = readManifest(spark, path, cur)
     def dataFiles(b: Int, bv: Long): Int =
       fs.listStatus(new Path(s"$path/b=$b/v=$bv")).count { st =>
@@ -2059,10 +2051,9 @@ object BucketedSnapshots {
     import org.apache.hadoop.fs.Path
     require(newNBuckets >= 1, "newNBuckets must be >= 1")
     val fs = fsOf(spark, path)
-    val state = pointerState(spark, path)
+    val (state, casBase) = pinnedPointer(spark, path)
     val cur = state.map(_._1).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed snapshot under $path"))
-    val casBase = Snapshots.pointerStateRaw(spark, path).map(_._1)
     require(!readNBuckets(spark, path, cur).contains(newNBuckets),
       s"table at $path already has nBuckets=$newNBuckets")
     val rows = readSnapshot(spark, path, cur)

@@ -41,6 +41,12 @@ import org.apache.spark.sql.functions._
   * as the upsert family; at datalake scale the table should live bucketed:
   * [[BucketedSnapshots.applyChanges]] applies this merge rule to the
   * touched buckets only and commits with one pointer flip.
+  *
+  * Every table here commits through the [[Snapshots]] pointer protocol
+  * ([[Snapshots.commitWith]]): the full next snapshot lands in `v=N+1`,
+  * then one atomic `_CURRENT` flip publishes it, so each commit returns
+  * its version and any retained version reads back through
+  * [[readTableAt]] / [[Snapshots.readSnapshot]].
   */
 object Cdc {
   /** Persisted per-row metadata: the winning change's sequence number. */
@@ -105,9 +111,10 @@ object Cdc {
   /** Apply one change batch to the snapshot table at `path` (created on
     * first use). `changes` = key + `seqCol` (LONG, totally ordering each
     * key's changes) + `opCol` ('I'|'U'|'D') + payload columns; the payload
-    * schema must stay stable across batches. Commit is the same two-rename
-    * staging swap as [[Incremental.upsertByKey]] (crash leaves the old
-    * table or a recoverable `__old`, never nothing).
+    * schema must stay stable across batches. Commit is the same pointer
+    * flip as [[Incremental.upsertByKey]]: a reader pinned at version N
+    * keeps reading exactly N while N+1 commits, and a crash leaves N
+    * live. Returns the committed version.
     */
   def applyChanges(
       spark: SparkSession,
@@ -115,20 +122,17 @@ object Cdc {
       path: String,
       key: String,
       seqCol: String = "seq",
-      opCol: String = "op"): Unit = {
+      opCol: String = "op"): Long = {
     val batch = reduceBatch(changes, key, seqCol, opCol)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (!fs.exists(dst)) batch
-      else mergeSnapshots(spark.read.parquet(path), batch, key)
-    Incremental.swapCommit(spark, merged, path)
+    Snapshots.commitWith(spark, path, {
+      case None => batch
+      case Some(cur) => mergeSnapshots(cur, batch, key)
+    })
   }
 
   /** The live view: tombstones filtered, metadata dropped. */
   def readTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).filter(!col(DeletedMeta))
-      .drop(SeqMeta, DeletedMeta, RankMeta)
+    stripMeta(Snapshots.readCurrent(spark, path))
 
   /** RIGHT-TO-BE-FORGOTTEN sweep (GDPR art. 17 / CCPA deletion): tombstone
     * every given subject key in ONE delete batch at `seq` — callers pass a
@@ -166,7 +170,7 @@ object Cdc {
     val existedBefore = liveView.select(col(keyCol))
       .join(subjects, Seq(keyCol), "left_semi").distinct().localCheckpoint()
     val table = if (nBuckets.isDefined) BucketedSnapshots.readCurrent(spark, path)
-      else spark.read.parquet(path)
+      else Snapshots.readCurrent(spark, path)
     val payload = table.columns.toSeq
       .filterNot(c => c == keyCol || c == SeqMeta || c == DeletedMeta || c == RankMeta)
     val changes = subjects
@@ -187,38 +191,11 @@ object Cdc {
         coalesce(col("__a"), lit(false)).as("exists_after"))
   }
 
-  /** [[applyChanges]] through the pointer-committed snapshot protocol
-    * ([[Snapshots]]) — the object-store-safe, time-travel form: every
-    * apply commits an immutable `v=N` snapshot plus an atomic pointer
-    * flip, so a concurrent reader pinned at version N keeps reading
-    * exactly version N while N+1 commits (no rename gap), and
-    * [[readTableAt]] reproduces any retained version. Returns the
-    * committed version. Merge rule identical to [[applyChanges]].
-    */
-  def applyChangesVersioned(
-      spark: SparkSession,
-      changes: DataFrame,
-      path: String,
-      key: String,
-      seqCol: String = "seq",
-      opCol: String = "op",
-      keepVersions: Int = 2): Long = {
-    val batch = reduceBatch(changes, key, seqCol, opCol)
-    Snapshots.commitWith(spark, path, {
-      case None => batch
-      case Some(cur) => mergeSnapshots(cur, batch, key)
-    }, keepVersions)
-  }
-
   private def stripMeta(df: DataFrame): DataFrame =
     df.filter(!col(DeletedMeta)).drop(SeqMeta, DeletedMeta, RankMeta)
 
-  /** Live view of an [[applyChangesVersioned]] table. */
-  def readTableVersioned(spark: SparkSession, path: String): DataFrame =
-    stripMeta(Snapshots.readCurrent(spark, path))
-
   /** CHANGE DATA FEED between two committed versions of an
-    * [[applyChangesVersioned]] table, on the LIVE (tombstone-filtered)
+    * [[applyChanges]] table, on the LIVE (tombstone-filtered)
     * view — a key tombstoned between the versions emits a real 'D' with
     * its pre-delete payload ([[Snapshots.readChangesBetween]] semantics;
     * the bucketed twin is
@@ -241,31 +218,19 @@ object Cdc {
   def readTableAt(spark: SparkSession, path: String, version: Long): DataFrame =
     stripMeta(Snapshots.readSnapshot(spark, path, version))
 
-  /** [[scd2ApplyTable]] through the [[Snapshots]] pointer commit — the
-    * dimension-history table with time travel over ITS OWN history: the
-    * SCD2 rows answer "what was the dimension at business time T", the
-    * snapshot version answers "what did the history TABLE look like as of
-    * commit N" (bitemporal when combined). Returns the committed version.
-    */
-  def scd2ApplyTableVersioned(spark: SparkSession, batch: DataFrame, path: String,
-      keyCol: String, tsCol: String, idCol: String, trackedCols: Seq[String],
-      keepVersions: Int = 2): Long =
-    Snapshots.commitWith(spark, path, {
-      case None => scd2Intervals(batch, keyCol, tsCol, idCol, trackedCols)
-      case Some(cur) => scd2Apply(cur, batch, keyCol, tsCol, idCol, trackedCols)
-    }, keepVersions)
-
   /** Drop tombstones the CDC source can no longer contradict: once the
     * source's low-watermark guarantees every in-flight change has
     * `seq >= lowWatermark`, a tombstone with `_seq < lowWatermark` can
     * never again out-rank an arriving change, so it is dead weight. Live
-    * rows are never pruned. Same swap commit as the apply path.
+    * rows are never pruned. Same pointer commit as the apply path (a
+    * version pinned before the prune still reads its tombstones); returns
+    * the committed version.
     */
-  def pruneTombstones(spark: SparkSession, path: String, lowWatermark: Long): Unit = {
-    val kept = spark.read.parquet(path)
-      .filter(!col(DeletedMeta) || col(SeqMeta) >= lowWatermark)
-    Incremental.swapCommit(spark, kept, path)
-  }
+  def pruneTombstones(spark: SparkSession, path: String, lowWatermark: Long): Long =
+    Snapshots.commitWith(spark, path, {
+      case None => throw new java.io.FileNotFoundException(s"no committed snapshot under $path")
+      case Some(cur) => cur.filter(!col(DeletedMeta) || col(SeqMeta) >= lowWatermark)
+    })
 
   /** SCD Type-2 dimension history from the same change stream
     * [[applyChanges]] consumes — where the snapshot table answers "what is
@@ -367,49 +332,38 @@ object Cdc {
   /** The persisted-table lifecycle of [[scd2Apply]] — [[applyChanges]]'s
     * shape for interval history: bootstrap on first batch
     * ([[scd2Intervals]] alone), incremental apply afterwards, same
-    * two-rename swap commit (crash leaves the old table or a recoverable
-    * `__old`, never nothing). IncrementalSpec-style lifecycle is covered
-    * in CdcSpec: bootstrap + N applies == one full rebuild.
+    * pointer commit. The SCD2 rows answer "what was the dimension at
+    * business time T", the committed version answers "what did the
+    * history TABLE look like as of commit N" (bitemporal when combined).
+    * Returns the committed version. Lifecycle covered in CdcSpec:
+    * bootstrap + N applies == one full rebuild.
     */
   def scd2ApplyTable(spark: SparkSession, batch: DataFrame, path: String,
-      keyCol: String, tsCol: String, idCol: String, trackedCols: Seq[String]): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (!fs.exists(dst)) scd2Intervals(batch, keyCol, tsCol, idCol, trackedCols)
-      else scd2Apply(spark.read.parquet(path), batch, keyCol, tsCol, idCol, trackedCols)
-    Incremental.swapCommit(spark, merged, path)
+      keyCol: String, tsCol: String, idCol: String, trackedCols: Seq[String]): Long =
+    Snapshots.commitWith(spark, path, scd2Next(batch, keyCol, tsCol, idCol, trackedCols))
+
+  private def scd2Next(batch: DataFrame, keyCol: String, tsCol: String, idCol: String,
+      trackedCols: Seq[String])(cur: Option[DataFrame]): DataFrame = cur match {
+    case None => scd2Intervals(batch, keyCol, tsCol, idCol, trackedCols)
+    case Some(existing) => scd2Apply(existing, batch, keyCol, tsCol, idCol, trackedCols)
   }
 
-  /** [[scd2ApplyTable]] with the APPLIED-BATCH manifest committed inside
-    * the same swap rename — the exactly-once form a streaming caller
-    * needs: unlike the CDC argmax or the sketch merges, SCD2 apply is NOT
-    * replay-idempotent (re-applying a batch would re-append its runs as
-    * duplicate versions), so at-least-once redelivery must be DETECTED.
-    * The manifest rides [[Incremental.swapCommitWith]]'s stageExtra, so a
+  /** [[scd2ApplyTable]] made exactly-once by [[Incremental.commitOnce]] —
+    * the form a streaming caller needs: unlike the CDC argmax or the
+    * sketch merges, SCD2 apply is NOT replay-idempotent (re-applying a
+    * batch would re-append its runs as duplicate versions), so
+    * at-least-once redelivery must be DETECTED. The applied-batch
+    * manifest commits inside the new version dir with the data, so a
     * crash between data commit and manifest write is impossible by
-    * construction (they are one rename); a replayed `batchId` ≤ the
-    * manifest is a no-op. Returns whether the batch applied. The
+    * construction; a replayed `batchId` ≤ the manifest is a no-op.
+    * Returns whether the batch applied. The
     * [[graft.streaming.Streams.scd2ApplyAvailableNow]] sink drives this.
     */
   def scd2ApplyTableBatch(spark: SparkSession, batch: DataFrame, path: String,
       keyCol: String, tsCol: String, idCol: String, trackedCols: Seq[String],
-      batchId: Long): Boolean = {
-    if (Incremental.readAppliedBatch(spark, path).exists(_ >= batchId)) return false
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path)))
-        scd2Intervals(batch, keyCol, tsCol, idCol, trackedCols)
-      else scd2Apply(spark.read.parquet(path), batch, keyCol, tsCol, idCol, trackedCols)
-    Incremental.swapCommitWith(spark, merged, path, stageDir => {
-      val out = fs.create(new org.apache.hadoop.fs.Path(stageDir, "_applied.json"), true)
-      try out.write(s"""{"appliedThrough":$batchId}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    })
-    true
-  }
+      batchId: Long): Boolean =
+    Incremental.commitOnce(spark, path, batchId)(
+      scd2Next(batch, keyCol, tsCol, idCol, trackedCols))
 
   /** POINT-IN-TIME lookup against a Type-2 dimension — "what was the
     * dimension row for this key when this fact happened": the standard

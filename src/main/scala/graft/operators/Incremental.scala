@@ -5,6 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Incremental-batch lifecycle: watermark reads, bounded catch-up filters,
   * append / full-refresh / keyed-upsert sinks (SURVEY.md §2.1, §2.7).
+  * The maintained tables here (keyed upsert, aggregate state) commit
+  * through the [[Snapshots]] pointer protocol: each commit writes the full
+  * next snapshot to `v=N+1` and flips `_CURRENT`; read them with
+  * [[Snapshots.readCurrent]] (or [[readAggState]]).
   *
   * The reference's mechanism is a scalar-subquery high-watermark
   * (`WHERE ts > (SELECT MAX(ts) FROM target)`,
@@ -135,108 +139,21 @@ object Incremental {
     * For a remote KV store, swap the write for `df.foreachPartition` with a
     * bulk-upsert client; the dataflow upstream is identical.
     *
-    * Durability contract (single-writer, rename-capable FS): the swap below
-    * is two renames, NOT atomic as a pair. A crash between rename(dst, old)
-    * and rename(tmp, dst) leaves no live directory at `path`; RECOVERY is
-    * manual but mechanical — whichever of `path__staging` (the fully
-    * written merge) or `path__old` (the pre-merge table) exists, rename it
-    * back to `path`; prefer `__staging` (it already contains the merge).
-    * Readers concurrent with the swap window can fail and should retry.
-    * On object stores (S3A) rename is a non-atomic O(data) copy, so that
-    * window is long — for such targets use a versioned-directory pointer
-    * (write `path/v=N+1`, then flip a small `_CURRENT` marker file whose
-    * single-object PUT IS atomic) or a table format with a commit protocol
-    * (Delta/Iceberg). Local/HDFS bench and test paths use this rename swap.
+    * Commit: [[Snapshots.commitWith]] — the merged snapshot lands in
+    * `v=N+1`, then one atomic `_CURRENT` flip publishes it, so a crash
+    * leaves `v=N` live and there is no window with no live table. The
+    * writer merges only from the pointer-committed version: a
+    * `_SUCCESS`-complete but never-committed snapshot is not a merge base.
+    * Read with [[Snapshots.readCurrent]]; returns the committed version.
     * A big keyed table whose batches touch few keys belongs in
     * [[BucketedSnapshots.upsertByKey]], which rewrites only the touched
-    * buckets and commits with one pointer flip.
+    * buckets.
     */
-  def upsertByKey(spark: SparkSession, updates: DataFrame, path: String, key: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(path)
-    // resolve the FS from the path URI so hdfs:///s3a:// targets get the
-    // right FileSystem — a java.io.File check would always be false there
-    // and silently replace the table with only the update slice.
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (!fs.exists(dst)) updates
-      else mergeByKey(spark.read.parquet(path), updates, key)
-    swapCommit(spark, merged, path)
-  }
-
-  /** Two-phase rename commit shared by the snapshot-rewriting sinks
-    * ([[upsertByKey]], [[graft.operators.Cdc.applyChanges]]): the merge
-    * reads `path`, so materialize to a staging dir first (Spark can't
-    * overwrite its own input), then swap with a backup kept until the new
-    * data is in place — a crash mid-swap leaves either the old table or a
-    * recoverable `__old` copy, never nothing. Local/HDFS rename contract;
-    * object-store targets use the [[upsertByKeyVersioned]] pointer flip.
-    */
-  private[graft] def swapCommit(spark: SparkSession, merged: DataFrame, path: String): Unit =
-    swapCommitWith(spark, merged, path, stageExtra = _ => ())
-
-  /** [[swapCommit]] with a hook that runs AGAINST THE STAGING DIR before
-    * the swap — anything it writes there (e.g. an applied-batch manifest)
-    * commits ATOMICALLY with the data in the one table rename, which is
-    * what makes [[aggStateApplyBatch]]'s replay guard exactly-once (a
-    * manifest written after a separate data commit would leave a
-    * double-count window on a crash between the two).
-    */
-  private[graft] def swapCommitWith(
-      spark: SparkSession, merged: DataFrame, path: String,
-      stageExtra: org.apache.hadoop.fs.Path => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + "__staging")
-    val old = new Path(path + "__old")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    stageExtra(tmp)
-    if (fs.exists(old)) fs.delete(old, true)
-    val hadPrev = fs.exists(dst)
-    if (hadPrev && !fs.rename(dst, old))
-      throw new java.io.IOException(s"swapCommit: failed to move $dst aside")
-    if (!fs.rename(tmp, dst)) {
-      if (hadPrev) fs.rename(old, dst) // roll back
-      throw new java.io.IOException(s"swapCommit: failed to commit $tmp -> $dst")
-    }
-    if (hadPrev) fs.delete(old, true)
-  }
-
-  /** Object-store-safe keyed upsert: versioned snapshot directories plus an
-    * atomically-committed pointer file. This is the production path for
-    * targets where directory rename is a non-atomic O(data) copy (S3A, GCS):
-    *
-    *   path/v=1/part-*.parquet        immutable committed snapshots
-    *   path/v=2/part-*.parquet
-    *   path/_CURRENT                  tiny marker holding the live version
-    *
-    * Commit = write the full merged snapshot to `v=N+1` (invisible to
-    * readers), then replace `_CURRENT` — a single small-object write that is
-    * all-or-nothing on object stores and an atomic `FileContext` overwrite-
-    * rename on HDFS/POSIX. A crash before the pointer flip leaves `v=N`
-    * live and `v=N+1` as inert garbage for the next run to overwrite; there
-    * is no window with no live table, unlike [[upsertByKey]]'s rename swap.
-    * Readers that race the flip see either version, both complete.
-    *
-    * If `_CURRENT` is missing or unreadable, [[readCurrent]] falls back to
-    * the highest snapshot directory that carries Spark's `_SUCCESS` marker,
-    * so even marker loss degrades to the last fully-written snapshot.
-    * Snapshots older than `keepVersions` are pruned after commit (kept > 1
-    * so a reader that resolved the pointer just before the flip can finish
-    * its scan).
-    */
-  def upsertByKeyVersioned(spark: SparkSession, updates: DataFrame, path: String, key: String,
-      keepVersions: Int = 2): Unit =
-    // the WRITER trusts only the pointer: merging from a _SUCCESS-complete
-    // but never-pointer-committed snapshot would resurrect an upsert the
-    // caller saw fail — Snapshots.commitWith implements exactly that
-    // contract (and the whole protocol is now shared by every versioned
-    // sink — see [[Snapshots]]).
+  def upsertByKey(spark: SparkSession, updates: DataFrame, path: String, key: String): Long =
     Snapshots.commitWith(spark, path, {
       case None => updates
       case Some(cur) => mergeByKey(cur, updates, key)
-    }, keepVersions)
+    })
 
   /** Serve-boundary schema: storage snake_case -> serve camelCase. The
     * reference renames `wallet_address` -> `walletAddress` when handing the
@@ -250,23 +167,14 @@ object Incremental {
   private[operators] def camelCase(s: String): String =
     "_([a-z0-9])".r.replaceAllIn(s, m => m.group(1).toUpperCase)
 
-  /** Read the live snapshot of a [[upsertByKeyVersioned]] table: the
-    * `_CURRENT` pointer, else — READ-SIDE RECOVERY ONLY, for a lost or
-    * corrupted marker — the highest `_SUCCESS`-complete snapshot. The
-    * writer never takes this fallback (see [[upsertByKeyVersioned]]): a
-    * reader degrading to the last complete snapshot is safe, a writer
-    * merging from one could commit an upsert the caller saw fail.
-    */
-  def readCurrent(spark: SparkSession, path: String): DataFrame =
-    Snapshots.readCurrent(spark, path)
-
   /** Incremental aggregate-view maintenance: a persisted per-key state
     * table of MERGEABLE partials — `(keys…, _sum decimal(38,6), _cnt,
     * _min, _max)` — folded batch by batch, so a 100 TB-history rollup
     * absorbs today's slice without ever recomputing history (the
-    * aggregate-table counterpart of [[Cdc.applyChanges]]; same swap
-    * commit). Because decimal sums, counts, and min/max are associative
-    * AND commutative, any batch slicing and any arrival order converge to
+    * aggregate-table counterpart of [[Cdc.applyChanges]]; same pointer
+    * commit, returns the committed version). Because decimal sums,
+    * counts, and min/max are associative AND commutative, any batch
+    * slicing and any arrival order converge to
     * the full-recompute state bit-for-bit — which is what lets
     * [[readAggState]]'s derived `avg` hash-match a from-scratch oracle.
     *
@@ -283,19 +191,15 @@ object Incremental {
       batch: DataFrame,
       path: String,
       keyCols: Seq[String],
-      measureCol: String): Unit =
-    swapCommit(spark, mergedAggState(spark, batch, path, keyCols, measureCol), path)
+      measureCol: String): Long =
+    Snapshots.commitWith(spark, path, mergedAggState(batch, keyCols, measureCol))
 
-  /** The merged-partials frame [[aggStateApply]] / [[aggStateApplyBatch]]
+  /** The merged-partials snapshot [[aggStateApply]] / [[aggStateApplyBatch]]
     * commit: the batch's map-side partial aggregation full-outer-merged
-    * into the existing state (or the partial alone on bootstrap).
+    * into the current state (or the partial alone on bootstrap).
     */
-  private def mergedAggState(
-      spark: SparkSession,
-      batch: DataFrame,
-      path: String,
-      keyCols: Seq[String],
-      measureCol: String): DataFrame = {
+  private def mergedAggState(batch: DataFrame, keyCols: Seq[String], measureCol: String)(
+      state: Option[DataFrame]): DataFrame = {
     require(keyCols.nonEmpty, "need at least one key column")
     val part = batch.groupBy(keyCols.map(col): _*)
       .agg(
@@ -303,11 +207,8 @@ object Incremental {
         count(col(measureCol)).as("_cnt"),
         min(col(measureCol)).as("_min"),
         max(col(measureCol)).as("_max"))
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dst)) part
-    else {
-      val st = spark.read.parquet(path)
+    state.fold(part) { cur =>
+      val st = cur
         .select(keyCols.map(col) ++
           Seq(col("_sum").as("_s0"), col("_cnt").as("_c0"),
             col("_min").as("_m0"), col("_max").as("_x0")): _*)
@@ -322,12 +223,8 @@ object Incremental {
   }
 
   /** [[aggStateApply]] guarded for AT-LEAST-ONCE delivery (the streaming
-    * foreachBatch contract): the applied-batch-id manifest
-    * (`_applied.json` INSIDE the table dir) commits atomically with the
-    * merged data in swapCommit's one table rename, so a replayed batch id
-    * is a detected no-op — there is no crash window where data committed
-    * but the manifest didn't. Batch ids must be monotone (Structured
-    * Streaming's are). Returns true iff the batch was applied.
+    * foreachBatch contract) through [[commitOnce]]: a replayed batch id
+    * is a detected no-op. Returns true iff the batch was applied.
     */
   def aggStateApplyBatch(
       spark: SparkSession,
@@ -335,24 +232,47 @@ object Incremental {
       path: String,
       keyCols: Seq[String],
       measureCol: String,
-      batchId: Long): Boolean = {
-    if (readAppliedBatch(spark, path).exists(_ >= batchId)) return false
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    swapCommitWith(spark,
-      mergedAggState(spark, batch, path, keyCols, measureCol), path,
-      stageDir => {
-        val out = fs.create(new org.apache.hadoop.fs.Path(stageDir, "_applied.json"), true)
+      batchId: Long): Boolean =
+    commitOnce(spark, path, batchId)(mergedAggState(batch, keyCols, measureCol))
+
+  /** The applied-batch manifest inside each committed version dir. */
+  private val AppliedManifest = "_applied.json"
+
+  /** [[Snapshots.commitWith]] made exactly-once for at-least-once
+    * delivery: the commit is declined when the version it merges from
+    * already applied `batchId`; otherwise the applied-batch manifest is
+    * written INTO `v=N+1` as the commit's `stageExtra`, so it lands with
+    * the data in the one pointer flip. The replay check reads the version
+    * the flip CAS-checks, so a racing commit that applies the batch first
+    * aborts this one ([[CommitConflictException]]) instead of counting it
+    * twice, and a `v=N+1` that carries a manifest but was never
+    * pointer-committed is never consulted. Batch ids must be monotone
+    * (Structured Streaming's are). Returns true iff the batch was applied.
+    */
+  private[graft] def commitOnce(spark: SparkSession, path: String, batchId: Long)(
+      f: Option[DataFrame] => DataFrame): Boolean = {
+    import org.apache.hadoop.fs.Path
+    Snapshots.commitFrom(spark, path,
+      cur =>
+        if (cur.flatMap(c => readAppliedBatch(spark, path, c._1)).exists(_ >= batchId)) None
+        else Some(f(cur.map(_._2))),
+      keepVersions = 2,
+      stageExtra = dir => {
+        val out = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .create(new Path(dir, AppliedManifest), true)
         try out.write(s"""{"appliedThrough":$batchId}"""
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         finally out.close()
-      })
-    true
+      }).isDefined
   }
 
-  private[graft] def readAppliedBatch(spark: SparkSession, path: String): Option[Long] = {
+  /** The batch id committed version `version` of the table at `path`
+    * applied through, if it carries a manifest ([[commitOnce]]).
+    */
+  private[graft] def readAppliedBatch(
+      spark: SparkSession, path: String, version: Long): Option[Long] = {
     import org.apache.hadoop.fs.Path
-    val p = new Path(s"$path/_applied.json")
+    val p = new Path(Snapshots.versionDir(path, version), AppliedManifest)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
@@ -374,7 +294,7 @@ object Incremental {
     * cast back to double), count, min, max, and the derived mean.
     */
   def readAggState(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Snapshots.readCurrent(spark, path)
       .withColumn("sum", col("_sum").cast("double"))
       .withColumn("cnt", col("_cnt"))
       .withColumn("min", col("_min"))

@@ -12,16 +12,15 @@ import org.apache.spark.sql.functions.{col, lit, when}
 class CommitConflictException(msg: String)
   extends java.util.ConcurrentModificationException(msg)
 
-/** Pointer-committed versioned snapshots with time travel — the
-  * object-store-safe commit protocol of [[Incremental.upsertByKeyVersioned]]
-  * generalized so EVERY maintained table (CDC snapshot, SCD2 history,
-  * sketch state, index builds) can commit through it instead of the
-  * two-rename directory swap, which has a reader-visible gap between
-  * renames and no way to pin a version — on an object store (no atomic
-  * rename) the difference between "works" and "corrupts a concurrent
-  * reader". This is the role Delta/Iceberg's metadata log plays, reduced
-  * to the minimum that gives atomic commit + snapshot isolation + time
-  * travel:
+/** Pointer-committed versioned snapshots with time travel — the one
+  * commit protocol of every unbucketed maintained table (keyed upsert
+  * [[Incremental.upsertByKey]], CDC snapshot [[Cdc.applyChanges]], SCD2
+  * history, sketch and aggregate state). A commit never renames a table
+  * directory, so there is no reader-visible gap and any retained version
+  * can be pinned — on an object store (no atomic rename) the difference
+  * between "works" and "corrupts a concurrent reader". This is the role
+  * Delta/Iceberg's metadata log plays, reduced to the minimum that gives
+  * atomic commit + snapshot isolation + time travel:
   *
   *   path/v=1/part-*.parquet     immutable committed snapshots
   *   path/v=2/part-*.parquet
@@ -64,16 +63,30 @@ object Snapshots {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Parse `_CURRENT`: (live version, retained committed versions). Legacy
-    * single-number markers ([[Incremental.upsertByKeyVersioned]]'s original
-    * format) parse as a one-entry history. None when the marker is absent,
-    * unparseable, or dangles (its live version has no directory).
+    * single-number markers (the protocol's original format) parse as a
+    * one-entry history. None when the marker is absent, unparseable, or
+    * dangles (its live version has no directory).
     */
   private[graft] def pointerState(
-      spark: SparkSession, path: String): Option[(Long, Seq[Long])] = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, path)
-    pointerStateRaw(spark, path)
-      .filter { case (v, _) => fs.exists(new Path(versionDir(path, v))) }
+      spark: SparkSession, path: String): Option[(Long, Seq[Long])] =
+    pinnedPointer(spark, path)(hasVersionDir(spark, path))._1
+
+  private def hasVersionDir(spark: SparkSession, path: String)(v: Long): Boolean =
+    fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(versionDir(path, v)))
+
+  /** The live pointer from ONE read of `_CURRENT`: `(state, casBase)` —
+    * the state, kept only if `valid` finds its live version in the
+    * layout, and the raw live version the flip CAS-checks
+    * ([[checkPointerUnmoved]]). One read is what makes the CAS exact: a
+    * commit landing after it moves the pointer off `casBase`, so the flip
+    * aborts instead of dropping that commit. A dangling pointer reads as
+    * no state but keeps its raw CAS base, so it is not mistaken for
+    * someone else's commit.
+    */
+  private[graft] def pinnedPointer(spark: SparkSession, path: String)(
+      valid: Long => Boolean): (Option[(Long, Seq[Long])], Option[Long]) = {
+    val raw = pointerStateRaw(spark, path)
+    (raw.filter { case (v, _) => valid(v) }, raw.map(_._1))
   }
 
   /** [[pointerState]] without the `v=N`-directory existence check — for
@@ -412,11 +425,11 @@ object Snapshots {
     * first use) and returns the full next snapshot. `stageExtra` runs
     * against the new version directory BEFORE the pointer flip, so
     * anything it writes there (an applied-batch manifest, index metadata)
-    * commits ATOMICALLY with the data — the [[Incremental.swapCommitWith]]
-    * exactly-once discipline, without the rename gap.
+    * commits ATOMICALLY with the data — the exactly-once discipline of
+    * [[Incremental.commitOnce]].
     *
     * Commit sequence (crash anywhere leaves a consistent table):
-    *   1. resolve current pointer        — crash: nothing happened
+    *   1. pin the pointer (one read)     — crash: nothing happened
     *   2. write v=N+1 (+ stageExtra)     — crash: inert orphan, v=N live
     *   3. CAS check: pointer unmoved     — crash/conflict: orphan, v live
     *   4. atomically replace _CURRENT    — the commit point
@@ -424,7 +437,7 @@ object Snapshots {
     *
     * Concurrency: step 3 re-reads `_CURRENT` and ABORTS with
     * [[CommitConflictException]] if the live version moved past the merge
-    * base resolved in step 1 — optimistic single-pointer CAS, so two
+    * base pinned in step 1 — optimistic single-pointer CAS, so two
     * racing committers can't silently last-writer-win each other's merged
     * state (the loser retries from the new base). On POSIX/HDFS the
     * check-then-rename window is sub-millisecond best-effort; an object
@@ -438,16 +451,28 @@ object Snapshots {
       path: String,
       f: Option[DataFrame] => DataFrame,
       keepVersions: Int = 2,
-      stageExtra: org.apache.hadoop.fs.Path => Unit = _ => ()): Long = {
+      stageExtra: org.apache.hadoop.fs.Path => Unit = _ => ()): Long =
+    commitFrom(spark, path, cur => Some(f(cur.map(_._2))), keepVersions, stageExtra).get
+
+  /** [[commitWith]] for a commit that may decline: `f` sees the pinned
+    * live version and its snapshot, and returns the next snapshot or None
+    * to commit nothing. Returns the committed version, if any.
+    */
+  private[graft] def commitFrom(
+      spark: SparkSession,
+      path: String,
+      f: Option[(Long, DataFrame)] => Option[DataFrame],
+      keepVersions: Int,
+      stageExtra: org.apache.hadoop.fs.Path => Unit): Option[Long] = {
     import org.apache.hadoop.fs.{FileContext, Options, Path}
     require(keepVersions >= 1, "keepVersions must be >= 1")
     val fs = fsOf(spark, path)
-    val state = pointerState(spark, path)
+    val (state, casBase) = pinnedPointer(spark, path)(hasVersionDir(spark, path))
     val cur = state.map(_._1)
-    // CAS base: the RAW pointer (unvalidated), so a dangling pointer that
-    // pointerState filtered away doesn't read as someone else's commit
-    val casBase = pointerStateRaw(spark, path).map(_._1)
-    val merged = f(cur.map(v => spark.read.parquet(versionDir(path, v))))
+    val merged = f(cur.map(v => v -> spark.read.parquet(versionDir(path, v)))) match {
+      case None => return None
+      case Some(m) => m
+    }
     // `next` floors over ALL v= dirs so an inert orphan's slot is never
     // re-used while a fallback reader might still resolve it
     val next = (cur.toSeq ++ allVersionDirs(spark, path)).foldLeft(0L)(math.max) + 1
@@ -480,7 +505,7 @@ object Snapshots {
     allVersionDirs(spark, path)
       .filter(v => !keep.contains(v) && v < floor)
       .foreach(v => fs.delete(new Path(versionDir(path, v)), true))
-    next
+    Some(next)
   }
 
   /** Optimistic-concurrency gate shared by [[Snapshots]] and

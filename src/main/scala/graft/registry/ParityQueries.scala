@@ -1,7 +1,7 @@
 package graft.registry
 
 import graft.functions.Scalars
-import graft.operators.{AsOfJoin, Incremental, Relational}
+import graft.operators.{AsOfJoin, Incremental, Relational, Snapshots}
 import graft.quality.Constraints
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1449,7 +1449,7 @@ object ParityQueries {
       fs.delete(p, true)
       Incremental.upsertByKey(s, base, path, "user_id")
       Incremental.upsertByKey(s, upd, path, "user_id")
-      s.read.parquet(path)
+      Snapshots.readCurrent(s, path)
     },
     Some(s"""WITH $EV,
       base AS (SELECT user_id, ${DS("value")} AS total, COUNT(*) AS n FROM ev WHERE epoch < $MidEpoch GROUP BY 1),
@@ -1834,7 +1834,7 @@ object ParityQueries {
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       Incremental.upsertByKey(s, aggOf(e.filter(col("epoch") < MidEpoch)), path, "wallet_address")
       Incremental.upsertByKey(s, aggOf(e.filter(col("epoch") >= MidEpoch)), path, "wallet_address")
-      Incremental.toServeSchema(s.read.parquet(path))
+      Incremental.toServeSchema(Snapshots.readCurrent(s, path))
     },
     Some(s"""WITH $EV,
       base AS (SELECT '0xw' || CAST(user_id AS VARCHAR) AS wa, ${DS("value")} AS total, COUNT(*) AS n
@@ -1922,9 +1922,9 @@ object ParityQueries {
       val path = "/root/repo/target/tmp/upsertv_" + d.replaceAll("[^A-Za-z0-9]", "_")
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      Incremental.upsertByKeyVersioned(s, aggOf(e.filter(col("epoch") < MidEpoch)), path, "user_id")
-      Incremental.upsertByKeyVersioned(s, aggOf(e.filter(col("epoch") >= MidEpoch)), path, "user_id")
-      Incremental.readCurrent(s, path)
+      Incremental.upsertByKey(s, aggOf(e.filter(col("epoch") < MidEpoch)), path, "user_id")
+      Incremental.upsertByKey(s, aggOf(e.filter(col("epoch") >= MidEpoch)), path, "user_id")
+      Snapshots.readCurrent(s, path)
     },
     Some(s"""WITH $EV,
       base AS (SELECT user_id, ${DS("value")} AS total, COUNT(*) AS n FROM ev WHERE epoch < $MidEpoch GROUP BY 1),
@@ -2299,13 +2299,13 @@ object ParityQueries {
       val path = "/root/repo/target/tmp/cdcv_" + d.replaceAll("[^A-Za-z0-9]", "_")
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val v1 = graft.operators.Cdc.applyChangesVersioned(
+      val v1 = graft.operators.Cdc.applyChanges(
         s, ch.filter(col("seq") % 2 === 1), path, "user_id")
-      graft.operators.Cdc.applyChangesVersioned(
+      graft.operators.Cdc.applyChanges(
         s, ch.filter(col("seq") % 2 === 0), path, "user_id")
       graft.operators.Cdc.readTableAt(s, path, v1).withColumn("snap", lit("pinned"))
         .unionByName(
-          graft.operators.Cdc.readTableVersioned(s, path).withColumn("snap", lit("current")))
+          graft.operators.Cdc.readTable(s, path).withColumn("snap", lit("current")))
     },
     Some(s"""WITH $EV,
       ch AS (SELECT user_id, event_id AS seq,
@@ -2728,7 +2728,7 @@ object ParityQueries {
   /** STREAMING SCD2 maintenance ([[graft.streaming.Streams
     * .scd2ApplyAvailableNow]]): the change stream drains as three
     * time-ordered micro-batches into the persisted Type-2 table — the
-    * applied-batch manifest (committed inside each swap) is what makes
+    * applied-batch manifest (committed inside each version) is what makes
     * the non-replay-idempotent apply exactly-once; the oracle rebuilds
     * the whole interval table from scratch, so sliced streaming == one
     * batch build, hash-checked row for row.
@@ -2753,7 +2753,7 @@ object ParityQueries {
       graft.streaming.Streams.scd2ApplyAvailableNow(stream,
         s"$base/out", s"$base/ckpt", "user_id", "ts", "event_id", Seq("event_type"))
         .awaitTermination()
-      s.read.parquet(s"$base/out")
+      Snapshots.readCurrent(s, s"$base/out")
     },
     Some(s"""WITH e AS (SELECT user_id, epoch_ns(ts) AS t, event_id AS id, event_type
         FROM events),

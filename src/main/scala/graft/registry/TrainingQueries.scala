@@ -4898,7 +4898,7 @@ object TrainingQueries {
       graft.streaming.Streams.upsertAvailableNow(
         stream, s"$base/out", s"$base/ckpt", "user_id", "epoch")
         .awaitTermination()
-      s.read.parquet(s"$base/out")
+      graft.operators.Snapshots.readCurrent(s, s"$base/out")
     },
     Some(s"""WITH $EV,
         r AS (SELECT user_id, epoch, event_id, value,
@@ -4969,7 +4969,7 @@ object TrainingQueries {
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
       graft.streaming.Streams.hllIngestAvailableNow(
         stream, "event_id", s"$base/state", s"$base/ckpt").awaitTermination()
-      s.read.parquet(s"$base/state")
+      graft.operators.Snapshots.readCurrent(s, s"$base/state")
     },
     Some(s"""WITH $EV, src AS (SELECT event_id AS k FROM ev), ${hllRegSql("src")}
       SELECT ridx, rmax FROM reg"""))
@@ -4977,7 +4977,7 @@ object TrainingQueries {
   /** Streaming aggregate-state ingest ([[graft.streaming.Streams
     * .aggStateIngestAvailableNow]]): per-event-type mergeable partials
     * drained in 1-file micro-batches into ONE persisted state table, the
-    * applied-batch manifest riding the table's own swap commit — the
+    * applied-batch manifest riding the table's own pointer commit — the
     * drained view must equal the from-scratch rollup (the
     * `snk_agg_incremental` oracle), which only holds if no batch applied
     * twice and none was lost.
@@ -5111,7 +5111,7 @@ object TrainingQueries {
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
       graft.streaming.Streams.kmvIngestAvailableNow(
         stream, "event_id", s"$base/state", s"$base/ckpt").awaitTermination()
-      s.read.parquet(s"$base/state")
+      graft.operators.Snapshots.readCurrent(s, s"$base/state")
     },
     Some(s"""WITH $EV,
       hs AS (SELECT DISTINCT ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))::BIGINT AS h

@@ -95,21 +95,21 @@ object Layout {
     * output file is a concatenation of input partitions, so a 100 TB
     * compaction moves no rows between executors.
     *
-    * Commit is the same two-rename swap as
-    * [[graft.operators.Incremental.upsertByKey]] (staging + `__old`
-    * backup), and inherits its CONTRACT: single writer, rename-capable
-    * filesystem, and NO concurrent readers across the swap — between the
-    * two renames the table path briefly does not exist, so a reader that
-    * lists it in that window fails (and should retry). A crash between the
-    * renames leaves the table absent until recovery, which is manual but
-    * mechanical: whichever of `path__staging` (the fully written
-    * compaction) or `path__old` (the pre-compaction table) exists, rename
-    * it back to `path` — both are complete, content-identical copies.
-    * Deployments needing reader-transparent maintenance should compact
-    * into a versioned-pointer layout
-    * ([[graft.operators.Incremental.upsertByKeyVersioned]]'s shape), where
-    * the pointer flip is atomic and readers never see a missing table.
-    * Content is row-identical by construction — layout only.
+    * Commit is the [[swapInPlace]] two-rename swap (staging + `__old`
+    * backup), because the table is plain Parquet that appending sinks and
+    * outside readers share; it carries the swap's CONTRACT: single writer,
+    * rename-capable filesystem, and NO concurrent readers across the swap
+    * — between the two renames the table path briefly does not exist, so
+    * a reader that lists it in that window fails (and should retry). A
+    * crash between the renames leaves the table absent until recovery,
+    * which is manual but mechanical: whichever of `path__staging` (the
+    * fully written compaction) or `path__old` (the pre-compaction table)
+    * exists, rename it back to `path` — both are complete,
+    * content-identical copies. Deployments needing reader-transparent
+    * maintenance keep the table in the [[graft.operators.Snapshots]]
+    * pointer layout instead, where the flip is atomic and readers never
+    * see a missing table. Content is row-identical by construction —
+    * layout only.
     */
   def compact(
       spark: SparkSession,
@@ -131,7 +131,8 @@ object Layout {
     * artifact (e.g. [[graft.operators.Similarity.ivfRebuild]]'s
     * index+centroids directory): `write` must produce a COMPLETE
     * replacement of `path` under the staging dir it is given; the swap
-    * then moves `path` aside to `path__old`, commits staging, and drops
+    * then moves `path` aside to `path__old` (when a table exists there —
+    * the first write just renames staging in), commits staging, and drops
     * the old copy. Same contract as [[compact]]: single writer,
     * rename-capable filesystem, no concurrent readers across the swap; a
     * crash between the renames leaves whichever of `path__staging` /
@@ -147,13 +148,14 @@ object Layout {
     if (fs.exists(tmp)) fs.delete(tmp, true)
     write(tmp.toString)
     if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(dst, old))
+    val hadPrev = fs.exists(dst)
+    if (hadPrev && !fs.rename(dst, old))
       throw new java.io.IOException(s"swapInPlace: failed to move $dst aside")
     if (!fs.rename(tmp, dst)) {
-      fs.rename(old, dst) // roll back
+      if (hadPrev) fs.rename(old, dst) // roll back
       throw new java.io.IOException(s"swapInPlace: failed to commit $tmp -> $dst")
     }
-    fs.delete(old, true)
+    if (hadPrev) fs.delete(old, true)
   }
 
   /** Zone-map manifest name under a [[writeZoneMapped]] table. */
@@ -393,10 +395,10 @@ object Layout {
     * global sort (the order key is per-shard, so no range exchange / skew
     * risk; shard sizes are balanced by the uniform hash).
     *
-    * Commit: staging write + the same two-rename swap as [[compact]] — a
-    * crash leaves the previous table (or a recoverable `__old`), never a
-    * half-written shuffle. Same single-writer / rename-capable-FS
-    * contract as the rest of the sink family.
+    * Commit: [[swapInPlace]], the same two-rename swap as [[compact]] —
+    * a crash leaves the previous table (or a recoverable `__old`), never
+    * a half-written shuffle. Same single-writer / rename-capable-FS
+    * contract as [[compact]].
     */
   def writeShuffledShards(
       df: DataFrame,
@@ -404,14 +406,7 @@ object Layout {
       idCol: String,
       nShards: Int,
       salt: String = "shuf"): Unit = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.functions.col
-    val spark = df.sparkSession
-    val dst = new Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + "__staging")
-    val old = new Path(path + "__old")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     val prepared = shardShuffleAssignment(df, idCol, nShards, salt)
       .repartition(nShards, col("shard"))
       .sortWithinPartitions(col("shard"), col("__ord"), col(idCol))
@@ -421,15 +416,7 @@ object Layout {
     // write the empty frame unpartitioned instead, so readers see an empty
     // schema-bearing table; the next non-empty write swaps the whole tree
     val w = prepared.write.mode(SaveMode.Overwrite)
-    (if (df.take(1).isEmpty) w else w.partitionBy("shard")).parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    val hadPrev = fs.exists(dst)
-    if (hadPrev && !fs.rename(dst, old))
-      throw new java.io.IOException(s"writeShuffledShards: failed to move $dst aside")
-    if (!fs.rename(tmp, dst)) {
-      if (hadPrev) fs.rename(old, dst) // roll back
-      throw new java.io.IOException(s"writeShuffledShards: failed to commit $tmp -> $dst")
-    }
-    if (hadPrev) fs.delete(old, true)
+    swapInPlace(df.sparkSession, path)(staging =>
+      (if (df.take(1).isEmpty) w else w.partitionBy("shard")).parquet(staging))
   }
 }

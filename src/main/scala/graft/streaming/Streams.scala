@@ -112,8 +112,9 @@ object Streams {
     * always-on form of the reference's daily features->serving load
     * (save_defi_features_features_db.py: overwrite per key), with
     * `foreachBatch` supplying exactly the batch-DataFrame seam the batch
-    * sink already implements. The upsert's two-phase swap keeps the serve
-    * table readable mid-commit.
+    * sink already implements. The upsert's pointer commit keeps the serve
+    * table readable mid-commit; read it with
+    * [[graft.operators.Snapshots.readCurrent]].
     *
     * HIGHEST VERSION WINS — globally, not latest-batch-wins: the batch is
     * unioned with the existing rows OF ITS OWN KEYS before the per-key
@@ -155,9 +156,8 @@ object Streams {
             graft.operators.BucketedSnapshots.currentVersion(spark, outPath)
               .map(v => graft.operators.BucketedSnapshots.readSnapshot(spark, outPath, v))
           case None =>
-            val dst = new org.apache.hadoop.fs.Path(outPath)
-            val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(dst)) Some(spark.read.parquet(outPath)) else None
+            graft.operators.Snapshots.currentVersion(spark, outPath)
+              .map(v => graft.operators.Snapshots.readSnapshot(spark, outPath, v))
         }
         val all = existing match {
           case None => batch
@@ -267,7 +267,7 @@ object Streams {
     * SCD2 apply is NOT replay-idempotent (a re-applied batch would
     * re-append its runs as duplicate versions), so exactly-once here is
     * DETECTED: the applied-batch manifest commits atomically inside the
-    * table swap and a replayed batchId is a no-op — the
+    * table's pointer commit and a replayed batchId is a no-op — the
     * [[aggStateIngestAvailableNow]] discipline on interval history.
     * Contract inherited from [[graft.operators.Cdc.scd2Apply]]: each
     * batch's `(tsCol, idCol)` must be strictly later than everything
@@ -303,23 +303,18 @@ object Streams {
     * one level simpler: register max is associative, commutative AND
     * idempotent, so foreachBatch's at-least-once replay and arbitrary
     * batch slicing are absorbed by the merge itself (a replayed batch
-    * max-merges to a no-op). Commit is the [[graft.operators.Incremental
-    * .swapCommit]] two-rename swap; read the state with
-    * `spark.read.parquet` and estimate with
-    * [[graft.functions.Sketches.hllEstimate]].
-    *
-    * `versioned = true` commits through the [[graft.operators.Snapshots]]
-    * pointer protocol instead: object-store-safe, and a monitoring reader
-    * can PIN a sketch version (e.g. "distinct keys as of yesterday's
-    * drain") while ingestion keeps committing — read with
-    * [[graft.operators.Snapshots.readCurrent]]/`readSnapshot`.
+    * max-merges to a no-op). Commit is the [[graft.operators.Snapshots]]
+    * pointer protocol: object-store-safe, and a monitoring reader can PIN
+    * a sketch version (e.g. "distinct keys as of yesterday's drain") while
+    * ingestion keeps committing. Read the state with
+    * [[graft.operators.Snapshots.readCurrent]]/`readSnapshot` and estimate
+    * with [[graft.functions.Sketches.hllEstimate]].
     */
   def hllIngestAvailableNow(
       stream: DataFrame,
       keyCol: String,
       statePath: String,
-      checkpoint: String,
-      versioned: Boolean = false): StreamingQuery =
+      checkpoint: String): StreamingQuery =
     stream.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
@@ -328,21 +323,11 @@ object Streams {
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
           val sk = graft.functions.Sketches.hllSketch(batch, col(keyCol))
-          if (versioned) {
-            graft.operators.Snapshots.commitWith(spark, statePath, {
-              case None => sk
-              case Some(cur) => graft.functions.Sketches.hllMerge(sk.unionByName(cur))
-            })
-            ()
-          } else {
-            val dst = new org.apache.hadoop.fs.Path(statePath)
-            val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val merged =
-              if (!fs.exists(dst)) sk
-              else graft.functions.Sketches.hllMerge(
-                sk.unionByName(spark.read.parquet(statePath)))
-            graft.operators.Incremental.swapCommit(spark, merged, statePath)
-          }
+          graft.operators.Snapshots.commitWith(spark, statePath, {
+            case None => sk
+            case Some(cur) => graft.functions.Sketches.hllMerge(sk.unionByName(cur))
+          })
+          ()
         }
       }
       .start()
@@ -354,14 +339,15 @@ object Streams {
     * idempotent, so at-least-once replay and arbitrary slicing are
     * absorbed by the merge). The at-rest state (≤ k rows) answers
     * distinct-count AND intersection questions against any other KMV
-    * sketch via [[graft.functions.Sketches.kmvIntersect2]].
+    * sketch via [[graft.functions.Sketches.kmvIntersect2]]. Same pointer
+    * commit as [[hllIngestAvailableNow]]; read with
+    * [[graft.operators.Snapshots.readCurrent]].
     */
   def kmvIngestAvailableNow(
       stream: DataFrame,
       keyCol: String,
       statePath: String,
-      checkpoint: String,
-      versioned: Boolean = false): StreamingQuery =
+      checkpoint: String): StreamingQuery =
     stream.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
@@ -370,21 +356,11 @@ object Streams {
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
           val sk = graft.functions.Sketches.kmvSketch(batch, col(keyCol))
-          if (versioned) {
-            graft.operators.Snapshots.commitWith(spark, statePath, {
-              case None => sk
-              case Some(cur) => graft.functions.Sketches.kmvMerge(sk.unionByName(cur))
-            })
-            ()
-          } else {
-            val dst = new org.apache.hadoop.fs.Path(statePath)
-            val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val merged =
-              if (!fs.exists(dst)) sk
-              else graft.functions.Sketches.kmvMerge(
-                sk.unionByName(spark.read.parquet(statePath)))
-            graft.operators.Incremental.swapCommit(spark, merged, statePath)
-          }
+          graft.operators.Snapshots.commitWith(spark, statePath, {
+            case None => sk
+            case Some(cur) => graft.functions.Sketches.kmvMerge(sk.unionByName(cur))
+          })
+          ()
         }
       }
       .start()
@@ -427,7 +403,9 @@ object Streams {
     * [[graft.operators.Incremental.aggStateApply]]: each micro-batch's
     * mergeable partials fold into the persisted per-key state through
     * [[graft.operators.Incremental.aggStateApplyBatch]], whose
-    * applied-batch manifest commits ATOMICALLY with the data — so
+    * applied-batch manifest commits ATOMICALLY with the data in the
+    * state table's pointer commit (read with
+    * [[graft.operators.Incremental.readAggState]]) — so
     * foreachBatch's at-least-once redelivery is a detected no-op, not a
     * double-count (a different discipline from the CMS/drift batch-id
     * subdirs: here the state is ONE merged table, so the guard must ride

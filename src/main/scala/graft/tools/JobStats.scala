@@ -20,7 +20,8 @@ import org.apache.spark.sql.SparkSession
   * Wall-clock on a shared host swings 2-3x minute to minute, so the
   * optimization loop compares THESE numbers — scheduling
   * sync-points and bytes moved — which do not drift. Run with
-  * SPARK_GRAFT_BENCH_ONLY to scope.
+  * SPARK_GRAFT_BENCH_ONLY (a comma list of registry rows, bench or not)
+  * to scope.
   */
 object JobStats {
   def main(args: Array[String]): Unit = {
@@ -63,8 +64,8 @@ object JobStats {
     }
     val qs = SparkEntryLike.queries
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val names = Registry.all.filter(_.bench).map(_.name)
-      .filter(n => only.forall(_.contains(n)))
+    // an explicit list names any registry row; no list means the bench rows
+    val names = Registry.all.filter(q => only.fold(q.bench)(_.contains(q.name))).map(_.name)
     println(f"${"query"}%-42s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s ${"shufR MB"}%9s ${"shufW MB"}%9s ${"spill MB"}%9s ${"compiles"}%8s ${"procs"}%6s ${"warm s"}%7s")
     names.foreach { name =>
       val run = qs(name)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{BucketedSnapshots, Cdc}
+import graft.operators.{BucketedSnapshots, Cdc, Snapshots}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -96,7 +96,7 @@ class CdcSpec extends SparkSpec {
     val before = state(path)
     Cdc.pruneTombstones(spark, path, lowWatermark = 7L)
     assert(state(path) == before)
-    val raw = spark.read.parquet(path)
+    val raw = Snapshots.readCurrent(spark, path)
     // the seq-3 tombstone is gone, the seq-9 one (still contradictable) stays
     assert(raw.filter(col(Cdc.DeletedMeta)).select("k").as[Long].collect().toSet == Set(2L))
     // a pre-watermark stale update for the pruned key is the caller's
@@ -318,7 +318,7 @@ class CdcSpec extends SparkSpec {
     assert(canon(chained) == full)
   }
 
-  test("scd2ApplyTable lifecycle: bootstrap + applies == one full rebuild; swap commit") {
+  test("scd2ApplyTable lifecycle: bootstrap + applies == one full rebuild; pointer commit") {
     val path = fresh("scd2t")
     val stream = (1 to 90).map(i => ((i % 4).toLong, i.toLong * 10, i.toLong, s"v${i % 3}"))
     val batches = stream.grouped(30).toSeq
@@ -327,7 +327,7 @@ class CdcSpec extends SparkSpec {
     }
     val full = Cdc.scd2Intervals(stream.toDF("k", "t", "id", "v"), "k", "t", "id", Seq("v"))
       .collect().map(_.toSeq).toSet
-    assert(spark.read.parquet(path).collect().map(_.toSeq).toSet == full)
+    assert(Snapshots.readCurrent(spark, path).collect().map(_.toSeq).toSet == full)
   }
 
   test("scd2Apply: extend, close, new-key and untouched-key cases") {

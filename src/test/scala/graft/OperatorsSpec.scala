@@ -291,33 +291,39 @@ class IncrementalSpec extends SparkSpec {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(p, true)
     Incremental.upsertByKey(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, "k")
-    Incremental.upsertByKey(spark, Seq((2L, "B"), (3L, "C")).toDF("k", "v"), path, "k")
-    val out = spark.read.parquet(path).as[(Long, String)].collect().toMap
+    val live = Incremental.upsertByKey(spark, Seq((2L, "B"), (3L, "C")).toDF("k", "v"), path, "k")
+    val out = Snapshots.readCurrent(spark, path).as[(Long, String)].collect().toMap
     assert(out == Map(1L -> "a", 2L -> "B", 3L -> "C"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__staging")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__old")))
+    // `_CURRENT` names the version the commit returned, and every v= dir
+    // on disk is a committed (retained) version — none left uncommitted
+    val marker = new org.apache.hadoop.fs.Path(p, "_CURRENT")
+    val in = fs.open(marker)
+    val head = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().next().trim
+      finally in.close()
+    assert(head == live.toString && Snapshots.currentVersion(spark, path).contains(live))
+    assert(Snapshots.allVersionDirs(spark, path).toSet == Snapshots.versions(spark, path).toSet)
   }
 
-  test("upsertByKeyVersioned: pointer commit, merge, prune, marker-loss fallback") {
+  test("upsertByKey: pointer commit, merge, prune, marker-loss fallback") {
     val path = "target/tmp/upsert_versioned_spec"
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(root, true)
-    Incremental.upsertByKeyVersioned(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, "k")
-    Incremental.upsertByKeyVersioned(spark, Seq((2L, "B"), (3L, "C")).toDF("k", "v"), path, "k")
-    Incremental.upsertByKeyVersioned(spark, Seq((4L, "d")).toDF("k", "v"), path, "k")
-    val out = Incremental.readCurrent(spark, path).as[(Long, String)].collect().toMap
+    Incremental.upsertByKey(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, "k")
+    Incremental.upsertByKey(spark, Seq((2L, "B"), (3L, "C")).toDF("k", "v"), path, "k")
+    Incremental.upsertByKey(spark, Seq((4L, "d")).toDF("k", "v"), path, "k")
+    val out = Snapshots.readCurrent(spark, path).as[(Long, String)].collect().toMap
     assert(out == Map(1L -> "a", 2L -> "B", 3L -> "C", 4L -> "d"))
     // keepVersions=2: v=1 pruned, v=2 retained for in-flight readers, v=3 live
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/v=1")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/v=2")))
     // a lost pointer degrades to the highest _SUCCESS-committed snapshot
     fs.delete(new org.apache.hadoop.fs.Path(root, "_CURRENT"), false)
-    val fallback = Incremental.readCurrent(spark, path).as[(Long, String)].collect().toMap
+    val fallback = Snapshots.readCurrent(spark, path).as[(Long, String)].collect().toMap
     assert(fallback == out)
   }
 
-  test("upsertByKeyVersioned: a never-pointer-committed snapshot is not a merge base") {
+  test("upsertByKey: a never-pointer-committed snapshot is not a merge base") {
     val path = "target/tmp/upsert_versioned_orphan_spec"
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -325,8 +331,8 @@ class IncrementalSpec extends SparkSpec {
     // simulate a crash after the v=1 snapshot write (it carries _SUCCESS)
     // but before the first pointer flip: the contract says v=1 is inert
     Seq((1L, "ghost")).toDF("k", "v").write.parquet(s"$path/v=1")
-    Incremental.upsertByKeyVersioned(spark, Seq((2L, "b")).toDF("k", "v"), path, "k")
-    val out = Incremental.readCurrent(spark, path).as[(Long, String)].collect().toMap
+    Incremental.upsertByKey(spark, Seq((2L, "b")).toDF("k", "v"), path, "k")
+    val out = Snapshots.readCurrent(spark, path).as[(Long, String)].collect().toMap
     assert(out == Map(2L -> "b"), "ghost row resurrected from uncommitted snapshot")
     // the writer skipped past the orphan instead of re-using its slot
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/v=2")))

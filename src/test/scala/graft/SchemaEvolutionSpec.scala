@@ -25,7 +25,7 @@ class SchemaEvolutionSpec extends SparkSpec {
       Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v"), path, "k")
     Incremental.upsertByKey(spark,
       Seq((2L, 20.0, "fresh"), (3L, 3.0, "new")).toDF("k", "v", "tag"), path, "k")
-    val got = spark.read.parquet(path).select("k", "v", "tag")
+    val got = Snapshots.readCurrent(spark, path).select("k", "v", "tag")
       .as[(Long, Double, Option[String])].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got == Map(
@@ -86,7 +86,7 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(ex.getMessage.contains("incompatible schema change"))
     assert(BucketedSnapshots.currentVersion(spark, path).contains(v1),
       "the failed commit must leave the live version unchanged")
-    // swap-table sink rejects the same way
+    // the full-snapshot sink rejects the same way
     val p2 = fresh("retype2")
     Incremental.upsertByKey(spark, Seq((1L, 1.0)).toDF("k", "v"), p2, "k")
     intercept[IllegalArgumentException] {
@@ -142,11 +142,11 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("seq-aware CDC merge (versioned, non-bucketed) evolves too") {
     val path = fresh("cdcv")
-    Cdc.applyChangesVersioned(spark,
+    Cdc.applyChanges(spark,
       Seq((1L, 1L, "I", "a")).toDF("k", "seq", "op", "v"), path, "k")
-    Cdc.applyChangesVersioned(spark,
+    Cdc.applyChanges(spark,
       Seq((1L, 5L, "U", "a5", 9L)).toDF("k", "seq", "op", "v", "w"), path, "k")
-    val got = Cdc.readTableVersioned(spark, path).select("k", "v", "w")
+    val got = Cdc.readTable(spark, path).select("k", "v", "w")
       .as[(Long, String, Option[Long])].collect().toSet
     assert(got == Set((1L, "a5", Some(9L))))
   }

@@ -201,11 +201,11 @@ class SnapshotsSpec extends SparkSpec {
   test("versioned CDC apply: out-of-order convergence + pinned-version live view") {
     val path = fresh("cdc")
     def chg(rows: (Long, Long, String, String)*) = rows.toDF("k", "seq", "op", "v")
-    val v1 = Cdc.applyChangesVersioned(spark,
+    val v1 = Cdc.applyChanges(spark,
       chg((1L, 1L, "I", "a"), (2L, 8L, "U", "b8"), (3L, 9L, "I", "c9")), path, "k")
-    Cdc.applyChangesVersioned(spark,
+    Cdc.applyChanges(spark,
       chg((1L, 7L, "D", "x"), (2L, 2L, "I", "stale")), path, "k")
-    assert(rows(Cdc.readTableVersioned(spark, path)) == Set((2L, "b8"), (3L, "c9")))
+    assert(rows(Cdc.readTable(spark, path)) == Set((2L, "b8"), (3L, "c9")))
     // the pinned v1 live view still shows key 1 (the delete came in v2)
     assert(rows(Cdc.readTableAt(spark, path, v1)) ==
       Set((1L, "a"), (2L, "b8"), (3L, "c9")))
@@ -221,7 +221,7 @@ class SnapshotsSpec extends SparkSpec {
         .schema(Seq(1L).toDF("k").schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
       graft.streaming.Streams.hllIngestAvailableNow(
-        stream, "k", s"$base/state", s"$base/ckpt", versioned = true)
+        stream, "k", s"$base/state", s"$base/ckpt")
         .awaitTermination()
     }
     drain()
@@ -241,8 +241,8 @@ class SnapshotsSpec extends SparkSpec {
     val path = fresh("scd2v")
     val b1 = Seq((1L, 10L, 1L, "a"), (2L, 10L, 2L, "x")).toDF("k", "t", "id", "v")
     val b2 = Seq((1L, 30L, 3L, "b"), (3L, 35L, 4L, "n")).toDF("k", "t", "id", "v")
-    val v1 = Cdc.scd2ApplyTableVersioned(spark, b1, path, "k", "t", "id", Seq("v"))
-    Cdc.scd2ApplyTableVersioned(spark, b2, path, "k", "t", "id", Seq("v"))
+    val v1 = Cdc.scd2ApplyTable(spark, b1, path, "k", "t", "id", Seq("v"))
+    Cdc.scd2ApplyTable(spark, b2, path, "k", "t", "id", Seq("v"))
     val full = Cdc.scd2Intervals(
       b1.unionByName(b2), "k", "t", "id", Seq("v")).collect().map(_.toSeq).toSet
     assert(Snapshots.readCurrent(spark, path).collect().map(_.toSeq).toSet == full)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Snapshots
 import graft.streaming.Streams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -46,7 +47,7 @@ class StreamsSpec extends SparkSpec {
     Streams.upsertAvailableNow(
       Streams.incrementalParquet(spark, in, in), out, ckpt, "k", "ver")
       .awaitTermination()
-    assert(spark.read.parquet(out).as[(Long, Long, Double)].collect().toSet ==
+    assert(Snapshots.readCurrent(spark, out).as[(Long, Long, Double)].collect().toSet ==
       Set((1L, 7L, 11.0), (2L, 5L, 20.0)))
 
     // batch 2: update key 2 (newer), insert key 3, and a STALE row for
@@ -56,7 +57,7 @@ class StreamsSpec extends SparkSpec {
     Streams.upsertAvailableNow(
       Streams.incrementalParquet(spark, in, in), out, ckpt, "k", "ver")
       .awaitTermination()
-    assert(spark.read.parquet(out).as[(Long, Long, Double)].collect().toSet ==
+    assert(Snapshots.readCurrent(spark, out).as[(Long, Long, Double)].collect().toSet ==
       Set((1L, 7L, 11.0), (2L, 9L, 21.0), (3L, 9L, 30.0)))
   }
 
@@ -82,13 +83,13 @@ class StreamsSpec extends SparkSpec {
     }
     drain()
     def table(): Set[Seq[Any]] =
-      spark.read.parquet(s"$base/out").collect().map(_.toSeq).toSet
+      Snapshots.readCurrent(spark, s"$base/out").collect().map(_.toSeq).toSet
     val got = table()
     val full = graft.operators.Cdc.scd2Intervals(ch, "k", "t", "id", Seq("v"))
       .collect().map(_.toSeq).toSet
     assert(got == full, "sliced streaming build must equal the from-scratch table")
     // a wiped checkpoint replays every batch: the applied-batch manifest
-    // (committed inside the swap) must make each one a no-op — a
+    // (committed inside each version) must make each one a no-op — a
     // re-applied SCD2 batch would otherwise append duplicate versions
     fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt"), true)
     drain()
@@ -168,7 +169,7 @@ class StreamsSpec extends SparkSpec {
     Streams.hllIngestAvailableNow(
       Streams.incrementalParquet(spark, in, in), "k", state, ckpt).awaitTermination()
     def stateRegs: Map[Long, Long] =
-      spark.read.parquet(state).as[(Long, Long)].collect().toMap
+      Snapshots.readCurrent(spark, state).as[(Long, Long)].collect().toMap
     val direct1 = graft.functions.Sketches
       .hllSketch((0L until 5000L).toDF("k"), col("k")).as[(Long, Long)].collect().toMap
     assert(stateRegs == direct1)
@@ -181,7 +182,7 @@ class StreamsSpec extends SparkSpec {
       .hllSketch((0L until 9000L).toDF("k"), col("k")).as[(Long, Long)].collect().toMap
     assert(stateRegs == direct2)
     // and the estimate off the 256-row state is in band
-    val (est, _) = graft.functions.Sketches.hllEstimate(spark.read.parquet(state))
+    val (est, _) = graft.functions.Sketches.hllEstimate(Snapshots.readCurrent(spark, state))
       .as[(Long, Boolean)].head()
     assert(math.abs(est - 9000L) <= 1800L, s"state estimate $est off 9000 by >20%")
   }
@@ -479,9 +480,37 @@ class StreamsSpec extends SparkSpec {
       .select("g", "sum", "cnt").as[(String, Double, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(st == Map("a" -> ((9.0, 3L)), "b" -> ((10.0, 1L)), "c" -> ((7.0, 1L))))
-    // the manifest lives INSIDE the committed table dir (atomic with data)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/_applied.json")))
-    assert(Incremental.readAppliedBatch(spark, path).contains(1L))
+    // the manifest lives INSIDE the committed version dir (atomic with data)
+    val live = Snapshots.currentVersion(spark, path).get
+    assert(fs.exists(new org.apache.hadoop.fs.Path(Snapshots.versionDir(path, live), "_applied.json")))
+    assert(Incremental.readAppliedBatch(spark, path, live).contains(1L))
+  }
+
+  test("aggStateApplyBatch: a staged but never pointer-committed manifest does not make a replay a no-op") {
+    import graft.operators.Incremental
+    val path = "target/tmp/aggstate_orphan_manifest_spec"
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(p, true)
+    val b0 = Seq(("a", 1.0), ("b", 10.0)).toDF("g", "v")
+    val b1 = Seq(("a", 5.0), ("c", 7.0)).toDF("g", "v")
+    assert(Incremental.aggStateApplyBatch(spark, b0, path, Seq("g"), "v", 0L))
+    val live = Snapshots.currentVersion(spark, path).get
+    // a crash after batch 1 staged v=N+1 (data + manifest) but before the
+    // pointer flip: the orphan claims batch 1, the pointer does not
+    val orphan = Snapshots.versionDir(path, live + 1)
+    Seq(("a", 99.0)).toDF("g", "v").write.parquet(orphan)
+    val out = fs.create(new org.apache.hadoop.fs.Path(orphan, "_applied.json"), true)
+    try out.write("""{"appliedThrough":1}""".getBytes("UTF-8")) finally out.close()
+    // the redelivered batch 1 applies, and exactly once
+    assert(Incremental.aggStateApplyBatch(spark, b1, path, Seq("g"), "v", 1L))
+    assert(!Incremental.aggStateApplyBatch(spark, b1, path, Seq("g"), "v", 1L))
+    val st = Incremental.readAggState(spark, path)
+      .select("g", "sum", "cnt").as[(String, Double, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(st == Map("a" -> ((6.0, 2L)), "b" -> ((10.0, 1L)), "c" -> ((7.0, 1L))))
+    assert(Snapshots.currentVersion(spark, path).exists(_ > live + 1),
+      "the commit must skip past the orphan's slot, not re-use it")
   }
 
   test("compaction manifest: corrupt/truncated JSON fails with a clear error, not an NPE") {
