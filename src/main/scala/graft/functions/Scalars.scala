@@ -80,12 +80,6 @@ object Scalars {
     */
   def addressBucket(address: Column): Column = substring(address, 3, 2)
 
-  /** Epoch seconds as LONG. The reference stores
-    * `CAST(TO_UNIXTIME(ts) AS DECIMAL)` (stage_tranformation_queries.py:8);
-    * this engine standardizes on long epochs (SURVEY.md §7.4.6).
-    */
-  def epochSeconds(ts: Column): Column = unix_timestamp(ts)
-
   /** Order-independent exact sum: decimal(38,6) accumulation, double out.
     * Plain double sums differ in the last ulps across partition orders —
     * at 100 TB that's nondeterministic output between runs; the engine

@@ -102,13 +102,6 @@ object Unigram {
     kept.zipWithIndex.map { case ((t, _, _), i) => (t, i, costed1(t)) }.toSeq
   }
 
-  /** The trained model as a tiny DataFrame (token, id, cost_m). */
-  def modelDF(docs: DataFrame, model: Seq[(String, Int, Long)]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    model.toDF("token", "id", "cost_m")
-  }
-
   /** struct(n_tokens, id_checksum, ids) of `textCol` under `model` — one
     * Viterbi projection, no shuffle.
     */

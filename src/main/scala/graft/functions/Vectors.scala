@@ -30,17 +30,13 @@ object Vectors {
     * deterministic integer pseudo-random grid,
     * `w(p, i) = ((p * 131 + i * 31) % 17) - 8`, so the identical bucketing is
     * expressible in the DuckDB oracle SQL (no shared hash library needed).
-    * `planes` sign bits pack into one integer bucket id.
+    * `planes` sign bits pack into one integer bucket id, over the planes
+    * starting at global plane id `planeOffset` — each LSH band gets its
+    * own disjoint plane range, so B banded hash tables are mutually
+    * independent.
     *
     * Scale: bucketing turns O(n^2) all-pairs cosine into an equi join on
     * `bucket` — the candidate set per probe is n / 2^planes on average.
-    */
-  def hyperplaneBucket(vec: Column, planes: Int): Column =
-    hyperplaneBucketAt(vec, 0, planes)
-
-  /** Sign-bit bucket over the `planes` hyperplanes starting at global plane
-    * id `planeOffset` — each LSH band gets its own disjoint plane range, so
-    * B banded hash tables are mutually independent.
     */
   def hyperplaneBucketAt(vec: Column, planeOffset: Int, planes: Int): Column = {
     val bits = (0 until planes).map { p =>

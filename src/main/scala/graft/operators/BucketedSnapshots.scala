@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.sources.MetaFile
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -41,6 +42,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * concurrent: the pointer flip CAS-checks the merge base and a losing
   * racer aborts with [[CommitConflictException]]
   * (see [[Snapshots.commitWith]]'s concurrency note).
+  *
+  * One mechanism each: every main commit and [[publishBranch]] end in
+  * [[Snapshots.flipPointer]] (the single commit point, shared with the
+  * full-snapshot format); every manifest sidecar, ref and branch file is
+  * written by [[graft.sources.MetaFile.replace]] (the manifest itself is
+  * claimed create-exclusively, [[claimExclusive]]); every read of bucket
+  * data goes through [[readBuckets]].
   */
 object BucketedSnapshots {
 
@@ -147,13 +155,10 @@ object BucketedSnapshots {
         }
       }).mkString("\n")
 
-  private def manifestLines(spark: SparkSession, path: String, v: Long): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, path)
-    val in = fs.open(new Path(manifestPath(path, v)))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    txt.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
-  }
+  private def manifestLines(spark: SparkSession, path: String, v: Long): Seq[String] =
+    MetaFile.read(spark, manifestPath(path, v))
+      .getOrElse(throw new java.io.FileNotFoundException(s"no manifest ${manifestPath(path, v)}"))
+      .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
 
   /** The bucket-function arity the table was committed with (`#nBuckets=`
     * manifest header). None only for manifests written before the header
@@ -203,6 +208,39 @@ object BucketedSnapshots {
       case None => spark.read.option("mergeSchema", "true").parquet(dirs: _*)
     }
 
+  private def bucketDir(path: String, b: Int, bv: Long) = s"$path/b=$b/v=$bv"
+
+  /** THE bucket-subset read of version `v` — every read of bucket data
+    * (snapshot, change feed, range, equality and point reads, the merge's
+    * pre-header existing side): the `chosen` manifest entries read with
+    * [[readDirs]]' schema strategy, or only `files` inside them (per-file
+    * zonemap skipping), their delete vectors folded ([[foldDeletes]]).
+    * Nothing to read gives an empty frame with the table's schema.
+    */
+  private def readBuckets(
+      spark: SparkSession, path: String, v: Long, chosen: Map[Int, Long],
+      files: Option[Seq[String]] = None): DataFrame = {
+    val paths = files.getOrElse(chosen.toSeq.sorted.map { case (b, bv) => bucketDir(path, b, bv) })
+    if (paths.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), tableSchema(spark, path, v))
+    else foldDeletes(spark, path, readDirs(spark, path, v, paths),
+      dvPairs(readDvs(spark, path, v).filter { case (b, _) => chosen.contains(b) }))
+  }
+
+  /** Version `v`'s schema: the `#schema=` header, else (pre-header) the
+    * footer merge over every bucket dir.
+    */
+  private def tableSchema(spark: SparkSession, path: String, v: Long): StructType =
+    readTableSchema(spark, path, v).getOrElse(readDirs(spark, path, v,
+      readManifest(spark, path, v).toSeq.map { case (b, bv) => bucketDir(path, b, bv) }).schema)
+
+  private def nonEmptyManifest(spark: SparkSession, path: String, v: Long): Map[Int, Long] = {
+    val m = readManifest(spark, path, v)
+    if (m.isEmpty) throw new java.io.FileNotFoundException(
+      s"bucketed snapshot v=$v at $path has an empty manifest")
+    m
+  }
+
   /** The pointer, validated against its own manifest (the bucketed layout
     * has no `v=N` data dirs for [[Snapshots.pointerState]] to check).
     */
@@ -213,6 +251,16 @@ object BucketedSnapshots {
   /** The live table version, if any (same pointer format as [[Snapshots]]). */
   def currentVersion(spark: SparkSession, path: String): Option[Long] =
     pointerState(spark, path).map(_._1)
+
+  /** The live version from one pointer read — every `readCurrent*` read
+    * resolves it here and reads it without a second (retention) check.
+    */
+  private def liveVersion(spark: SparkSession, path: String): Long =
+    Snapshots.requireLive(path, currentVersion(spark, path))
+
+  /** [[Snapshots.requireRetained]] against this layout's [[versions]]. */
+  private def requireRetained(spark: SparkSession, path: String, version: Long): Unit =
+    Snapshots.requireRetained(path, version, versions(spark, path))
 
   /** Readable committed table versions, newest first: the pointer's
     * retained history plus TAGGED versions (named refs pin a version
@@ -270,30 +318,20 @@ object BucketedSnapshots {
 
   /** Read the table exactly as committed at `version` (must be retained). */
   def readSnapshot(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val have = versions(spark, path)
-    if (!have.contains(version))
-      throw new java.io.FileNotFoundException(
-        s"bucketed snapshot v=$version at $path is not a retained committed version " +
-          s"(retained: ${if (have.isEmpty) "none" else have.mkString(", ")})")
-    val m = readManifest(spark, path, version)
-    if (m.isEmpty) throw new java.io.FileNotFoundException(
-      s"bucketed snapshot v=$version at $path has an empty manifest")
-    // schema strategy ([[readDirs]]): recorded `#schema=` header when
-    // present (zero footer IO), else mergeSchema — after an evolving
-    // commit untouched buckets still carry the old schema and
-    // null-backfill either way
-    val raw = readDirs(spark, path, version,
-      m.toSeq.map { case (b, bv) => s"$path/b=$b/v=$bv" })
-    foldDeletes(spark, path, raw, dvPairs(readDvs(spark, path, version)))
+    requireRetained(spark, path, version)
+    snapshot(spark, path, version)
   }
+
+  /** Every bucket of version `v`, which the caller has gated or pinned.
+    * After an evolving commit untouched buckets still carry the old
+    * schema and null-backfill ([[readDirs]]).
+    */
+  private def snapshot(spark: SparkSession, path: String, v: Long): DataFrame =
+    readBuckets(spark, path, v, nonEmptyManifest(spark, path, v))
 
   /** Read the live table. */
   def readCurrent(spark: SparkSession, path: String): DataFrame =
-    currentVersion(spark, path) match {
-      case Some(v) => readSnapshot(spark, path, v)
-      case None =>
-        throw new java.io.FileNotFoundException(s"no committed snapshot under $path")
-    }
+    snapshot(spark, path, liveVersion(spark, path))
 
   /** Read a committed version THROUGH THE PLANNER-VISIBLE layout
     * ([[graft.sources.SnapCatalog]]): the scan reports the table's
@@ -315,17 +353,8 @@ object BucketedSnapshots {
     * `address_partition` scheme could only prune around.
     */
   def readSnapshotSPJ(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val have = versions(spark, path)
-    if (!have.contains(version))
-      throw new java.io.FileNotFoundException(
-        s"bucketed snapshot v=$version at $path is not a retained committed version " +
-          s"(retained: ${if (have.isEmpty) "none" else have.mkString(", ")})")
-    if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.SnapCatalog")
-    // absolute path: the identifier must resolve from any working dir
-    val abs = fsOf(spark, path).makeQualified(new org.apache.hadoop.fs.Path(path))
-      .toUri.getPath
-    spark.table(s"graft.`$abs##$version`")
+    requireRetained(spark, path, version)
+    spjTable(spark, path, s"$version")
   }
 
   /** Bucket-subset SPJ read (`path##version##b=...`): only the named
@@ -335,12 +364,17 @@ object BucketedSnapshots {
     */
   private[graft] def readSnapshotSPJBuckets(
       spark: SparkSession, path: String, version: Long,
-      buckets: Seq[Int]): DataFrame = {
+      buckets: Seq[Int]): DataFrame =
+    spjTable(spark, path, s"$version##b=${buckets.sorted.mkString(",")}")
+
+  /** The `graft` catalog table `<absolute path>##<selector>`. */
+  private def spjTable(spark: SparkSession, path: String, selector: String): DataFrame = {
     if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)
       spark.conf.set("spark.sql.catalog.graft", "graft.sources.SnapCatalog")
+    // absolute path: the identifier must resolve from any working dir
     val abs = fsOf(spark, path).makeQualified(new org.apache.hadoop.fs.Path(path))
       .toUri.getPath
-    spark.table(s"graft.`$abs##$version##b=${buckets.sorted.mkString(",")}`")
+    spark.table(s"graft.`$abs##$selector`")
   }
 
   /** Diagnostic observability for the merge paths' read routing (test
@@ -355,30 +389,23 @@ object BucketedSnapshots {
     * commit's key/arity, so the merge's full-outer join plans with ZERO
     * exchanges on the TABLE side — only the churn-sized batch shuffles
     * (`v2.bucketing.shuffle`); pre-header tables keep the plain
-    * readDirs+foldDeletes path. Row-identical either way.
+    * [[readBuckets]] path. Row-identical either way.
     */
   private def mergeExistingSide(
       spark: SparkSession, path: String, v: Long, key: String, nBuckets: Int,
-      touched: Seq[Int], existingDirs: Seq[(Int, String)],
-      dvs: Map[Int, Seq[Long]]): DataFrame = {
+      existing: Map[Int, Long]): DataFrame = {
     val spjOk = readNBuckets(spark, path, v).contains(nBuckets) &&
       readBucketKey(spark, path, v).contains(key) &&
       spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean
     if (spjOk) {
       spjMergeReads.incrementAndGet()
-      readSnapshotSPJBuckets(spark, path, v, existingDirs.map(_._1))
-    } else
-      foldDeletes(spark, path, readDirs(spark, path, v, existingDirs.map(_._2)),
-        dvPairs(dvs.filter { case (b, _) => touched.contains(b) }))
+      readSnapshotSPJBuckets(spark, path, v, existing.keys.toSeq)
+    } else readBuckets(spark, path, v, existing)
   }
 
   /** [[readSnapshotSPJ]] on the live version. */
   def readCurrentSPJ(spark: SparkSession, path: String): DataFrame =
-    currentVersion(spark, path) match {
-      case Some(v) => readSnapshotSPJ(spark, path, v)
-      case None =>
-        throw new java.io.FileNotFoundException(s"no committed snapshot under $path")
-    }
+    spjTable(spark, path, s"${liveVersion(spark, path)}")
 
   /** CHANGE DATA FEED between two committed table versions, MANIFEST-
     * PRUNED: only buckets whose `(bucket -> bucketVersion)` manifest entry
@@ -423,12 +450,7 @@ object BucketedSnapshots {
       spark: SparkSession, path: String, fromV: Long, toV: Long): (DataFrame, DataFrame) = {
     require(fromV < toV, s"change feed runs forward: fromV=$fromV, toV=$toV")
     val have = versions(spark, path)
-    Seq(fromV, toV).foreach { v =>
-      if (!have.contains(v))
-        throw new java.io.FileNotFoundException(
-          s"bucketed snapshot v=$v at $path is not a retained committed version " +
-            s"(retained: ${if (have.isEmpty) "none" else have.mkString(", ")})")
-    }
+    Seq(fromV, toV).foreach(Snapshots.requireRetained(path, _, have))
     val mFrom = readManifest(spark, path, fromV)
     val mTo = readManifest(spark, path, toV)
     val dFrom = readDvs(spark, path, fromV)
@@ -437,22 +459,10 @@ object BucketedSnapshots {
     // moved — a delete-only commit changes rows without a new data dir
     val touched = (mFrom.keySet ++ mTo.keySet)
       .filter(b => mFrom.get(b) != mTo.get(b) ||
-        dFrom.getOrElse(b, Nil) != dTo.getOrElse(b, Nil)).toSeq.sorted
-    def side(v: Long, m: Map[Int, Long], d: Map[Int, Seq[Long]]): DataFrame = {
-      val dirs = touched.flatMap(b => m.get(b).map(bv => s"$path/b=$b/v=$bv"))
-      if (dirs.nonEmpty) {
-        val raw = readDirs(spark, path, v, dirs)
-        foldDeletes(spark, path, raw,
-          dvPairs(d.filter { case (b, _) => touched.contains(b) }))
-      } else {
-        // nothing changed (or one side has none of the touched buckets):
-        // an empty frame with the table's schema
-        val any = (m ++ mFrom ++ mTo).headOption.map { case (b, bv) => s"$path/b=$b/v=$bv" }
-        any.map(dd => spark.read.parquet(dd).limit(0)).getOrElse(
-          throw new java.io.FileNotFoundException(s"no bucket data under $path"))
-      }
-    }
-    (side(fromV, mFrom, dFrom), side(toV, mTo, dTo))
+        dFrom.getOrElse(b, Nil) != dTo.getOrElse(b, Nil))
+    def side(v: Long, m: Map[Int, Long]) =
+      readBuckets(spark, path, v, m.filter { case (b, _) => touched.contains(b) })
+    (side(fromV, mFrom), side(toV, mTo))
   }
 
   /** Last-writer-wins keyed upsert; returns the committed table version. */
@@ -558,8 +568,7 @@ object BucketedSnapshots {
     import org.apache.hadoop.fs.Path
     val fs = fsOf(spark, path)
     val (state, casBase) = pinned
-    val cur = state.map(_._1).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed snapshot under $path"))
+    val cur = Snapshots.requireLive(path, state.map(_._1))
     val curManifest = readManifest(spark, path, cur)
     val curDvs = readDvs(spark, path, cur)
     val nBuckets = readNBuckets(spark, path, cur).getOrElse(
@@ -610,7 +619,7 @@ object BucketedSnapshots {
       val tmp = new Path(
         path + "__vstaging_fold_" + java.util.UUID.randomUUID().toString.take(12))
       foldDeletes(spark, path,
-        spark.read.parquet(s"$path/b=$b/v=${curManifest(b)}"),
+        spark.read.parquet(bucketDir(path, b, curManifest(b))),
         curDvs.getOrElse(b, Nil).map(b -> _))
         .join(broadcast(
           spark.read.parquet(stagedDirs(b).toString).select(col(key))),
@@ -644,12 +653,12 @@ object BucketedSnapshots {
     */
   def pruneTombstones(spark: SparkSession, path: String, lowWatermark: Long): Long = {
     val pinned = pinnedPointer(spark, path)
-    val cur = pinned._1.map(_._1).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed snapshot under $path"))
+    val cur = Snapshots.requireLive(path, pinned._1.map(_._1))
     val key = readBucketKey(spark, path, cur).getOrElse(
       throw new IllegalStateException(
         s"table at $path has no #bucketKey header — cannot name the tombstone keys"))
-    val dead = readSnapshot(spark, path, cur)
+    // the pinned version needs no retention check: no third pointer read
+    val dead = snapshot(spark, path, cur)
       .filter(col(Cdc.DeletedMeta) && col(Cdc.SeqMeta) < lowWatermark)
       .select(key)
     deleteKeysAt(spark, path, pinned, dead, key, keepVersions = 2, maxDvsPerBucket = 4)
@@ -704,8 +713,7 @@ object BucketedSnapshots {
     */
   def branch(spark: SparkSession, path: String, name: String,
       overwrite: Boolean = false): Long = {
-    val cur = currentVersion(spark, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed snapshot under $path"))
+    val cur = liveVersion(spark, path)
     Snapshots.writeBranchFile(spark, path, name, cur, cur, overwrite)
     cur
   }
@@ -785,8 +793,6 @@ object BucketedSnapshots {
   def publishBranch(
       spark: SparkSession, path: String, name: String,
       keepVersions: Int = 2): Long = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
-    val fs = fsOf(spark, path)
     val (head, base) = branchState(spark, path, name).getOrElse(
       throw new java.io.FileNotFoundException(s"no branch '$name' at $path"))
     val (state, casBase) = pinnedPointer(spark, path)
@@ -795,15 +801,9 @@ object BucketedSnapshots {
       throw new CommitConflictException(
         s"publish of branch '$name' at $path is not a fast-forward: main is at " +
           s"v=$live but the branch forked from v=$base — re-branch and replay; retry")
-    Snapshots.checkPointerUnmoved(spark, path, casBase)
     val retained = (head +: state.map(_._2).getOrElse(Seq.empty)).distinct
       .sorted.reverse.take(keepVersions)
-    val root = new Path(path)
-    val tmp = new Path(root, "_CURRENT.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(retained.mkString("\n").getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(root.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, new Path(root, "_CURRENT"), Options.Rename.OVERWRITE)
+    Snapshots.flipPointer(spark, path, casBase, retained)
     Snapshots.dropBranchFile(spark, path, name)
     gc(spark, path, retained)
     head
@@ -915,8 +915,7 @@ object BucketedSnapshots {
       // an EMPTY batch touches nothing: committing would write an empty
       // (or verbatim-copied) manifest for no data change — no-op
       if (touched.isEmpty) return cur.getOrElse(0L)
-      val existingDirs = touched.flatMap(b =>
-        curManifest.get(b).map(bv => b -> s"$path/b=$b/v=$bv"))
+      val existing = curManifest.filter { case (b, _) => stagedBatch.contains(b) }
       // no touched bucket has rows yet (a first commit, or only new
       // buckets): the staged batch dirs ARE the new bucket versions.
       // Otherwise merge against the DELETE-FOLDED view of the touched
@@ -924,13 +923,11 @@ object BucketedSnapshots {
       // so a deleted key re-upserted here comes back exactly once) and
       // the staged batch read back with the batch's own schema
       val (claimDir, merged, claimable) =
-        if (existingDirs.isEmpty) (batchDir, updates, stagedBatch)
+        if (existing.isEmpty) (batchDir, updates, stagedBatch)
         else {
           val mergedDir = new Path(staging, "merged")
-          val curDvs = readDvs(spark, path, cur.get)
           val m = merge(
-            mergeExistingSide(spark, path, cur.get, key, nBuckets, touched,
-              existingDirs, curDvs),
+            mergeExistingSide(spark, path, cur.get, key, nBuckets, existing),
             spark.read.schema(updates.schema).parquet(batchDir.toString).drop("b"))
           label(spark, "snap-commit: merge + stage") {
             m.withColumn("b", bucketOf)
@@ -1054,7 +1051,7 @@ object BucketedSnapshots {
       newBlooms: Map[Int, Seq[(String, Array[Byte])]] = Map.empty,
       bloomTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty,
       branch: Option[String] = None): Long = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
+    import org.apache.hadoop.fs.Path
     val fs = fsOf(spark, path)
     var st = state
     var cb = casBase
@@ -1211,17 +1208,11 @@ object BucketedSnapshots {
           // previous table version.
           val retained = (next +: st.map(_._2).getOrElse(Seq.empty)).distinct
             .sorted.reverse.take(keepVersions)
-          val unmoved =
-            try { Snapshots.checkPointerUnmoved(spark, path, cb); true }
+          // a lost CAS throws before the flip writes anything: rebase
+          val flipped =
+            try { Snapshots.flipPointer(spark, path, cb, retained); true }
             catch { case e: CommitConflictException => rebase(e); false }
-          if (unmoved) {
-            val root = new Path(path)
-            val tmp = new Path(root, "_CURRENT.tmp")
-            val pout = fs.create(tmp, true)
-            try pout.write(retained.mkString("\n").getBytes("UTF-8"))
-            finally pout.close()
-            FileContext.getFileContext(root.toUri, spark.sparkContext.hadoopConfiguration)
-              .rename(tmp, new Path(root, "_CURRENT"), Options.Rename.OVERWRITE)
+          if (flipped) {
             gc(spark, path, retained)
             return next
           }
@@ -1263,13 +1254,8 @@ object BucketedSnapshots {
     */
   private[graft] def readStats(
       spark: SparkSession, path: String, v: Long): (Seq[String], Map[Int, Seq[BucketStat]]) = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, path)
-    val p = new Path(statsPath(path, v))
-    if (!fs.exists(p)) return (Nil, Map.empty)
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val lines = txt.split("\n").iterator.map(_.stripLineEnd).filter(_.nonEmpty).toSeq
+    // no sidecar reads as no lines: no columns, no entries
+    val lines = metaLines(spark, statsPath(path, v))
     val cols = lines.headOption.filter(_.startsWith("#cols="))
       .map(_.stripPrefix("#cols=").split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
     val entries = lines.drop(1).flatMap { line =>
@@ -1284,24 +1270,18 @@ object BucketedSnapshots {
     (cols, entries.groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2) })
   }
 
+  /** The non-empty lines of a sidecar; none when it does not exist. */
+  private def metaLines(spark: SparkSession, file: String): Seq[String] =
+    MetaFile.read(spark, file).toSeq.flatMap(_.split("\n")).map(_.stripLineEnd).filter(_.nonEmpty)
+
   private def writeStats(
       spark: SparkSession, path: String, v: Long,
-      cols: Seq[String], entries: Seq[(Int, BucketStat)]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, path)
-    val tmp = new Path(statsPath(path, v) + ".tmp")
-    val dst = new Path(statsPath(path, v))
-    val content = (s"#cols=${cols.mkString(",")}" +:
+      cols: Seq[String], entries: Seq[(Int, BucketStat)]): Unit =
+    MetaFile.replace(spark, statsPath(path, v), (s"#cols=${cols.mkString(",")}" +:
       entries.map { case (b, s) =>
         val base = s"$b,${s.col},${s.typ},${s.min},${s.max}"
         if (s.file.isEmpty) base else s"$base,${s.file}"
-      })
-      .mkString("\n")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"bucketed commit: failed to write stats $dst")
-  }
+      }).mkString("\n"))
 
   // ---- per-bucket BLOOM sidecars (the Iceberg bloom-filter-index
   // role): commit-time filters over DECLARED high-cardinality string
@@ -1326,14 +1306,8 @@ object BucketedSnapshots {
       spark: SparkSession, path: String, v: Long)
       : (Seq[String], Map[String, org.apache.spark.sql.types.DataType],
          Map[Int, Map[String, Array[Byte]]]) = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.types.StringType
-    val fs = fsOf(spark, path)
-    val p = new Path(bloomPath(path, v))
-    if (!fs.exists(p)) return (Nil, Map.empty, Map.empty)
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val lines = txt.split("\n").iterator.map(_.stripLineEnd).filter(_.nonEmpty).toSeq
+    val lines = metaLines(spark, bloomPath(path, v))
     val headers = lines.takeWhile(_.startsWith("#"))
     val cols = headers.find(_.startsWith("#cols="))
       .map(_.stripPrefix("#cols=").split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
@@ -1361,21 +1335,13 @@ object BucketedSnapshots {
       spark: SparkSession, path: String, v: Long, cols: Seq[String],
       types: Map[String, org.apache.spark.sql.types.DataType],
       entries: Seq[(Int, String, Array[Byte])]): Unit = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.types.StringType
-    val fs = fsOf(spark, path)
-    val tmp = new Path(bloomPath(path, v) + ".tmp")
-    val dst = new Path(bloomPath(path, v))
     val typesLine =
       s"#types=${cols.map(c => types.getOrElse(c, StringType).catalogString).mkString(",")}"
-    val content = (Seq(s"#cols=${cols.mkString(",")}", typesLine) ++
+    MetaFile.replace(spark, bloomPath(path, v), (Seq(s"#cols=${cols.mkString(",")}", typesLine) ++
       entries.map { case (b, c, bits) =>
         s"$b,$c,${java.util.Base64.getEncoder.encodeToString(bits)}" })
-      .mkString("\n")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"bucketed commit: failed to write blooms $dst")
+      .mkString("\n"))
   }
 
   /** Distributed per-bucket bloom build over the staged write: one RDD
@@ -1497,27 +1463,17 @@ object BucketedSnapshots {
   def readSnapshotEquals(
       spark: SparkSession, path: String, version: Long, column: String,
       values: Seq[String]): DataFrame = {
-    val m = readManifest(spark, path, version)
     val chosen = bloomPrunedBuckets(spark, path, version, column, values).toSet
-    val dirs = m.toSeq.filter(t => chosen.contains(t._1))
-      .map { case (b, bv) => s"$path/b=$b/v=$bv" }
-    val dvs = readDvs(spark, path, version)
-    val df =
-      if (dirs.isEmpty) readSnapshot(spark, path, version).limit(0)
-      else foldDeletes(spark, path, readDirs(spark, path, version, dirs),
-        dvPairs(dvs.filter { case (b, _) => chosen.contains(b) }))
-    df.filter(col(column).isin(values: _*))
+    readBuckets(spark, path, version,
+      readManifest(spark, path, version).filter { case (b, _) => chosen.contains(b) })
+      .filter(col(column).isin(values: _*))
   }
 
   /** [[readSnapshotEquals]] on the live version. */
   def readCurrentEquals(
       spark: SparkSession, path: String, column: String,
       values: Seq[String]): DataFrame =
-    currentVersion(spark, path) match {
-      case Some(v) => readSnapshotEquals(spark, path, v, column, values)
-      case None =>
-        throw new java.io.FileNotFoundException(s"no committed snapshot under $path")
-    }
+    readSnapshotEquals(spark, path, liveVersion(spark, path), column, values)
 
   private def isStatType(dt: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._
@@ -1661,47 +1617,64 @@ object BucketedSnapshots {
     (lo.map(_._1), hi.map(_._1), residual)
   }
 
-  /** Manifest entries that MAY hold a row of `column` within
-    * `[effLo, effHi]` per the version's stats sidecar. Comparisons run in
-    * the column's own space ('l' long, 'd' double, 'c' exact decimal) —
-    * the same space the residual filter compares in, so pruning is always
-    * conservative with respect to it. Missing stats, a type mismatch, or
-    * an unparseable entry mean "read the bucket".
+  /** May a row within `[lo, hi]` live inside `st`'s bounds? Bounds are
+    * numeric (`BigDecimal`, in the column's space — see [[typedBounds]])
+    * or string (UTF-8 bytes). A stat compares only against bounds of its
+    * own kind: 'l' long, 'd' double and 'c' exact decimal against numeric
+    * bounds; 's' against string bounds BYTE-WISE unsigned, which is
+    * Spark's UTF8String binary order (what the residual filter and the
+    * stored min/max both use), NOT Java String's UTF-16 order — the two
+    * differ for code points around the surrogate range, so comparing
+    * decoded Strings would mis-prune (ZonemapStatsSpec plants that
+    * case). 'n' (no non-null value) never intersects a range; any other
+    * pairing, or an unparseable entry, keeps the bucket.
     */
-  /** May a row of a range-`[effLo, effHi]` read live inside `st`'s
-    * bounds? (conservative: parse trouble or unknown type = yes).
-    */
-  private def statIntersects(
-      st: BucketStat, effLo: Option[BigDecimal], effHi: Option[BigDecimal]): Boolean =
+  private def statIntersects(st: BucketStat, lo: Option[Any], hi: Option[Any]): Boolean = {
+    def overlaps[T](mn: T, mx: T, bound: Any => Option[T])(implicit ord: Ordering[T]) =
+      hi.flatMap(bound).forall(ord.lteq(mn, _)) && lo.flatMap(bound).forall(ord.gteq(mx, _))
+    val num: Any => Option[BigDecimal] = { case d: BigDecimal => Some(d); case _ => None }
+    val utf8: Any => Option[Array[Byte]] = { case a: Array[Byte] => Some(a); case _ => None }
+    val byteOrder: Ordering[Array[Byte]] = (a, b) => java.util.Arrays.compareUnsigned(a, b)
     if (st.typ == 'n') false
     else try st.typ match {
-      case 'l' =>
-        val mn = st.min.toLong; val mx = st.max.toLong
-        effHi.forall(u => BigDecimal(mn) <= u) && effLo.forall(l => BigDecimal(mx) >= l)
-      case 'd' =>
-        val mn = java.lang.Double.parseDouble(st.min)
-        val mx = java.lang.Double.parseDouble(st.max)
-        effHi.forall(u => mn <= u.toDouble) && effLo.forall(l => mx >= l.toDouble)
-      case 'c' =>
-        val mn = BigDecimal(st.min); val mx = BigDecimal(st.max)
-        effHi.forall(u => mn <= u) && effLo.forall(l => mx >= l)
+      case 'l' => overlaps(BigDecimal(st.min.toLong), BigDecimal(st.max.toLong), num)
+      case 'd' => overlaps(java.lang.Double.parseDouble(st.min),
+        java.lang.Double.parseDouble(st.max), num(_).map(_.toDouble))
+      case 'c' => overlaps(BigDecimal(st.min), BigDecimal(st.max), num)
+      case 's' => overlaps(unb64(st.min), unb64(st.max), utf8)(byteOrder)
       case _ => true
-    } catch { case _: NumberFormatException => true }
+    } catch { case _: IllegalArgumentException => true } // incl. NumberFormatException
+  }
 
-  private[graft] def pruneBuckets(
+  /** Manifest entries that MAY hold a row of `column` within
+    * `[lo, hi]` ([[statIntersects]]) per the version's stats sidecar.
+    * Missing stats mean "read the bucket". Bucket decisions use
+    * WHOLE-BUCKET entries only (a per-file entry covers one file's
+    * narrower range — using it here would wrongly drop the rest of the
+    * bucket).
+    */
+  private def pruneBy(
       spark: SparkSession, path: String, version: Long, m: Map[Int, Long],
-      column: String, effLo: Option[BigDecimal], effHi: Option[BigDecimal]): Map[Int, Long] = {
+      column: String, lo: Option[Any], hi: Option[Any]): Map[Int, Long] = {
     val stats = readStats(spark, path, version)._2
     m.filter { case (b, _) =>
-      // bucket decisions use WHOLE-BUCKET entries only (a per-file entry
-      // covers one file's narrower range — using it here would wrongly
-      // drop the rest of the bucket)
-      stats.get(b).flatMap(_.find(st => st.col == column && st.file.isEmpty)) match {
-        case Some(st) => statIntersects(st, effLo, effHi)
-        case None => true
-      }
+      stats.get(b).flatMap(_.find(st => st.col == column && st.file.isEmpty))
+        .forall(statIntersects(_, lo, hi))
     }
   }
+
+  /** [[pruneBy]] with numeric bounds already in the column's space. */
+  private[graft] def pruneBuckets(
+      spark: SparkSession, path: String, version: Long, m: Map[Int, Long],
+      column: String, effLo: Option[BigDecimal], effHi: Option[BigDecimal]): Map[Int, Long] =
+    pruneBy(spark, path, version, m, column, effLo, effHi)
+
+  /** [[pruneBy]] on a STRING column (byte-wise bounds). */
+  private[graft] def pruneBucketsString(
+      spark: SparkSession, path: String, version: Long, m: Map[Int, Long],
+      column: String, lower: Option[String], upper: Option[String]): Map[Int, Long] =
+    pruneBy(spark, path, version, m, column, lower.map(_.getBytes("UTF-8")),
+      upper.map(_.getBytes("UTF-8")))
 
   /** The data paths of the CHOSEN buckets with PER-FILE skipping applied:
     * buckets without file entries contribute their whole dir; fragmented
@@ -1717,7 +1690,7 @@ object BucketedSnapshots {
     val stats = readStats(spark, path, version)._2
     val fs = fsOf(spark, path)
     chosen.toSeq.sorted.flatMap { case (b, bv) =>
-      val dir = s"$path/b=$b/v=$bv"
+      val dir = bucketDir(path, b, bv)
       val fileEntries = stats.getOrElse(b, Nil)
         .filter(st => st.col == column && st.file.nonEmpty)
       if (fileEntries.isEmpty) Seq(dir)
@@ -1748,87 +1721,16 @@ object BucketedSnapshots {
   def readSnapshotWhere(
       spark: SparkSession, path: String, version: Long, column: String,
       lower: Option[BigDecimal], upper: Option[BigDecimal]): DataFrame = {
-    val have = versions(spark, path)
-    if (!have.contains(version))
-      throw new java.io.FileNotFoundException(
-        s"bucketed snapshot v=$version at $path is not a retained committed version " +
-          s"(retained: ${if (have.isEmpty) "none" else have.mkString(", ")})")
-    val m = readManifest(spark, path, version)
-    if (m.isEmpty) throw new java.io.FileNotFoundException(
-      s"bucketed snapshot v=$version at $path has an empty manifest")
-    val allDirs = m.toSeq.map { case (b, bv) => s"$path/b=$b/v=$bv" }
-    // footer-only pass for the merged schema (types the bounds; at scale
-    // this is metadata IO, not data IO)
-    val full = readDirs(spark, path, version, allDirs)
-    val dt = full.schema.find(_.name == column).getOrElse(
-      throw new IllegalArgumentException(
-        s"column '$column' is not a column of the table at $path " +
-          s"(have: ${full.schema.fieldNames.mkString(", ")})")).dataType
-    val (effLo, effHi, residual) = typedBounds(dt, column, lower, upper)
-    val chosen = pruneBuckets(spark, path, version, m, column, effLo, effHi)
-    // per-file skipping inside the chosen buckets (fragmented buckets
-    // carry per-file sidecar entries)
-    val paths = prunedDataPaths(spark, path, version, chosen, column,
-      statIntersects(_, effLo, effHi))
-    // delete vectors of the CHOSEN buckets fold in after pruning (a
-    // delete only narrows content, so pre-delete min/max stay SAFE — at
-    // worst a bucket is read unnecessarily, never skipped wrongly)
-    val dvs = readDvs(spark, path, version)
-    val df =
-      if (paths.isEmpty) full.limit(0)
-      else foldDeletes(spark, path,
-        readDirs(spark, path, version, paths),
-        dvPairs(dvs.filter { case (b, _) => chosen.contains(b) }))
-    df.filter(residual)
+    requireRetained(spark, path, version)
+    readWhere(spark, path, version, column, numericBounds(column, lower, upper))
   }
 
   /** [[readSnapshotWhere]] on the live version. */
   def readCurrentWhere(
       spark: SparkSession, path: String, column: String,
       lower: Option[BigDecimal], upper: Option[BigDecimal]): DataFrame =
-    currentVersion(spark, path) match {
-      case Some(v) => readSnapshotWhere(spark, path, v, column, lower, upper)
-      case None =>
-        throw new java.io.FileNotFoundException(s"no committed snapshot under $path")
-    }
-
-  /** Manifest entries that MAY hold a row of STRING `column` within
-    * `[lower, upper]` — the string twin of [[pruneBuckets]]. Comparisons
-    * are UTF-8 BYTE-WISE unsigned on both sides: that is Spark's
-    * UTF8String binary order (what the residual filter and the stored
-    * min/max both use), NOT Java String's UTF-16 order — the two differ
-    * for code points around the surrogate range, so comparing decoded
-    * Strings here would mis-prune (ZonemapStatsSpec plants that case).
-    */
-  /** String twin of [[statIntersects]] (UTF-8 byte-wise unsigned — see
-    * [[pruneBucketsString]]'s ordering note).
-    */
-  private def statIntersectsString(
-      st: BucketStat, lo: Option[Array[Byte]], hi: Option[Array[Byte]]): Boolean = {
-    def cmp(a: Array[Byte], b: Array[Byte]): Int =
-      java.util.Arrays.compareUnsigned(a, b)
-    if (st.typ == 'n') false
-    else if (st.typ == 's') {
-      try {
-        val mn = unb64(st.min); val mx = unb64(st.max)
-        hi.forall(u => cmp(mn, u) <= 0) && lo.forall(l => cmp(mx, l) >= 0)
-      } catch { case _: IllegalArgumentException => true }
-    } else true // numeric stats: never prune a string read on them
-  }
-
-  private[graft] def pruneBucketsString(
-      spark: SparkSession, path: String, version: Long, m: Map[Int, Long],
-      column: String, lower: Option[String], upper: Option[String]): Map[Int, Long] = {
-    val stats = readStats(spark, path, version)._2
-    val lo = lower.map(_.getBytes("UTF-8"))
-    val hi = upper.map(_.getBytes("UTF-8"))
-    m.filter { case (b, _) =>
-      stats.get(b).flatMap(_.find(st => st.col == column && st.file.isEmpty)) match {
-        case Some(st) => statIntersectsString(st, lo, hi)
-        case None => true
-      }
-    }
-  }
+    readWhere(spark, path, liveVersion(spark, path), column,
+      numericBounds(column, lower, upper))
 
   /** STATS-PRUNED read on a STRING column as of `version`: rows with
     * `column` in `[lower, upper]` (either bound open; bounds compare in
@@ -1840,48 +1742,61 @@ object BucketedSnapshots {
   def readSnapshotWhereString(
       spark: SparkSession, path: String, version: Long, column: String,
       lower: Option[String], upper: Option[String]): DataFrame = {
-    import org.apache.spark.sql.types.StringType
-    val have = versions(spark, path)
-    if (!have.contains(version))
-      throw new java.io.FileNotFoundException(
-        s"bucketed snapshot v=$version at $path is not a retained committed version " +
-          s"(retained: ${if (have.isEmpty) "none" else have.mkString(", ")})")
-    val m = readManifest(spark, path, version)
-    if (m.isEmpty) throw new java.io.FileNotFoundException(
-      s"bucketed snapshot v=$version at $path has an empty manifest")
-    val allDirs = m.toSeq.map { case (b, bv) => s"$path/b=$b/v=$bv" }
-    val full = readDirs(spark, path, version, allDirs)
-    val dt = full.schema.find(_.name == column).getOrElse(
-      throw new IllegalArgumentException(
-        s"column '$column' is not a column of the table at $path")).dataType
-    require(dt == StringType,
-      s"readSnapshotWhereString needs a string column; '$column' is ${dt.catalogString} " +
-        "(use readSnapshotWhere for numeric columns)")
-    val chosen = pruneBucketsString(spark, path, version, m, column, lower, upper)
-    val loB = lower.map(_.getBytes("UTF-8")); val hiB = upper.map(_.getBytes("UTF-8"))
-    val paths = prunedDataPaths(spark, path, version, chosen, column,
-      statIntersectsString(_, loB, hiB))
-    val dvs = readDvs(spark, path, version)
-    val df =
-      if (paths.isEmpty) full.limit(0)
-      else foldDeletes(spark, path,
-        readDirs(spark, path, version, paths),
-        dvPairs(dvs.filter { case (b, _) => chosen.contains(b) }))
-    val c = col(column)
-    val residual = (lower.map(l => c >= lit(l)).toSeq ++ upper.map(u => c <= lit(u)).toSeq)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    df.filter(residual)
+    requireRetained(spark, path, version)
+    readWhere(spark, path, version, column, stringBounds(column, lower, upper))
   }
 
   /** [[readSnapshotWhereString]] on the live version. */
   def readCurrentWhereString(
       spark: SparkSession, path: String, column: String,
       lower: Option[String], upper: Option[String]): DataFrame =
-    currentVersion(spark, path) match {
-      case Some(v) => readSnapshotWhereString(spark, path, v, column, lower, upper)
-      case None =>
-        throw new java.io.FileNotFoundException(s"no committed snapshot under $path")
-    }
+    readWhere(spark, path, liveVersion(spark, path), column,
+      stringBounds(column, lower, upper))
+
+  /** Range bounds of a stats-pruned read, given the column's type:
+    * `(lo, hi, residual filter)` in [[statIntersects]]' terms.
+    */
+  private type Bounds = org.apache.spark.sql.types.DataType =>
+    (Option[Any], Option[Any], org.apache.spark.sql.Column)
+
+  private def numericBounds(
+      column: String, lower: Option[BigDecimal], upper: Option[BigDecimal]): Bounds =
+    dt => typedBounds(dt, column, lower, upper)
+
+  private def stringBounds(
+      column: String, lower: Option[String], upper: Option[String]): Bounds = { dt =>
+    require(dt == org.apache.spark.sql.types.StringType,
+      s"readSnapshotWhereString needs a string column; '$column' is ${dt.catalogString} " +
+        "(use readSnapshotWhere for numeric columns)")
+    val c = col(column)
+    (lower.map(_.getBytes("UTF-8")), upper.map(_.getBytes("UTF-8")),
+      (lower.map(l => c >= lit(l)).toSeq ++ upper.map(u => c <= lit(u)).toSeq)
+        .reduceOption(_ && _).getOrElse(lit(true)))
+  }
+
+  /** The one body of both stats-pruned reads, on a gated version: the
+    * column's type (from the table schema — metadata, not data IO) types
+    * the bounds; buckets prune on their zonemaps, part files inside the
+    * chosen buckets on their per-file entries, and the residual filter
+    * runs on top. Delete vectors of the CHOSEN buckets fold in after
+    * pruning (a delete only narrows content, so pre-delete min/max stay
+    * SAFE — at worst a bucket is read unnecessarily, never skipped
+    * wrongly).
+    */
+  private def readWhere(
+      spark: SparkSession, path: String, version: Long, column: String,
+      bounds: Bounds): DataFrame = {
+    val m = nonEmptyManifest(spark, path, version)
+    val schema = tableSchema(spark, path, version)
+    val dt = schema.find(_.name == column).getOrElse(
+      throw new IllegalArgumentException(
+        s"column '$column' is not a column of the table at $path " +
+          s"(have: ${schema.fieldNames.mkString(", ")})")).dataType
+    val (lo, hi, residual) = bounds(dt)
+    val chosen = pruneBy(spark, path, version, m, column, lo, hi)
+    readBuckets(spark, path, version, chosen, Some(prunedDataPaths(spark, path, version,
+      chosen, column, statIntersects(_, lo, hi)))).filter(residual)
+  }
 
   /** POINT-LOOKUP read as of `version`: rows whose `key` is in `keys`,
     * reading ONLY the buckets the key hash maps to — the serve-path read
@@ -1896,6 +1811,14 @@ object BucketedSnapshots {
   def readSnapshotKeys(
       spark: SparkSession, path: String, version: Long, key: String,
       keys: Seq[Any], maxKeys: Int = 10000): DataFrame = {
+    requireRetained(spark, path, version)
+    readKeys(spark, path, version, key, keys, maxKeys)
+  }
+
+  /** [[readSnapshotKeys]] on a gated version. */
+  private def readKeys(
+      spark: SparkSession, path: String, version: Long, key: String,
+      keys: Seq[Any], maxKeys: Int): DataFrame = {
     import org.apache.spark.sql.types.{StructField, StructType}
     require(keys.nonEmpty, "readSnapshotKeys: empty key list")
     // reject null keys up front (fail-loudly, like the mistyped-key path):
@@ -1907,17 +1830,8 @@ object BucketedSnapshots {
     require(keys.size <= maxKeys,
       s"readSnapshotKeys: ${keys.size} keys > maxKeys=$maxKeys — use a broadcast " +
         "semi-join against readSnapshot for large key sets")
-    val have = versions(spark, path)
-    if (!have.contains(version))
-      throw new java.io.FileNotFoundException(
-        s"bucketed snapshot v=$version at $path is not a retained committed version " +
-          s"(retained: ${if (have.isEmpty) "none" else have.mkString(", ")})")
-    val m = readManifest(spark, path, version)
-    if (m.isEmpty) throw new java.io.FileNotFoundException(
-      s"bucketed snapshot v=$version at $path has an empty manifest")
-    val allDirs = m.toSeq.map { case (b, bv) => s"$path/b=$b/v=$bv" }
-    val full = readDirs(spark, path, version, allDirs)
-    val keyDt = full.schema.find(_.name == key).getOrElse(
+    val m = nonEmptyManifest(spark, path, version)
+    val keyDt = tableSchema(spark, path, version).find(_.name == key).getOrElse(
       throw new IllegalArgumentException(
         s"key '$key' is not a column of the table at $path")).dataType
     val chosen = readNBuckets(spark, path, version) match {
@@ -1926,7 +1840,7 @@ object BucketedSnapshots {
         // (createDataFrame validates the external type against keyDt, so a
         // mistyped key list fails loudly instead of hashing differently)
         val kdf = spark.createDataFrame(
-          spark.sparkContext.parallelize(keys.map(org.apache.spark.sql.Row(_)), 1),
+          spark.sparkContext.parallelize(keys.map(Row(_)), 1),
           StructType(Seq(StructField(key, keyDt))))
         val buckets = kdf
           .select(pmod(xxhash64(col(key)), lit(n.toLong)).cast("int").as("b"))
@@ -1934,25 +1848,14 @@ object BucketedSnapshots {
         m.filter { case (b, _) => buckets.contains(b) }
       case None => m // pre-header table: no pruning, still exact
     }
-    val dvs = readDvs(spark, path, version)
-    val df =
-      if (chosen.isEmpty) full.limit(0)
-      else foldDeletes(spark, path,
-        readDirs(spark, path, version,
-          chosen.toSeq.map { case (b, bv) => s"$path/b=$b/v=$bv" }),
-        dvPairs(dvs.filter { case (b, _) => chosen.contains(b) }))
-    df.filter(col(key).isin(keys: _*))
+    readBuckets(spark, path, version, chosen).filter(col(key).isin(keys: _*))
   }
 
   /** [[readSnapshotKeys]] on the live version. */
   def readCurrentKeys(
       spark: SparkSession, path: String, key: String,
       keys: Seq[Any], maxKeys: Int = 10000): DataFrame =
-    currentVersion(spark, path) match {
-      case Some(v) => readSnapshotKeys(spark, path, v, key, keys, maxKeys)
-      case None =>
-        throw new java.io.FileNotFoundException(s"no committed snapshot under $path")
-    }
+    readKeys(spark, path, liveVersion(spark, path), key, keys, maxKeys)
 
   /** COMPACTION as a table version: rewrite every live bucket dir holding
     * more than `maxFilesPerBucket` data files into ONE file at a fresh
@@ -1984,11 +1887,10 @@ object BucketedSnapshots {
     require(keepVersions >= 1, "keepVersions must be >= 1")
     val fs = fsOf(spark, path)
     val (state, casBase) = pinnedPointer(spark, path)
-    val cur = state.map(_._1).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed snapshot under $path"))
+    val cur = Snapshots.requireLive(path, state.map(_._1))
     val curManifest = readManifest(spark, path, cur)
     def dataFiles(b: Int, bv: Long): Int =
-      fs.listStatus(new Path(s"$path/b=$b/v=$bv")).count { st =>
+      fs.listStatus(new Path(bucketDir(path, b, bv))).count { st =>
         val n = st.getPath.getName
         st.isFile && !n.startsWith("_") && !n.startsWith(".")
       }
@@ -2005,7 +1907,7 @@ object BucketedSnapshots {
       val tmp = new Path(
         path + "__vstaging_compact_" + java.util.UUID.randomUUID().toString.take(12))
       foldDeletes(spark, path,
-        spark.read.parquet(s"$path/b=$b/v=${curManifest(b)}"),
+        spark.read.parquet(bucketDir(path, b, curManifest(b))),
         curDvs.getOrElse(b, Nil).map(b -> _))
         .coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
@@ -2052,11 +1954,11 @@ object BucketedSnapshots {
     require(newNBuckets >= 1, "newNBuckets must be >= 1")
     val fs = fsOf(spark, path)
     val (state, casBase) = pinnedPointer(spark, path)
-    val cur = state.map(_._1).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed snapshot under $path"))
+    val cur = Snapshots.requireLive(path, state.map(_._1))
     require(!readNBuckets(spark, path, cur).contains(newNBuckets),
       s"table at $path already has nBuckets=$newNBuckets")
-    val rows = readSnapshot(spark, path, cur)
+    // the pinned version needs no retention check: no third pointer read
+    val rows = snapshot(spark, path, cur)
     require(rows.columns.contains(key), s"key '$key' is not a column of the table at $path")
     val bucketOf = pmod(xxhash64(col(key)), lit(newNBuckets.toLong)).cast("int")
     val prevStatCols = readStats(spark, path, cur)._1

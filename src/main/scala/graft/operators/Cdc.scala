@@ -194,23 +194,6 @@ object Cdc {
   private def stripMeta(df: DataFrame): DataFrame =
     df.filter(!col(DeletedMeta)).drop(SeqMeta, DeletedMeta, RankMeta)
 
-  /** CHANGE DATA FEED between two committed versions of an
-    * [[applyChanges]] table, on the LIVE (tombstone-filtered)
-    * view — a key tombstoned between the versions emits a real 'D' with
-    * its pre-delete payload ([[Snapshots.readChangesBetween]] semantics;
-    * the bucketed twin is
-    * [[graft.operators.BucketedSnapshots.readTableChangesBetween]], which
-    * additionally manifest-prunes the reads).
-    */
-  def readTableChangesVersioned(
-      spark: SparkSession, path: String, key: String,
-      fromV: Long, toV: Long, updatePreimages: Boolean = false): DataFrame = {
-    require(fromV < toV, s"change feed runs forward: fromV=$fromV, toV=$toV")
-    Snapshots.diffByKey(
-      stripMeta(Snapshots.readSnapshot(spark, path, fromV)),
-      stripMeta(Snapshots.readSnapshot(spark, path, toV)), key, updatePreimages)
-  }
-
   /** TIME TRAVEL: the live view exactly as committed at `version` —
     * immutable even while newer versions commit ([[Snapshots.readSnapshot]]
     * fails fast once the version ages out of retention).
@@ -227,10 +210,8 @@ object Cdc {
     * the committed version.
     */
   def pruneTombstones(spark: SparkSession, path: String, lowWatermark: Long): Long =
-    Snapshots.commitWith(spark, path, {
-      case None => throw new java.io.FileNotFoundException(s"no committed snapshot under $path")
-      case Some(cur) => cur.filter(!col(DeletedMeta) || col(SeqMeta) >= lowWatermark)
-    })
+    Snapshots.commitWith(spark, path, cur =>
+      Snapshots.requireLive(path, cur).filter(!col(DeletedMeta) || col(SeqMeta) >= lowWatermark))
 
   /** SCD Type-2 dimension history from the same change stream
     * [[applyChanges]] consumes — where the snapshot table answers "what is

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.MetaFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -52,39 +53,19 @@ object FeedConsumer {
   /** The rollup table maintained under the consumer. */
   def rollupPath(consumerPath: String): String = s"$consumerPath/rollup"
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** `(last fully-applied upstream version, downstream version that apply
     * committed)`, or None before the bootstrap.
     */
-  def offset(spark: SparkSession, consumerPath: String): Option[(Long, Long)] = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, consumerPath)
-    val p = new Path(offsetPath(consumerPath))
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    txt.trim.split(",") match {
+  def offset(spark: SparkSession, consumerPath: String): Option[(Long, Long)] =
+    MetaFile.read(spark, offsetPath(consumerPath)).flatMap(_.trim.split(",") match {
       case Array(up, down) =>
         for { u <- up.toLongOption; d <- down.toLongOption } yield (u, d)
       case _ => None
-    }
-  }
+    })
 
   private def writeOffset(
-      spark: SparkSession, consumerPath: String, upV: Long, downV: Long): Unit = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
-    val fs = fsOf(spark, consumerPath)
-    fs.mkdirs(new Path(consumerPath))
-    val tmp = new Path(offsetPath(consumerPath) + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$upV,$downV".getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(new Path(consumerPath).toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, new Path(offsetPath(consumerPath)), Options.Rename.OVERWRITE)
-  }
+      spark: SparkSession, consumerPath: String, upV: Long, downV: Long): Unit =
+    MetaFile.replace(spark, offsetPath(consumerPath), s"$upV,$downV")
 
   private def aggOf(rows: DataFrame, groupCol: String, measures: Seq[String]): DataFrame =
     rows.groupBy(groupCol).agg(

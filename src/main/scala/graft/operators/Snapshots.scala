@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.MetaFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
 
@@ -28,9 +29,12 @@ class CommitConflictException(msg: String)
   *                               lines = older RETAINED committed versions
   *
   * Commit = write the full new snapshot to `v=N+1` (invisible to readers),
-  * then atomically replace `_CURRENT` — a single small-object write
-  * (all-or-nothing on object stores; `FileContext` overwrite-rename on
-  * HDFS/POSIX). A crash before the pointer flip leaves `v=N` live and
+  * then atomically replace `_CURRENT` — a single small-object write.
+  * [[flipPointer]] is the one commit point of both table formats (this
+  * one and [[BucketedSnapshots]]): it CAS-checks the pointer, then writes
+  * it through [[graft.sources.MetaFile.replace]], the one atomic write of
+  * every metadata file (pointer, refs, branches, manifest sidecars). A
+  * crash before the pointer flip leaves `v=N` live and
   * `v=N+1` as an inert orphan the next commit skips past (never a merge
   * base, never time-travel-readable — the committed-version list in the
   * pointer is what distinguishes a real historical snapshot from a failed
@@ -77,7 +81,7 @@ object Snapshots {
   /** The live pointer from ONE read of `_CURRENT`: `(state, casBase)` —
     * the state, kept only if `valid` finds its live version in the
     * layout, and the raw live version the flip CAS-checks
-    * ([[checkPointerUnmoved]]). One read is what makes the CAS exact: a
+    * ([[flipPointer]]). One read is what makes the CAS exact: a
     * commit landing after it moves the pointer off `casBase`, so the flip
     * aborts instead of dropping that commit. A dangling pointer reads as
     * no state but keeps its raw CAS base, so it is not mistaken for
@@ -94,17 +98,12 @@ object Snapshots {
     * bucketed table's manifest, [[BucketedSnapshots]]).
     */
   private[graft] def pointerStateRaw(
-      spark: SparkSession, path: String): Option[(Long, Seq[Long])] = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, path)
-    val marker = new Path(path, "_CURRENT")
-    if (!fs.exists(marker)) return None
-    val in = fs.open(marker)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val vs = txt.split("\n").iterator.map(_.trim).filter(_.nonEmpty)
-      .flatMap(_.toLongOption).toSeq
-    vs.headOption.map(v => (v, vs.distinct))
-  }
+      spark: SparkSession, path: String): Option[(Long, Seq[Long])] =
+    MetaFile.read(spark, s"$path/_CURRENT").flatMap { txt =>
+      val vs = txt.split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+        .flatMap(_.toLongOption).toSeq
+      vs.headOption.map(v => (v, vs.distinct))
+    }
 
   /** The pointer-committed live version, if any. */
   def currentVersion(spark: SparkSession, path: String): Option[Long] =
@@ -141,41 +140,41 @@ object Snapshots {
   private def branchFile(path: String, name: String) = s"$path/branches/$name.txt"
 
   private[graft] def readBranches(
-      spark: SparkSession, path: String): Map[String, (Long, Long)] = {
+      spark: SparkSession, path: String): Map[String, (Long, Long)] =
+    readNamed(spark, s"$path/branches").flatMap { case (name, txt) =>
+      txt.trim.split(",") match {
+        case Array(h, b) =>
+          for { hv <- h.toLongOption; bv <- b.toLongOption } yield name -> (hv, bv)
+        case _ => None
+      }
+    }.toMap
+
+  /** `name -> text` of every `<name>.txt` under `dir` (refs, branches). */
+  private def readNamed(spark: SparkSession, dir: String): Seq[(String, String)] = {
     import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, path)
-    val dir = new Path(s"$path/branches")
-    if (!fs.exists(dir)) return Map.empty
-    fs.listStatus(dir).toSeq
+    val fs = fsOf(spark, dir)
+    val d = new Path(dir)
+    if (!fs.exists(d)) Nil
+    else fs.listStatus(d).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".txt"))
-      .flatMap { st =>
-        val in = fs.open(st.getPath)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        txt.trim.split(",") match {
-          case Array(h, b) =>
-            for { hv <- h.toLongOption; bv <- b.toLongOption }
-              yield st.getPath.getName.stripSuffix(".txt") -> (hv, bv)
-          case _ => None
-        }
-      }.toMap
+      .flatMap(st => MetaFile.read(spark, st.getPath.toString)
+        .map(st.getPath.getName.stripSuffix(".txt") -> _))
+  }
+
+  /** Write a ref or branch file; without `overwrite` an existing one is
+    * an error (`taken`).
+    */
+  private def writeNamed(spark: SparkSession, file: String, name: String,
+      text: String, overwrite: Boolean, taken: => String): Unit = {
+    checkRefName(name)
+    require(overwrite || !fsOf(spark, file).exists(new org.apache.hadoop.fs.Path(file)), taken)
+    MetaFile.replace(spark, file, text)
   }
 
   private[graft] def writeBranchFile(spark: SparkSession, path: String, name: String,
-      head: Long, base: Long, overwrite: Boolean): Unit = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
-    checkRefName(name)
-    val fs = fsOf(spark, path)
-    val dst = new Path(branchFile(path, name))
-    require(overwrite || !fs.exists(dst),
+      head: Long, base: Long, overwrite: Boolean): Unit =
+    writeNamed(spark, branchFile(path, name), name, s"$head,$base", overwrite,
       s"branch '$name' already exists at $path")
-    fs.mkdirs(new Path(s"$path/branches"))
-    val tmp = new Path(branchFile(path, name) + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$head,$base".getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, dst, Options.Rename.OVERWRITE)
-  }
 
   private[graft] def dropBranchFile(spark: SparkSession, path: String, name: String): Unit = {
     import org.apache.hadoop.fs.Path
@@ -193,20 +192,10 @@ object Snapshots {
   def listTags(spark: SparkSession, path: String): Map[String, Long] =
     readRefs(spark, path)
 
-  private[graft] def readRefs(spark: SparkSession, path: String): Map[String, Long] = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, path)
-    val dir = new Path(s"$path/refs")
-    if (!fs.exists(dir)) return Map.empty
-    fs.listStatus(dir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".txt"))
-      .flatMap { st =>
-        val in = fs.open(st.getPath)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        txt.trim.toLongOption.map(st.getPath.getName.stripSuffix(".txt") -> _)
-      }.toMap
-  }
+  private[graft] def readRefs(spark: SparkSession, path: String): Map[String, Long] =
+    readNamed(spark, s"$path/refs").flatMap { case (name, txt) =>
+      txt.trim.toLongOption.map(name -> _)
+    }.toMap
 
   /** TAG a committed version under a name — the training-run
     * reproducibility pin: a tagged version (and everything it references)
@@ -248,20 +237,9 @@ object Snapshots {
   }
 
   private[graft] def writeRef(spark: SparkSession, path: String, name: String,
-      version: Long, overwrite: Boolean): Unit = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
-    checkRefName(name)
-    val fs = fsOf(spark, path)
-    val dst = new Path(refPath(path, name))
-    require(overwrite || !fs.exists(dst),
+      version: Long, overwrite: Boolean): Unit =
+    writeNamed(spark, refPath(path, name), name, version.toString, overwrite,
       s"ref '$name' already exists at $path (pass overwrite = true to re-pin)")
-    fs.mkdirs(new Path(s"$path/refs"))
-    val tmp = new Path(refPath(path, name) + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(version.toString.getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, dst, Options.Rename.OVERWRITE)
-  }
 
   /** The version a tag pins, if the tag exists. */
   def tagVersion(spark: SparkSession, path: String, name: String): Option[Long] =
@@ -293,12 +271,24 @@ object Snapshots {
     * fail.
     */
   def readCurrent(spark: SparkSession, path: String): DataFrame =
-    currentVersion(spark, path)
-      .orElse(successVersions(spark, path).sorted.lastOption) match {
-      case Some(v) => spark.read.parquet(versionDir(path, v))
-      case None =>
-        throw new java.io.FileNotFoundException(s"no committed snapshot under $path")
-    }
+    spark.read.parquet(versionDir(path, requireLive(path,
+      currentVersion(spark, path).orElse(successVersions(spark, path).sorted.lastOption))))
+
+  /** The live version (or snapshot) a reader or writer resolved, or the
+    * one error both table formats raise for a table with no commit.
+    */
+  private[graft] def requireLive[A](path: String, live: Option[A]): A =
+    live.getOrElse(throw new java.io.FileNotFoundException(s"no committed snapshot under $path"))
+
+  /** The one version gate of both table formats: `version` must be one of
+    * `have` (the layout's readable committed versions), else a
+    * FileNotFoundException names the retained list.
+    */
+  private[graft] def requireRetained(path: String, version: Long, have: Seq[Long]): Unit =
+    if (!have.contains(version))
+      throw new java.io.FileNotFoundException(
+        s"snapshot v=$version at $path is not a retained committed version " +
+          s"(retained: ${if (have.isEmpty) "none" else have.mkString(", ")})")
 
   /** TIME TRAVEL: read the table exactly as committed at `version`. Only
     * versions in the retained committed history qualify — an expired
@@ -306,11 +296,7 @@ object Snapshots {
     * retained list, never returns partial data.
     */
   def readSnapshot(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val have = versions(spark, path)
-    if (!have.contains(version))
-      throw new java.io.FileNotFoundException(
-        s"snapshot v=$version at $path is not a retained committed version " +
-          s"(retained: ${if (have.isEmpty) "none" else have.mkString(", ")})")
+    requireRetained(path, version, versions(spark, path))
     spark.read.parquet(versionDir(path, version))
   }
 
@@ -431,8 +417,9 @@ object Snapshots {
     * Commit sequence (crash anywhere leaves a consistent table):
     *   1. pin the pointer (one read)     — crash: nothing happened
     *   2. write v=N+1 (+ stageExtra)     — crash: inert orphan, v=N live
-    *   3. CAS check: pointer unmoved     — crash/conflict: orphan, v live
-    *   4. atomically replace _CURRENT    — the commit point
+    *   3-4. [[flipPointer]]: CAS check   — crash/conflict: orphan, v live
+    *        (pointer unmoved), then
+    *        atomically replace _CURRENT  — the commit point
     *   5. GC expired snapshots           — crash: extra dirs, next run GCs
     *
     * Concurrency: step 3 re-reads `_CURRENT` and ABORTS with
@@ -464,7 +451,7 @@ object Snapshots {
       f: Option[(Long, DataFrame)] => Option[DataFrame],
       keepVersions: Int,
       stageExtra: org.apache.hadoop.fs.Path => Unit): Option[Long] = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
+    import org.apache.hadoop.fs.Path
     require(keepVersions >= 1, "keepVersions must be >= 1")
     val fs = fsOf(spark, path)
     val (state, casBase) = pinnedPointer(spark, path)(hasVersionDir(spark, path))
@@ -484,15 +471,7 @@ object Snapshots {
     // previous snapshot after a single crash+commit
     val retained = (next +: state.map(_._2).getOrElse(Seq.empty)).distinct
       .sorted.reverse.take(keepVersions)
-    checkPointerUnmoved(spark, path, casBase)
-    val root = new Path(path)
-    val tmp = new Path(root, "_CURRENT.tmp")
-    val marker = new Path(root, "_CURRENT")
-    val out = fs.create(tmp, true)
-    try out.write(retained.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    FileContext.getFileContext(root.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, marker, Options.Rename.OVERWRITE)
+    flipPointer(spark, path, casBase, retained)
     // retention GC strictly AFTER the commit point: only dirs BELOW the
     // oldest retained version go — younger unretained dirs are orphans a
     // fallback reader may still resolve, and they age out once the
@@ -508,20 +487,24 @@ object Snapshots {
     Some(next)
   }
 
-  /** Optimistic-concurrency gate shared by [[Snapshots]] and
-    * [[BucketedSnapshots]]: abort unless the live pointer still equals the
-    * version this commit merged from. See [[commitWith]]'s concurrency
-    * note for the atomicity contract per filesystem.
+  /** THE commit point of both table formats ([[commitWith]], and
+    * [[BucketedSnapshots]]' manifest commits and branch publish): abort
+    * with [[CommitConflictException]], before writing anything, unless the
+    * live pointer still equals `casBase` (the version this commit merged
+    * from), then atomically replace `_CURRENT` with `retained` (live
+    * version first). See [[commitWith]]'s concurrency note for the
+    * atomicity contract per filesystem.
     */
-  private[graft] def checkPointerUnmoved(
-      spark: SparkSession, path: String, mergeBase: Option[Long]): Unit = {
+  private[graft] def flipPointer(
+      spark: SparkSession, path: String, casBase: Option[Long], retained: Seq[Long]): Unit = {
     val liveNow = pointerStateRaw(spark, path).map(_._1)
-    if (liveNow != mergeBase)
+    if (liveNow != casBase)
       throw new CommitConflictException(
         s"concurrent commit detected at $path: merge base was " +
-          s"${mergeBase.fold("<empty table>")(v => s"v=$v")} but the live version is now " +
+          s"${casBase.fold("<empty table>")(v => s"v=$v")} but the live version is now " +
           s"${liveNow.fold("<empty table>")(v => s"v=$v")}; this commit's staged data is an " +
           "inert orphan — retry from the new base")
+    MetaFile.replace(spark, s"$path/_CURRENT", retained.mkString("\n"))
   }
 
   /** Every `v=` directory, committed or not — the writer's collision-free

@@ -51,8 +51,8 @@ object TableMeta {
   def files(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
-    val v = version.orElse(BucketedSnapshots.currentVersion(spark, path)).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed snapshot under $path"))
+    val v = Snapshots.requireLive(path,
+      version.orElse(BucketedSnapshots.currentVersion(spark, path)))
     require(BucketedSnapshots.versions(spark, path).contains(v),
       s"v=$v at $path is not a readable committed version")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -77,8 +77,8 @@ object TableMeta {
     */
   def statsTable(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val v = version.orElse(BucketedSnapshots.currentVersion(spark, path)).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed snapshot under $path"))
+    val v = Snapshots.requireLive(path,
+      version.orElse(BucketedSnapshots.currentVersion(spark, path)))
     require(BucketedSnapshots.versions(spark, path).contains(v),
       s"v=$v at $path is not a readable committed version")
     val (_, stats) = BucketedSnapshots.readStats(spark, path, v)

@@ -1,6 +1,6 @@
 package graft.registry
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.AsOfJoin
@@ -29,8 +29,8 @@ object ConnectorQueries {
     */
   val AddressListCap = 10000
 
-  private def root(name: String, d: String): String =
-    "/root/repo/target/tmp/pages_" + name + "_" + d.replaceAll("[^A-Za-z0-9]", "_")
+  private def root(s: SparkSession, name: String, d: String): String =
+    Registry.scratch(s, "pages_" + name, d)
 
   private val EVENT_DDL =
     "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE"
@@ -65,7 +65,7 @@ object ConnectorQueries {
           val lo = mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) * 2 / 5
           (lo, lo + 864000000000000L) // + 10 days of nanoseconds
         }
-      val rt = root("http", d)
+      val rt = root(s, "http", d)
       Paged.serveOffsetPages(
         ev.filter(col("ts") > w && col("ts") <= hi), Seq("ts", "event_id"), PAGE_SIZE, rt)
       s.read.format(Paged.FORMAT)
@@ -105,7 +105,7 @@ object ConnectorQueries {
         .filter(col("asof_event_id").isNotNull) // a type with no events yet at this block: the server returns nothing
         .select(col("block"), col("event_type"),
           col("asof_event_id").as("last_event"), col("asof_value").as("last_value"))
-      val rt = root("snap", d)
+      val rt = root(s, "snap", d)
       Paged.serveSnapshotPages(snap, "block", rt)
       s.read.format(Paged.FORMAT)
         .option("path", rt).option("mode", "snapshot")
@@ -136,7 +136,7 @@ object ConnectorQueries {
     (s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val rt = root("keyset", d)
+      val rt = root(s, "keyset", d)
       Paged.serveKeysetPages(ev, "event_id", batchSize = 6000, nAliases = 6, root = rt)
       s.read.format(Paged.FORMAT)
         .option("path", rt).option("mode", "keyset").option("cursorField", "event_id")
@@ -165,7 +165,7 @@ object ConnectorQueries {
     (s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val rt = root("keyres", d)
+      val rt = root(s, "keyres", d)
       val steps = Paged.serveKeysetPages(ev, "event_id", batchSize = 6000, nAliases = 6, root = rt)
       val k = steps / 2
       val cursor =
@@ -219,7 +219,7 @@ object ConnectorQueries {
         .filter(col("rk") === 1)
         .select(col("user_id"), col("event_type"),
           col("event_id").as("last_event"), col("value").as("last_value"))
-      val rt = root("addr", d)
+      val rt = root(s, "addr", d)
       Paged.serveBucketedPages(cur, "user_id", nBuckets = 16, root = rt)
       // fixture's stand-in for the externally-given list — CAPPED: the
       // limit(cap+1) bounds the collect itself (an unbounded key set can
@@ -274,8 +274,8 @@ object ConnectorQueries {
       val win = ev.filter(col("ts") > w && col("ts") <= hi)
       val wm = win.agg(min("ts"), max("ts")).head
       val mid = if (wm.isNullAt(0)) 0L else (wm.getLong(0) + wm.getLong(1)) / 2
-      val rt = root("stream", d)
-      val base = "/root/repo/target/tmp/stream_ingest_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val rt = root(s, "stream", d)
+      val base = Registry.scratch(s, "stream_ingest", d)
       val (out, cp) = (base + "/out", base + "/cp")
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -334,8 +334,8 @@ object ConnectorQueries {
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       val mm = ev.agg(min("event_id"), max("event_id")).head
       val mid = if (mm.isNullAt(0)) 0L else (mm.getLong(0) + mm.getLong(1)) / 2
-      val rt = root("kstream", d)
-      val base = "/root/repo/target/tmp/keyset_ingest_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val rt = root(s, "kstream", d)
+      val base = Registry.scratch(s, "keyset_ingest", d)
       val (out, cp) = (base + "/out", base + "/cp")
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(s.sparkContext.hadoopConfiguration)

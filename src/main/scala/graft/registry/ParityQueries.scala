@@ -1443,7 +1443,7 @@ object ParityQueries {
         df.groupBy("user_id").agg(dsum(col("value")).as("total"), count(lit(1)).as("n"))
       val base = aggOf(e.filter(col("epoch") < MidEpoch))
       val upd = aggOf(e.filter(col("epoch") >= MidEpoch))
-      val path = "/root/repo/target/tmp/upsert_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "upsert", d)
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(p, true)
@@ -1472,7 +1472,7 @@ object ParityQueries {
         df.groupBy("user_id").agg(dsum(col("value")).as("total"), count(lit(1)).as("n"))
       val base = aggOf(e.filter(col("epoch") < MidEpoch))
       val upd = aggOf(e.filter(col("epoch") >= MidEpoch))
-      val path = "/root/repo/target/tmp/upsertb_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "upsertb", d)
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(p, true)
@@ -1505,7 +1505,7 @@ object ParityQueries {
         df.groupBy("user_id").agg(dsum(col("value")).as("total"), count(lit(1)).as("n"))
       val base = aggOf(e.filter(col("epoch") < MidEpoch))
       val upd = aggOf(e.filter(col("epoch") >= MidEpoch))
-      val path = "/root/repo/target/tmp/upsertbv_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "upsertbv", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val v1 = graft.operators.BucketedSnapshots.upsertByKey(
@@ -1545,7 +1545,7 @@ object ParityQueries {
       val upd = e.filter(col("epoch") >= MidEpoch)
         .groupBy("user_id").agg(dsum(col("value")).as("total"), count(lit(1)).as("n"),
           max(col("epoch")).as("last_epoch"))
-      val path = "/root/repo/target/tmp/upsertevo_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "upsertevo", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.operators.BucketedSnapshots.upsertByKey(s, base, path, "user_id", nBuckets = 16)
@@ -1583,7 +1583,7 @@ object ParityQueries {
         df.groupBy("user_id").agg(dsum(col("value")).as("total"), count(lit(1)).as("n"))
       val base = aggOf(e.filter(col("epoch") < MidEpoch))
       val upd = aggOf(e.filter(col("epoch") >= MidEpoch))
-      val path = "/root/repo/target/tmp/statsprune_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "statsprune", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.operators.BucketedSnapshots.upsertByKey(
@@ -1622,7 +1622,7 @@ object ParityQueries {
           count(lit(1)).as("n"))
       val base = aggOf(e.filter(col("epoch") < MidEpoch))
       val upd = aggOf(e.filter(col("epoch") >= MidEpoch))
-      val path = "/root/repo/target/tmp/statsprunes_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "statsprunes", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.operators.BucketedSnapshots.upsertByKey(
@@ -1662,7 +1662,7 @@ object ParityQueries {
         df.groupBy("user_id").agg(dsum(col("value")).as("total"), count(lit(1)).as("n"))
       val base = aggOf(e.filter(col("epoch") < MidEpoch))
       val upd = aggOf(e.filter(col("epoch") >= MidEpoch))
-      val path = "/root/repo/target/tmp/tagread_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "tagread", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val v1 = graft.operators.BucketedSnapshots.upsertByKey(
@@ -1701,7 +1701,7 @@ object ParityQueries {
       val e = evDf(s, d)
       def aggOf(df: DataFrame) =
         df.groupBy("user_id").agg(dsum(col("value")).as("total"), count(lit(1)).as("n"))
-      val path = "/root/repo/target/tmp/pointlk_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "pointlk", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.operators.BucketedSnapshots.upsertByKey(
@@ -1741,8 +1741,8 @@ object ParityQueries {
           .when(col("event_id") % 7 < 3, "I").otherwise("U").as("op"),
         col("event_id").as("last_seq"),
         col("event_type").as("last_type"))
-      val up = "/root/repo/target/tmp/feedup_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      val cons = "/root/repo/target/tmp/feedcons_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val up = Registry.scratch(s, "feedup", d)
+      val cons = Registry.scratch(s, "feedcons", d)
       Seq(up, cons).foreach { path =>
         val p = new org.apache.hadoop.fs.Path(path)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -1790,7 +1790,7 @@ object ParityQueries {
           .when(col("event_id") % 7 < 3, "I").otherwise("U").as("op"),
         col("event_id").as("last_seq"),
         col("event_type").as("last_type"))
-      val base = "/root/repo/target/tmp/sfeed_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "sfeed", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       ch.filter(col("seq") % 2 === 1).coalesce(1).write.parquet(s"$base/in")
@@ -1829,7 +1829,7 @@ object ParityQueries {
       def aggOf(df: DataFrame) =
         df.groupBy(concat(lit("0xw"), col("user_id").cast("string")).as("wallet_address"))
           .agg(dsum(col("value")).as("total_eth_value"), count(lit(1)).as("n_events"))
-      val path = "/root/repo/target/tmp/upserts_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "upserts", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       Incremental.upsertByKey(s, aggOf(e.filter(col("epoch") < MidEpoch)), path, "wallet_address")
@@ -1903,7 +1903,7 @@ object ParityQueries {
       val e = evDf(s, d)
       def aggOf(df: DataFrame) =
         df.groupBy("user_id").agg(dsum(col("value")).as("total"), count(lit(1)).as("n"))
-      val path = "/root/repo/target/tmp/ctas_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "ctas", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       Incremental.overwriteTable(aggOf(e.filter(col("epoch") < MidEpoch)), path)
@@ -1919,7 +1919,7 @@ object ParityQueries {
       val e = evDf(s, d)
       def aggOf(df: DataFrame) =
         df.groupBy("user_id").agg(dsum(col("value")).as("total"), count(lit(1)).as("n"))
-      val path = "/root/repo/target/tmp/upsertv_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "upsertv", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       Incremental.upsertByKey(s, aggOf(e.filter(col("epoch") < MidEpoch)), path, "user_id")
@@ -2047,7 +2047,7 @@ object ParityQueries {
     "streaming_sequence_match",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_seq_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_seq", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val ev = Tables.events(s, d).select("user_id", "event_type", "ts", "event_id")
@@ -2173,7 +2173,7 @@ object ParityQueries {
         col("event_id").as("last_seq"),
         col("event_type").as("last_type"),
         col("value").as("last_value"))
-      val path = "/root/repo/target/tmp/cdc_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "cdc", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.operators.Cdc.applyChanges(s, ch.filter(col("seq") % 2 === 1), path, "user_id")
@@ -2211,7 +2211,7 @@ object ParityQueries {
         col("event_id").as("last_seq"),
         col("event_type").as("last_type"),
         col("value").as("last_value"))
-      val path = "/root/repo/target/tmp/cdcb_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "cdcb", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.operators.BucketedSnapshots.applyChanges(
@@ -2253,7 +2253,7 @@ object ParityQueries {
         col("event_id").as("last_seq"),
         col("event_type").as("last_type"),
         col("value").as("last_value"))
-      val path = "/root/repo/target/tmp/cdce_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "cdce", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.operators.BucketedSnapshots.applyChanges(s, ch, path, "user_id", nBuckets = 16)
@@ -2296,7 +2296,7 @@ object ParityQueries {
         col("event_id").as("last_seq"),
         col("event_type").as("last_type"),
         col("value").as("last_value"))
-      val path = "/root/repo/target/tmp/cdcv_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "cdcv", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val v1 = graft.operators.Cdc.applyChanges(
@@ -2348,7 +2348,7 @@ object ParityQueries {
         col("event_id").as("last_seq"),
         col("event_type").as("last_type"),
         col("value").as("last_value"))
-      val path = "/root/repo/target/tmp/cdf_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "cdf", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val v1 = graft.operators.BucketedSnapshots.applyChanges(
@@ -2423,8 +2423,8 @@ object ParityQueries {
         count(lit(1)).as("n_events"), max(col("event_id")).as("max_event"))
       val right = ev.filter(col("event_id") % 2 === 0).groupBy("user_id").agg(
         count(lit(1)).as("n_even"), min(col("event_id")).as("min_even"))
-      val pl = "/root/repo/target/tmp/spjl_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      val pr = "/root/repo/target/tmp/spjr_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val pl = Registry.scratch(s, "spjl", d)
+      val pr = Registry.scratch(s, "spjr", d)
       Seq(pl, pr).foreach { p =>
         val hp = new org.apache.hadoop.fs.Path(p)
         hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
@@ -2465,7 +2465,7 @@ object ParityQueries {
     (s, d) => {
       val base = evDf(s, d).groupBy("user_id").agg(count(lit(1)).as("n"))
         .withColumn("tag", concat(lit("u"), col("user_id")))
-      val path = "/root/repo/target/tmp/bloom_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "bloom", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.operators.BucketedSnapshots.upsertByKey(
@@ -2484,7 +2484,7 @@ object ParityQueries {
     (s, d) => {
       val base = evDf(s, d).groupBy("user_id").agg(
         count(lit(1)).as("n"), max(col("event_id")).as("max_event"))
-      val path = "/root/repo/target/tmp/dv_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "dv", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.operators.BucketedSnapshots.upsertByKey(
@@ -2529,7 +2529,7 @@ object ParityQueries {
     (s, d) => {
       val base = evDf(s, d).groupBy("user_id").agg(
         count(lit(1)).as("n"), max(col("event_id")).as("max_event"))
-      val path = "/root/repo/target/tmp/wap_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "wap", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.operators.BucketedSnapshots.upsertByKey(
@@ -2578,7 +2578,7 @@ object ParityQueries {
     (s, d) => {
       val base = evDf(s, d).groupBy("user_id").agg(
         count(lit(1)).as("n"), max(col("event_id")).as("max_event"))
-      val path = "/root/repo/target/tmp/meta_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "meta", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       import graft.operators.{BucketedSnapshots => BS, TableMeta}
@@ -2737,7 +2737,7 @@ object ParityQueries {
     "streaming_scd2_apply",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_scd2_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_scd2", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val ch = Tables.events(s, d).select("user_id", "ts", "event_id", "event_type")
@@ -3000,7 +3000,7 @@ object ParityQueries {
   private val aggStateQ = Q(
     "snk_agg_incremental",
     (s, d) => {
-      val path = "/root/repo/target/tmp/aggstate_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "aggstate", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val ev = evDf(s, d)

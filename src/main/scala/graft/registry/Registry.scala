@@ -35,6 +35,19 @@ object Registry {
 
   lazy val byName: Map[String, Q] = all.map(q => q.name -> q).toMap
 
+  /** Where row `name` keeps its tables for dataset `d`: `tmp/<name>_<d>`
+    * (`d` reduced to `[A-Za-z0-9_]`) beside the session's warehouse dir.
+    * `graft.Session` puts the warehouse at `target/warehouse` of the
+    * working directory, so each checkout's runs write into its own
+    * `target/tmp`.
+    */
+  private[registry] def scratch(s: SparkSession, name: String, d: String): String = {
+    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
+    val root = wh.getFileSystem(s.sparkContext.hadoopConfiguration).makeQualified(wh)
+      .getParent.toUri.getPath
+    s"$root/tmp/${name}_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+  }
+
   /** Shared SQL fragments for oracle queries. */
   object Ora {
     /** events with integer epoch seconds / epoch days derived from the

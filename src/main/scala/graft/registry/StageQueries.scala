@@ -138,7 +138,7 @@ object StageQueries {
     "snk_parquet_partitioned",
     (s, d) => {
       val e = ParityQueries.evDf(s, d)
-      val path = "/root/repo/target/tmp/part_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "part", d)
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(p, true)
@@ -165,7 +165,7 @@ object StageQueries {
     "snk_range_clustered",
     (s, d) => {
       val e = ParityQueries.evDf(s, d)
-      val path = "/root/repo/target/tmp/rangeclu_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "rangeclu", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.sources.Layout.writeRangeClustered(
@@ -195,7 +195,7 @@ object StageQueries {
     "scan_zonemap_prune",
     (s, d) => {
       val e = ParityQueries.evDf(s, d)
-      val path = "/root/repo/target/tmp/zonemap_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "zonemap", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.sources.Layout.writeZoneMapped(
@@ -223,7 +223,7 @@ object StageQueries {
     "layout_zorder",
     (s, d) => {
       val e = ParityQueries.evDf(s, d)
-      val path = "/root/repo/target/tmp/zorder_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "zorder", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.sources.Layout.writeZOrdered(
@@ -250,7 +250,7 @@ object StageQueries {
     "layout_hilbert",
     (s, d) => {
       val e = ParityQueries.evDf(s, d)
-      val path = "/root/repo/target/tmp/hilbert_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "hilbert", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.sources.Layout.writeHilbertOrdered(

@@ -1162,7 +1162,7 @@ object TrainingQueries {
       val base = emb.filter(pmod(col("vec_id"), lit(10L)) < 6)
       val b1 = emb.filter(pmod(col("vec_id"), lit(10L)).isin(6L, 7L))
       val b2 = emb.filter(pmod(col("vec_id"), lit(10L)) >= 8)
-      val rt = "/root/repo/target/tmp/ivfidx_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val rt = Registry.scratch(s, "ivfidx", d)
       val p = new org.apache.hadoop.fs.Path(rt)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       Similarity.ivfWriteIndex(base, "vec_id", "embedding", rt,
@@ -3450,7 +3450,7 @@ object TrainingQueries {
   private val jsonlRoundtrip = Q(
     "src_jsonl_roundtrip",
     (s, d) => {
-      val path = "/root/repo/target/tmp/jsonl_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "jsonl", d)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
@@ -3473,7 +3473,7 @@ object TrainingQueries {
   private val csvRoundtrip = Q(
     "src_csv_roundtrip",
     (s, d) => {
-      val path = "/root/repo/target/tmp/csv_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "csv", d)
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
       graft.sources.Formats.writeCsv(docs, path)
       graft.sources.Formats.readCsv(s, path, docs.schema)
@@ -3495,7 +3495,7 @@ object TrainingQueries {
   private val orcRoundtrip = Q(
     "src_orc_roundtrip",
     (s, d) => {
-      val path = "/root/repo/target/tmp/orc_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Registry.scratch(s, "orc", d)
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text", "n_chars")
       graft.sources.Formats.writeOrc(docs, path)
       graft.sources.Formats.readOrc(s, path, docs.schema)
@@ -3517,7 +3517,7 @@ object TrainingQueries {
   private val schemaEvolution = Q(
     "src_schema_evolution",
     (s, d) => {
-      val base = "/root/repo/target/tmp/evolve_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "evolve", d)
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0).select("doc_id", "lang")
         .write.mode("overwrite").parquet(base + "/v1")
@@ -4886,7 +4886,7 @@ object TrainingQueries {
     "streaming_upsert_serve",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_upsert_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_upsert", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val schema = s.read.parquet(s"$d/events.parquet").schema
@@ -4919,7 +4919,7 @@ object TrainingQueries {
     "streaming_cdc_apply",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_cdc_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_cdc", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val ch = ParityQueries.evDf(s, d).select(
@@ -4960,7 +4960,7 @@ object TrainingQueries {
     "streaming_hll_ingest",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_hll_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_hll", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val ev = ParityQueries.evDf(s, d).select("event_id")
@@ -4986,7 +4986,7 @@ object TrainingQueries {
     "streaming_aggstate_ingest",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_aggstate_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_aggstate", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val ev = ParityQueries.evDf(s, d).select("event_type", "value")
@@ -5016,7 +5016,7 @@ object TrainingQueries {
     "streaming_cms_ingest",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_cms_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_cms", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val ev = ParityQueries.evDf(s, d)
@@ -5064,7 +5064,7 @@ object TrainingQueries {
     "streaming_drift_psi",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_psi_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_psi", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val ev = ParityQueries.evDf(s, d).select(col("day"),
@@ -5102,7 +5102,7 @@ object TrainingQueries {
     "streaming_kmv_ingest",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_kmv_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_kmv", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val ev = ParityQueries.evDf(s, d).select("event_id")
@@ -5216,7 +5216,7 @@ object TrainingQueries {
     "streaming_asof_enrich",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_asof_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_asof", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val schema = s.read.parquet(s"$d/events.parquet").schema
@@ -5247,7 +5247,7 @@ object TrainingQueries {
     "streaming_lsh_dedup",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_lsh_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_lsh", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val corpus = Tables.documents(s, d).select("doc_id", "text")
@@ -5292,7 +5292,7 @@ object TrainingQueries {
     "streaming_pixel_dedup",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_px_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_px", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val corpus = Multimodal.pixelPngCorpus(Tables.documents(s, d), "doc_id")
@@ -5332,7 +5332,7 @@ object TrainingQueries {
     "streaming_jpeg_dedup",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_jpx_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_jpx", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val corpus = Multimodal.pixelJpegCorpus(Tables.documents(s, d), "doc_id")
@@ -5386,7 +5386,7 @@ object TrainingQueries {
     "streaming_webp_dedup",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_wbp_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_wbp", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val corpus = Multimodal.pixelWebpCorpus(Tables.documents(s, d), "doc_id")
@@ -5417,7 +5417,7 @@ object TrainingQueries {
     "streaming_audio_dedup",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_aw_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_aw", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val corpus = Multimodal.pcmWavCorpus(Tables.documents(s, d), "doc_id")
@@ -5469,7 +5469,7 @@ object TrainingQueries {
     "pipeline_streaming_serve",
     (s, d) => {
       Tables.configure(s)
-      val base = "/root/repo/target/tmp/stream_serve_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val base = Registry.scratch(s, "stream_serve", d)
       val p = new org.apache.hadoop.fs.Path(base)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val docs = Tables.documents(s, d).select("doc_id", "text")

@@ -195,12 +195,11 @@ object Layout {
     * ([[writeZOrdered]] + manifests over BOTH dimensions gives
     * rectangle pruning at the manifest level), [[compact]]ed, or
     * externally landed. Decoupled from the writer so maintenance jobs can
-    * re-stat after compaction without rewriting data. Same commit-last
-    * temp-then-rename as always: a crash leaves the previous manifest (or
-    * none — an unpruned, never wrongly pruned, table).
+    * re-stat after compaction without rewriting data. Written last, by
+    * [[MetaFile.replace]]: a crash leaves the previous manifest (or, on
+    * the first build, none — an unpruned, never wrongly pruned, table).
     */
   def buildZoneMap(spark: SparkSession, path: String, statsCols: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.functions._
     require(statsCols.nonEmpty, "buildZoneMap: need at least one stats column")
     val cols = statsCols.distinct
@@ -220,15 +219,7 @@ object Layout {
       (name +: vals).mkString("\t")
     }
     val header = ("file" +: cols.flatMap(c => Seq(s"min_$c", s"max_$c"))).mkString("\t")
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(root, ZoneMapFile + ".tmp")
-    val mf = new Path(root, ZoneMapFile)
-    val out = fs.create(tmp, true)
-    try out.write((header +: lines.toSeq).mkString("\n").getBytes("UTF-8")) finally out.close()
-    if (fs.exists(mf)) fs.delete(mf, false)
-    if (!fs.rename(tmp, mf))
-      throw new java.io.IOException(s"buildZoneMap: failed to commit $mf")
+    MetaFile.replace(spark, s"$path/$ZoneMapFile", (header +: lines.toSeq).mkString("\n"))
   }
 
   /** The files of a [[writeZoneMapped]] table whose `[min, max]` zone for
@@ -239,13 +230,13 @@ object Layout {
     * like a perf bug at scale).
     */
   def zonePrunedFiles(
-      spark: SparkSession, path: String, statsCol: String, lo: Long, hi: Long): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new Path(root, ZoneMapFile))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val rows = txt.split("\n").toSeq.map(_.split("\t").toSeq)
+      spark: SparkSession, path: String, statsCol: String, lo: Long, hi: Long): Seq[String] =
+    zonePruned(path, MetaFile.read(spark, s"$path/$ZoneMapFile").getOrElse(
+      throw new java.io.FileNotFoundException(s"no zone map at $path")), statsCol, lo, hi)
+
+  private def zonePruned(
+      path: String, zoneMap: String, statsCol: String, lo: Long, hi: Long): Seq[String] = {
+    val rows = zoneMap.split("\n").toSeq.map(_.split("\t").toSeq)
     val header = rows.head
     val (miIdx, maIdx) = (header.indexOf(s"min_$statsCol"), header.indexOf(s"max_$statsCol"))
     require(miIdx >= 0 && maIdx >= 0,
@@ -268,17 +259,13 @@ object Layout {
     */
   def readZonePruned(
       spark: SparkSession, path: String, statsCol: String, lo: Long, hi: Long): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.functions.col
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files =
-      if (!fs.exists(new Path(root, ZoneMapFile))) null // degrade: unpruned
-      else zonePrunedFiles(spark, path, statsCol, lo, hi)
-    val df =
-      if (files == null) spark.read.parquet(path)
-      else if (files.isEmpty) spark.read.parquet(path).limit(0) // schema-bearing empty
-      else spark.read.parquet(files: _*)
+    val df = MetaFile.read(spark, s"$path/$ZoneMapFile")
+      .map(zonePruned(path, _, statsCol, lo, hi)) match {
+      case None => spark.read.parquet(path) // degrade: unpruned
+      case Some(Nil) => spark.read.parquet(path).limit(0) // schema-bearing empty
+      case Some(files) => spark.read.parquet(files: _*)
+    }
     // filter on the raw column when it is already integral, so the residual
     // predicate stays pushable into the parquet scan (a cast would block
     // footer/row-group pushdown and re-read every surviving file fully)

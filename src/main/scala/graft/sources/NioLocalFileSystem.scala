@@ -24,7 +24,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   *    goes to the stock code.
   * Everything else, rename and its `Rename.NONE` / `OVERWRITE` checks
   * included, is the stock code. `GraftExtensions.localFsDefaults` installs
-  * it for `file:` paths.
+  * it for `file:` paths; [[NioRawLocalFs]] is its `FileContext` side.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
 
@@ -51,12 +51,26 @@ object NioRawLocalFileSystem {
 class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 
 /** The `FileContext` side, as `org.apache.hadoop.fs.local.RawLocalFs`
-  * builds it, over [[NioRawLocalFileSystem]].
+  * builds it, over [[NioRawLocalFileSystem]] (or, for a test scheme, over
+  * `raw`). One override: an `OVERWRITE` rename of a file onto an existing
+  * file is one `rename(2)`, which replaces the destination atomically.
+  * Hadoop's generic version deletes the destination first, so a crash
+  * between its two steps would leave no file at all — the window
+  * [[MetaFile.replace]] exists to close.
   */
-class NioRawLocalFs(uri: URI, conf: Configuration)
-    extends DelegateToFileSystem(uri, new NioRawLocalFileSystem, conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
+class NioRawLocalFs(uri: URI, conf: Configuration, raw: RawLocalFileSystem, scheme: String)
+    extends DelegateToFileSystem(uri, raw, conf, scheme, false) {
+
+  def this(uri: URI, conf: Configuration) =
+    this(uri, conf, new NioRawLocalFileSystem, FsConstants.LOCAL_FS_URI.getScheme)
 
   override def getUriDefaultPort: Int = -1 // no default port for file:///
+
+  override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit =
+    if (overwrite && Files.isRegularFile(raw.pathToFile(src).toPath) &&
+        Files.isRegularFile(raw.pathToFile(dst).toPath)) {
+      if (!raw.rename(src, dst)) throw new java.io.IOException(s"rename $src -> $dst failed")
+    } else super.renameInternal(src, dst, overwrite)
 
   @deprecated("as in AbstractFileSystem", "")
   override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults

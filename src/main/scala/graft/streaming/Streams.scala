@@ -1056,46 +1056,33 @@ object Streams {
     */
   private[graft] def readCompactionManifest(
       spark: SparkSession, statePath: String): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(s"$statePath/_compaction.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
+    val p = s"$statePath/_compaction.json"
+    graft.sources.MetaFile.read(spark, p).map { txt =>
       val node =
-        try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+        try new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
         catch {
           case e: Exception => throw new java.io.IOException(
             s"corrupt compaction manifest $p — not valid JSON; restore it from " +
               "the state tree's highest folded batch id or delete the state and " +
               s"re-seed (cause: ${e.getMessage})", e)
-        } finally in.close()
+        }
       val field = node.get("compactedThrough")
       if (field == null || !field.canConvertToLong) throw new java.io.IOException(
         s"corrupt compaction manifest $p — missing/non-integer 'compactedThrough' " +
           s"in: ${node.toString.take(200)}")
-      Some(field.asLong())
+      field.asLong()
     }
   }
 
-  /** Temp-then-rename ([[graft.sources.Layout.buildZoneMap]]'s manifest
-    * discipline): a crash mid-write leaves the previous manifest (or
-    * none), never a truncated JSON that would brick every later batch.
+  /** Written by [[graft.sources.MetaFile.replace]]: a crash mid-write
+    * leaves the previous manifest (or none), never a truncated JSON that
+    * would brick every later batch, and never no manifest after a
+    * compaction (a replay into the folded region would then double-count).
     */
   private def writeCompactionManifest(
-      spark: SparkSession, statePath: String, through: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(s"$statePath/_compaction.json")
-    val tmp = new Path(s"$statePath/_compaction.json.tmp")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"compactedThrough":$through}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(p, false) // rename-over is not portable; single-writer contract
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"writeCompactionManifest: failed to commit $tmp -> $p")
-  }
+      spark: SparkSession, statePath: String, through: Long): Unit =
+    graft.sources.MetaFile.replace(
+      spark, s"$statePath/_compaction.json", s"""{"compactedThrough":$through}""")
 
   /** Streaming exact dedup with BOUNDED state: one state entry per key,
     * evicted once the event-time watermark passes `lateness` behind it —

@@ -180,10 +180,34 @@ class PointerPinSpec extends SparkSpec {
     val compactReads = atEveryPointerRead(() => setup(),
       () => { BucketedSnapshots.compact(spark, path); () }, between)(check)
     assert(compactReads == 2, s"pin + CAS = 2 reads of _CURRENT per compaction, saw $compactReads")
-    // rebucket reads a third time: readSnapshot's retention check on the
-    // pinned version, which does not feed the CAS base
-    atEveryPointerRead(() => setup(),
+    // the rewrite reads the pinned version without a second retention
+    // check of the pointer
+    val rebucketReads = atEveryPointerRead(() => setup(),
       () => { BucketedSnapshots.rebucket(spark, path, "k", 4); () }, between)(check)
+    assert(rebucketReads == 2, s"pin + CAS = 2 reads of _CURRENT per rebucket, saw $rebucketReads")
+  }
+
+  test("BucketedSnapshots.pruneTombstones: pin + CAS = 2 pointer reads; an interleaved commit is never dropped") {
+    val path = fresh("prune")
+    def changes(rows: (Long, Long, String)*) = rows.toDF("k", "seq", "op").withColumn("v", $"op")
+    val reads = atEveryPointerRead(
+      setup = () => {
+        new Path(path).getFileSystem(conf).delete(new Path(path), true)
+        BucketedSnapshots.applyChanges(spark,
+          changes((1L to 8L).map(k => (k, k, if (k <= 4) "D" else "I")): _*), path, "k", 4)
+      },
+      write = () => { BucketedSnapshots.pruneTombstones(spark, path, lowWatermark = 100L); () },
+      between = () => {
+        BucketedSnapshots.applyChanges(spark, changes((30L, 1L, "I")), path, "k", 4); ()
+      }) {
+      conflicted =>
+        assert(keys(BucketedSnapshots.readTable(spark, path)) == Set(5L, 6L, 7L, 8L, 30L),
+          "the intervening commit was dropped")
+        val tombstones = BucketedSnapshots.readCurrent(spark, path)
+          .filter(org.apache.spark.sql.functions.col(graft.operators.Cdc.DeletedMeta)).count()
+        assert(conflicted || tombstones == 0, s"conflicted=$conflicted tombstones=$tombstones")
+    }
+    assert(reads == 2, s"pin + CAS = 2 reads of _CURRENT per prune, saw $reads")
   }
 
   test("BucketedSnapshots.publishBranch: a main commit interleaved at any pointer read aborts the publish") {
